@@ -4,10 +4,12 @@
 def check_calls(calls, expected):
     """Failures among thor call records.
 
-    ``calls`` are the harness's records; ``expected`` maps call name to its
-    expected digest. A call fails when it raised, or when its digest differs
-    from the expected one; a call with no expected digest fails too, so an
-    unchecked result never counts as correct.
+    ``calls`` are the harness's records; ``expected`` maps call name to the
+    ``digest`` and ``schema`` (output columns as ``name:type``) of its oracle
+    result. A call fails when it raised, when its columns differ from the
+    oracle's in name or type, or when its digest differs; a call with no
+    expected output fails too, so an unchecked result never counts as
+    correct.
     """
     failures = []
     for c in calls:
@@ -15,9 +17,13 @@ def check_calls(calls, expected):
         if c["error"]:
             failures.append((c["name"], c["error"]))
         elif want is None:
-            failures.append((c["name"], "no expected digest"))
-        elif c["digest"] != want:
-            failures.append((c["name"], f"digest {c['digest']} != {want}"))
+            failures.append((c["name"], "no expected output"))
+        elif c["schema"] != want["schema"]:
+            failures.append((c["name"],
+                             f"columns {c['schema']} != {want['schema']}"))
+        elif c["digest"] != want["digest"]:
+            failures.append((c["name"],
+                             f"digest {c['digest']} != {want['digest']}"))
     return failures
 
 

@@ -40,12 +40,26 @@ class Result:
 
 
 def zipf_sampler(rng, n, exponent):
-    """Draws ranks 0..n-1 with P(rank k) proportional to 1/(k+1)^exponent."""
+    """Draws ranks 0..n-1 with P(rank k) proportional to 1/(k+1)^exponent.
+
+    The draws are stratified rather than independent: the uniform variates
+    follow the golden-ratio sequence from a seeded start, so every stretch
+    of draws matches the distribution closely. A response cache then sees
+    the same hit ratio in every run, instead of one that swings with
+    sampling noise over a few hundred requests."""
     cdf, total = [], 0.0
     for k in range(n):
         total += 1.0 / (k + 1) ** exponent
         cdf.append(total)
-    return lambda: min(n - 1, bisect.bisect_left(cdf, rng.random() * total))
+    u = [rng.random()]
+
+    def draw():
+        u[0] = (u[0] + _GOLDEN) % 1.0
+        return min(n - 1, bisect.bisect_left(cdf, u[0] * total))
+    return draw
+
+
+_GOLDEN = (5 ** 0.5 - 1) / 2
 
 
 def fixed_rate(rng, rate, start, duration):

@@ -13,7 +13,8 @@ from . import datagen
 
 def run(data_dir, sql_by_name, out_dir, work_dir, threads):
     """Write each oracle result to ``out_dir/<name>.parquet``; returns the
-    names whose oracle could not run (they fall back to pinned digests)."""
+    names whose oracle could not run (their calls then have no expected
+    output and fail)."""
     os.makedirs(out_dir, exist_ok=True)
     con = duckdb.connect()
     con.execute(f"SET temp_directory='{work_dir}/duckdb_tmp'")

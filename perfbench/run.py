@@ -27,22 +27,38 @@ ROOT = os.path.dirname(HERE)
 WORK = os.path.join(HERE, ".work")
 CPUS = len(os.sched_getaffinity(0))
 
-# Registry queries that are fixed-cost-bound at sf0.1 (plan construction,
-# Catalyst, schema inference and job scheduling dominate their wall time,
-# each well under a second), one from each of 10 query modules, plus the
-# spray write (CSV export, catalog import, read back).
+# One registry query from each query module that has fixed-cost-bound
+# queries: among the module's queries that have an oracle with a non-empty
+# result and run fully materialised in under 0.6 s at sf0.1 (warm,
+# local[4]), the one closest to the module's median time. README.md has
+# the measurement. Their time is mostly plan construction, Catalyst,
+# schema inference and job scheduling. Then the writes of the IoQueries
+# family: the spray (CSV export, catalog import, read back) and the CSV,
+# JSON and XML round trips.
 THOR_FIXED = [
-    "q07_choosen", "q30_selfjoin", "q48_grouped_ordered_agg",
-    "q60_normalize", "q96_hash_sample", "q161_blas_vector", "q106_ecl_hash",
-    "q130_parse", "q15_bitwise", "q197_forecast_revenue", "w_spray"]
+    "q09_enth", "q42_dedup_keepn", "q65_count_project",
+    "q84_fingerprint", "q161_blas_vector", "q175_phone_parse",
+    "q135_parse_recursive", "q15_bitwise", "q173_h3_vectors",
+    "q204_bracket_revenue", "q205_asof_join",
+    "w_spray", "w_csv", "w_json", "w_xml"]
+
+# Calls whose definition ends in a global sort: their digest covers row
+# order as well (Harness.digest).
+ORDERED = {
+    "q15_bitwise", "q42_dedup_keepn", "q65_count_project",
+    "q84_fingerprint", "q135_parse_recursive", "q161_blas_vector",
+    "q173_h3_vectors", "q175_phone_parse", "q205_asof_join",
+    "w_spray", "w_csv", "w_json", "w_xml"}
 
 WORKLOADS = ("thor-fixed", "roxie-serve")
 
-# roxie-serve traffic
-NOMINAL_RPS = 5.0
-AGGREGATE_EVERY = 20        # one request in 20 is an uncacheable aggregate
-ZIPF_EXPONENT = 1.0
-PROMOTE_EVERY_S = 2.0
+# roxie-serve traffic; README.md says where each figure comes from
+NOMINAL_RPS = 8.0
+ZIPF_EXPONENT = 0.99        # YCSB's zipfian request distribution
+AGGREGATE_EVERY = 20        # assumed: one request in 20 is an aggregate
+WARM_REQUESTS = 120         # fill the response cache in set-up
+SATURATE_SHARE = 0.25       # of --seconds: the closed loop, then
+READ_SHARE = 0.5            # reads at the nominal rate; then the writes
 SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
 
 END_TO_END = {"setup_s": "s", "op_p50_ms": "ms", "op_tail_ms": "ms",
@@ -160,11 +176,13 @@ def data_dir():
     return path
 
 
-def expected_digests(cp):
-    """Expected digest per thor-fixed call, from the DuckDB oracle's result.
-    Every call has a registry oracle; one that cannot run leaves its call
-    without an expected digest, which counts as a failure."""
-    path = os.path.join(WORK, "expected.json")
+def expected_outputs(cp):
+    """Expected digest and columns per thor-fixed call, from its DuckDB
+    oracle result alone. Every call has a registry oracle; one that cannot
+    run leaves its call without an expected output, which counts as a
+    failure."""
+    key = hashlib.sha256(repr((THOR_FIXED, sorted(ORDERED))).encode()).hexdigest()[:12]
+    path = os.path.join(WORK, f"expected-{key}.json")
     if os.path.exists(path):
         return json.load(open(path))
     names = ",".join(THOR_FIXED)
@@ -172,10 +190,11 @@ def expected_digests(cp):
     run_java(cp, "oracle-sql", 300, calls=names, out=sql_file)
     sqls = json.load(open(sql_file))
     oracle_dir = os.path.join(WORK, "oracle")
+    shutil.rmtree(oracle_dir, ignore_errors=True)
     log(f"running {len(sqls)} DuckDB oracles")
     oracle.run(data_dir(), sqls, oracle_dir, WORK, CPUS)
-    run_java(cp, "digest", 800, data=data_dir(), calls=names,
-             oracles=oracle_dir, out=path)
+    run_java(cp, "digest", 800, calls=names, oracles=oracle_dir,
+             ordered=",".join(sorted(ORDERED)), out=path)
     return json.load(open(path))
 
 
@@ -184,12 +203,13 @@ def expected_digests(cp):
 def run_thor(cp, seed, seconds, trace):
     """One engine process: set-up with an untimed warm-up pass, then whole
     timed passes over the calls for ``seconds``."""
-    expected = expected_digests(cp)
+    expected = expected_outputs(cp)
     calls = list(THOR_FIXED)
     random.Random(seed).shuffle(calls)
     out = os.path.join(WORK, "thor.json")
     run_java(cp, "thor", 170, data=data_dir(), calls=",".join(calls),
-             seconds=seconds, trace=trace, out=out)
+             ordered=",".join(sorted(ORDERED)), seconds=seconds, trace=trace,
+             out=out)
     rep = json.load(open(out))
     timed = [c for c in rep["calls"] if c["pass"] >= 0]
     passes = rep["passes"]
@@ -351,6 +371,11 @@ class Traffic:
             due, f"/query/segment?seg={seg}&nonce={self.nonce}",
             lambda body: self.check_segment(seg, body))
 
+    def schedule(self, start, duration):
+        """Requests due at NOMINAL_RPS over [start, start + duration)."""
+        return [self.request(d) for d in
+                loadgen.fixed_rate(self.rng, NOMINAL_RPS, start, duration)]
+
     def check_lookup(self, key, body):
         rows = loadgen.parse_rows(body)
         want = self.rows[key]
@@ -373,24 +398,24 @@ class Traffic:
 
 
 class Writer(threading.Thread):
-    """Promotes a new index generation every PROMOTE_EVERY_S seconds, from
-    a seeded first time."""
+    """Promotes new index generations back to back, from a seeded time
+    just after ``start`` until ``until`` (seconds after ``t0``)."""
 
-    def __init__(self, server, rng, t0, until):
+    def __init__(self, server, rng, t0, start, until):
         super().__init__(daemon=True)
-        self.server, self.t0 = server, t0
-        first = PROMOTE_EVERY_S * rng.uniform(0.4, 0.6)
-        self.due = [first + i * PROMOTE_EVERY_S for i in
-                    range(int((until - first) // PROMOTE_EVERY_S) + 1)]
+        self.server, self.t0, self.until = server, t0, until
+        self.first = start + rng.uniform(0.0, 0.3)
+        self.tried = 0
         self.acks = []      # (acked_at, generation, total_ms, catalog_ms)
         self.error = None
 
     def run(self):
         try:
-            for due in self.due:
-                wait = due - (time.monotonic() - self.t0)
-                if wait > 0:
-                    time.sleep(wait)
+            wait = self.first - (time.monotonic() - self.t0)
+            if wait > 0:
+                time.sleep(wait)
+            while time.monotonic() - self.t0 < self.until:
+                self.tried += 1
                 g, total, catalog = self.server.ask("promote", "PROMOTED").split()
                 self.acks.append((time.monotonic() - self.t0, int(g),
                                   float(total), float(catalog)))
@@ -403,21 +428,18 @@ def clients(server):
     return pool, (lambda i, path: pool[i].get(path))
 
 
-def open_loop(server, traffic, start, duration, t0):
-    """NOMINAL_RPS fixed-rate traffic from CPUS generator threads."""
-    due = loadgen.fixed_rate(traffic.rng, NOMINAL_RPS, start, duration)
-    reqs = [traffic.request(d) for d in due]
+def open_loop(server, requests, t0):
+    """Send ``requests`` on their schedule from CPUS generator threads."""
     pool, send = clients(server)
     try:
-        return loadgen.run(reqs, send, CPUS, t0)
+        return loadgen.run(requests, send, CPUS, t0)
     finally:
         for c in pool:
             c.close()
 
 
 def run_roxie(cp, seed, seconds, trace):
-    """One server: set-up with a concurrent warm-up, then ``seconds`` of
-    traffic."""
+    """One server, set up once, then ``seconds`` of traffic."""
     data = data_dir()
     rows, segs = customer_truth(data)
     server = Server(cp, data, len(rows))
@@ -427,68 +449,93 @@ def run_roxie(cp, seed, seconds, trace):
         server.close()
     if trace:
         return roxie_layers(part), part["attempted"], part["failed"]
-    summary = stats.summarize([r.latency * 1e3 for r in part["nominal"]])
-    st = part["stats"]
+    summary = stats.summarize([r.latency * 1e3 for r in part["reads"]])
+    hits, misses = part["read_cache"]
     log(f"roxie-serve: p50={summary['p50']:.2f} ms "
         f"p{summary['tail_level']:g}={summary['tail']:.1f} ms "
-        f"(n={summary['n']}) at {NOMINAL_RPS:g}/s; saturated goodput "
-        f"{part['goodput']:.2f}/s; promotes={len(part['promotes'])}; "
-        f"hits/misses={st['cache_hits']}/{st['cache_misses']}; "
-        f"setup_s={server.setup_s}")
+        f"(n={summary['n']}) at {NOMINAL_RPS:g}/s, cache hit ratio "
+        f"{hits / max(1, hits + misses):.2f} ({hits}/{hits + misses}); "
+        f"saturated goodput {part['goodput']:.2f}/s; "
+        f"promotes={len(part['promotes'])}; setup_s={part['setup_s']:.3f}")
     return {
-        "setup_s": server.setup_s,
+        "setup_s": part["setup_s"],
         "op_p50_ms": summary["p50"], "op_tail_ms": summary["tail"],
         "throughput_per_s": part["goodput"],
         "write_ms": stats.median([a[2] for a in part["promotes"]]),
-        "peak_rss_mb": st["peak_rss_mb"],
+        "peak_rss_mb": part["stats"]["peak_rss_mb"],
     }, part["attempted"], part["failed"]
 
 
 def serve(server, seed, seconds, trace, rows, segs):
-    """Four fifths of ``seconds`` at the nominal fixed rate, with the writer
-    promoting, then the rest with CPUS closed-loop clients for the saturated
-    goodput. A traced run splits the nominal phase into an untraced and a
-    traced half instead, then times the engine without HTTP."""
+    """Set-up ends with WARM_REQUESTS of the run's own traffic from CPUS
+    closed-loop clients, which fill the response cache. Then three phases,
+    each a share of ``seconds``:
+
+    - the same closed loop goes on (saturated goodput), and brings the
+      cache to its steady hit ratio;
+    - reads at the nominal rate, with no promote (`op_*`);
+    - the writer promoting back to back, while reads go on at the nominal
+      rate (`write_ms`; every read is checked for stale generations).
+
+    A traced run skips the closed loop, times the first half of the read
+    phase untraced and the second half traced, and then times the engine
+    without HTTP."""
     traffic = Traffic(seed, rows, segs)
+
+    def cache():
+        st = json.loads(server.ask("stats", "STATS"))
+        return st["cache_hits"], st["cache_misses"]
+
+    w0 = time.monotonic()
+    warm = open_loop(server, [traffic.request(0.0)
+                              for _ in range(WARM_REQUESTS)], w0)
+    warm_s = time.monotonic() - w0
+    part = {"setup_s": server.setup_s + warm_s}
+    log(f"set-up: engine {server.setup_s:.1f} s, cache warm-up {warm_s:.1f} s")
     t0 = time.monotonic()
-    nominal_s = seconds * 4 / 5
-    # promotes land in the nominal phase only, so each is timed under the
-    # same load
-    writer = Writer(server, random.Random(seed + 1), t0, nominal_s - 0.5)
-    writer.acks.append((0.0, server.generation, 0.0, 0.0))
-    writer.start()
-    part = {"saturated": []}
-    if trace:
-        part["plain"] = open_loop(server, traffic, 0.0, nominal_s / 2, t0)
-        server.tell("trace on")
-        part["base"] = json.loads(server.ask("stats", "STATS"))
-        part["traced"] = open_loop(server, traffic, nominal_s / 2,
-                                   nominal_s / 2, t0)
-        part["after"] = json.loads(server.ask("stats", "STATS"))
-        part["nominal"] = part["plain"] + part["traced"]
-    else:
-        part["nominal"] = open_loop(server, traffic, 0.0, nominal_s, t0)
+    sat_s = 0.0 if trace else seconds * SATURATE_SHARE
+    saturated = []
+    if not trace:
         pool, send = clients(server)
         try:
-            part["saturated"] = loadgen.saturate(
-                traffic.request, send, CPUS, t0, nominal_s,
-                seconds - nominal_s)
+            saturated = loadgen.saturate(traffic.request, send, CPUS, t0,
+                                         0.0, sat_s)
         finally:
             for c in pool:
                 c.close()
-        part["goodput"] = loadgen.goodput(part["saturated"], nominal_s)
+        part["goodput"] = loadgen.goodput(saturated, 0.0)
+    read_s = seconds * READ_SHARE
+    before = cache()
+    if trace:
+        half = read_s / 2
+        part["plain"] = open_loop(server, traffic.schedule(sat_s, half), t0)
+        server.tell("trace on")
+        part["base"] = json.loads(server.ask("stats", "STATS"))
+        part["traced"] = open_loop(server, traffic.schedule(sat_s + half, half), t0)
+        part["after"] = json.loads(server.ask("stats", "STATS"))
+        part["reads"] = part["plain"] + part["traced"]
+    else:
+        part["reads"] = open_loop(server, traffic.schedule(sat_s, read_s), t0)
+    after = cache()
+    part["read_cache"] = (after[0] - before[0], after[1] - before[1])
+    write_start = sat_s + read_s
+    writer = Writer(server, random.Random(seed + 1), t0, write_start, seconds)
+    writer.start()
+    during = open_loop(server, traffic.schedule(write_start,
+                                                seconds - write_start), t0)
     writer.join()
-    everything = part["nominal"] + part["saturated"]
-    failures = [r for r in everything if r.failure]
-    stale = loadgen.stale_reads([r for r in everything if not r.failure],
-                                [(a[0], a[1]) for a in writer.acks])
+    timed = part["reads"] + saturated + during
+    failures = [r for r in warm + timed if r.failure]
+    live = [(0.0, server.generation)] + [(a[0], a[1]) for a in writer.acks]
+    stale = (loadgen.stale_reads([r for r in warm if not r.failure], live[:1]) +
+             loadgen.stale_reads([r for r in timed if not r.failure], live))
     for r in (failures + stale)[:10]:
         log(f"FAIL {r.request.path}: {r.failure or 'stale generation'}")
     if writer.error:
         log(f"FAIL promote: {writer.error}")
     part["failed"] = len(failures) + len(stale) + (1 if writer.error else 0)
-    part["attempted"] = len(everything) + len(writer.due)
-    part["promotes"] = writer.acks[1:]
+    part["attempted"] = len(warm) + len(timed) + writer.tried
+    part["promotes"] = writer.acks
     part["stats"] = json.loads(server.ask("stats", "STATS"))
     if trace:
         # direct engine calls alternating with sequential uncached HTTP

@@ -1,7 +1,7 @@
 package perfbench
 
 import graft.{SparkEntry, Tables}
-import graft.sources.FileCatalog
+import graft.sources.{FileCatalog, Sources}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -46,7 +46,7 @@ object Calls {
     * root of its own, so the benchmark makes the same public calls under
     * its work directory and checks the read-back against that entry's
     * oracle. (Index build and superfile promote run in the serving
-    * workload's writer.)
+    * workload's writer.) The round trips below are mirrored the same way.
     */
   private def spray(work: String): Call =
     Call("w_spray", "IoQueries", Some("q124_spray"), { (s, dir) =>
@@ -61,8 +61,40 @@ object Calls {
       cat.read("nation_sprayed").orderBy(col("n_nationkey"))
     })
 
+  /** Write-and-read-back round trips through `graft.sources.Sources`, the
+    * same calls as the registry entries named, under the work directory.
+    */
+  private def roundTrip(name: String, work: String): Call = {
+    val out = s"$work/io/$name"
+    def schema(fields: (String, DataType)*) =
+      StructType(fields.map { case (n, t) => StructField(n, t) })
+    name match {
+      case "w_csv" => Call(name, "IoQueries", Some("q110_csv_roundtrip"), { (s, dir) =>
+        Sources.csvWrite(Tables.nation(s, dir), out)
+        Sources.csvRead(s, out, schema("n_nationkey" -> IntegerType,
+          "n_name" -> StringType, "n_regionkey" -> IntegerType))
+          .orderBy(col("n_nationkey"))
+      })
+      case "w_json" => Call(name, "IoQueries", Some("q111_json_roundtrip"), { (s, dir) =>
+        Sources.jsonWrite(Tables.customer(s, dir).filter(col("c_custkey") <= 500)
+          .select(col("c_custkey"), col("c_name"), col("c_acctbal")), out)
+        Sources.jsonRead(s, out, schema("c_custkey" -> LongType,
+          "c_name" -> StringType, "c_acctbal" -> DoubleType))
+          .orderBy(col("c_custkey"))
+      })
+      case "w_xml" => Call(name, "IoQueries", Some("q112_xml_roundtrip"), { (s, dir) =>
+        Sources.xmlWrite(Tables.nation(s, dir)
+          .select(col("n_nationkey"), col("n_name")), out)
+        Sources.xmlRead(s, out, schema("n_nationkey" -> IntegerType,
+          "n_name" -> StringType))
+          .orderBy(col("n_nationkey"))
+      })
+    }
+  }
+
   def resolve(names: Seq[String], work: String): Seq[Call] = names.map {
     case "w_spray" => spray(work)
+    case n @ ("w_csv" | "w_json" | "w_xml") => roundTrip(n, work)
     case n => registry.getOrElse(n,
       throw new IllegalArgumentException(s"unknown call: $n"))
   }

@@ -7,7 +7,6 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction
-import org.apache.spark.sql.functions.col
 
 /** The benchmark's engine process. `run.py` starts one per run and reads
   * what it reports; every statistic is computed there.
@@ -16,8 +15,8 @@ import org.apache.spark.sql.functions.col
   *  - `thor`: untimed warm-up pass, then timed passes over `calls` for
   *    `seconds`; writes every call's timings and result digest to `out`.
   *  - `serve`: see [[Serve]].
-  *  - `digest`: digests of the DuckDB oracle results under `oracles`,
-  *    aligned to each call's own output schema.
+  *  - `digest`: digests and columns of the DuckDB oracle results under
+  *    `oracles`, in the oracle's own schema.
   *  - `oracle-sql`: the registry oracle SQL stating each call's expected
   *    output, keyed by call name.
   */
@@ -57,18 +56,21 @@ object Harness {
     spark
   }
 
-  /** Order-insensitive digest of a frame's complete output: row count and
-    * the wrapping sum of per-row Murmur3 hashes, columns visited in name
-    * order. Runs the planned physical plan (`toRdd`), so every output
+  /** Digest of a frame's complete output: the row count and a hash over
+    * every column of every row (Spark's Murmur3, columns in name order).
+    * Row hashes of an unordered result are summed, so row order does not
+    * matter. Those of an `ordered` result are folded by position, partition
+    * by partition in partition order, so any change of order changes the
+    * digest. Runs the planned physical plan (`toRdd`), so every output
     * column is computed and nothing is pruned.
     */
-  def digest(df: DataFrame): (Long, Long) = {
+  def digest(df: DataFrame, ordered: Boolean): (Long, Long) = {
     val fields = df.schema.fields.zipWithIndex.sortBy(_._1.name)
     val ords = fields.map(_._2)
     val types = fields.map(_._1.dataType)
-    df.queryExecution.toRdd.mapPartitions { rows =>
+    val parts = df.queryExecution.toRdd.mapPartitions { rows =>
       var n = 0L
-      var sum = 0L
+      var acc = 0L
       rows.foreach { r =>
         var h = 42L
         var i = 0
@@ -77,12 +79,33 @@ object Harness {
           h = Murmur3HashFunction.hash(v, types(i), h)
           i += 1
         }
-        sum += h * 0x9E3779B97F4A7C15L
+        acc = if (ordered) acc * Mix + h else acc + h * Mix
         n += 1
       }
-      Iterator((n, sum))
-    }.collect().foldLeft((0L, 0L)) { case ((a, b), (c, d)) => (a + c, b + d) }
+      Iterator((n, acc))
+    }.collect()
+    parts.foldLeft((0L, 0L)) { case ((n, acc), (pn, pAcc)) =>
+      (n + pn, if (ordered) acc * pow(Mix, pn) + pAcc else acc + pAcc)
+    }
   }
+
+  private val Mix = 0x9E3779B97F4A7C15L
+
+  /** `b` to the power `e`, wrapping like the folds above. */
+  private def pow(b: Long, e: Long): Long = {
+    var (r, x, k) = (1L, b, e)
+    while (k > 0) {
+      if ((k & 1) == 1) r *= x
+      x *= x
+      k >>= 1
+    }
+    r
+  }
+
+  /** A frame's output columns as `name:type`, in name order. */
+  def schemaOf(df: DataFrame): String =
+    df.schema.fields.sortBy(_.name).map(f => s"${f.name}:${f.dataType.simpleString}")
+      .mkString(",")
 
   private def hex(d: (Long, Long)): String = f"${d._1}%d:${d._2}%016x"
 
@@ -106,6 +129,7 @@ object Harness {
     val seconds = args("seconds").toDouble
     val traced = args("trace") == "1"
     val cpus = args("cpus").toInt
+    val ordered = orderedCalls(args)
     val records = ArrayBuffer.empty[String]
     val passes = ArrayBuffer.empty[String]
 
@@ -114,15 +138,17 @@ object Harness {
       var build = 0.0
       var nocodegen = 0
       var phases = Map.empty[String, Double]
+      var schema = ""
       val (result, error) = try {
         val df = phase(spark, "build")(c.fn(spark, data))
         build = secs(t0)
-        val d = phase(spark, "exec")(digest(df))
+        val d = phase(spark, "exec")(digest(df, ordered(c.name)))
         if (probe.nonEmpty) {
           nocodegen = Probe.nocodegenOps(df.queryExecution.executedPlan)
           phases = df.queryExecution.tracker.phases.map { case (k, v) =>
             k -> v.durationMs / 1e3 }
         }
+        schema = schemaOf(df)
         (hex(d), "")
       } catch { case e: Exception =>
         ("", s"${e.getClass.getSimpleName}: ${e.getMessage}".take(300))
@@ -133,7 +159,8 @@ object Harness {
         "module" -> Json.str(c.module), "pass" -> pass.toString,
         "traced" -> probe.nonEmpty.toString, "wall_s" -> wall.toString,
         "build_s" -> build.toString,
-        "digest" -> Json.str(result), "error" -> Json.str(error),
+        "digest" -> Json.str(result), "schema" -> Json.str(schema),
+        "error" -> Json.str(error),
         "nocodegen_ops" -> nocodegen.toString) ++
         phases.toSeq.sorted.map { case (k, v) => s"catalyst_$k" -> v.toString })
     }
@@ -181,21 +208,32 @@ object Harness {
     spark.stop()
   }
 
-  /** Expected-output digests: each call's DuckDB oracle result (written by
-    * run.py under `oracles`), cast to the call's own output schema.
+  /** Names of the calls whose output is defined in order (`ordered=a,b`). */
+  private def orderedCalls(args: Map[String, String]): Set[String] =
+    args.get("ordered").toSeq.flatMap(_.split(',')).filter(_.nonEmpty).toSet
+
+  /** Expected outputs: the digest and the columns of each call's DuckDB
+    * oracle result (written by run.py under `oracles`), read in the
+    * oracle's own schema. Nothing here runs the program being measured.
+    * Each oracle result is one small parquet file, read as one partition
+    * in file order. DuckDB writes TIMESTAMP without a zone; it is read as
+    * Spark's `timestamp` in the UTC session zone, which is what the
+    * registry's oracle SQL means by it.
     */
   private def digests(args: Map[String, String]): Unit = {
     val spark = session(args)
-    val out = Calls.resolve(args("calls").split(',').toSeq, args("work")).map { c =>
-      val path = s"${args("oracles")}/${c.name}.parquet"
+    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    val ordered = orderedCalls(args)
+    val out = args("calls").split(',').toSeq.map { name =>
+      val path = s"${args("oracles")}/$name.parquet"
       val entry =
         if (!Files.exists(Paths.get(path))) "null"
         else {
-          val schema = c.fn(spark, args("data")).schema
-          Json.str(hex(digest(spark.read.parquet(path).select(
-            schema.fields.toSeq.map(f => col(f.name).cast(f.dataType).as(f.name)): _*))))
+          val df = spark.read.parquet(path)
+          Json.obj(Seq("digest" -> Json.str(hex(digest(df, ordered(name)))),
+            "schema" -> Json.str(schemaOf(df))))
         }
-      c.name -> entry
+      name -> entry
     }
     write(args("out"), Json.obj(out))
     spark.stop()

@@ -27,7 +27,6 @@ import org.apache.spark.sql.functions._
   */
 object Serve {
   val MaxRows = 100
-  private val WarmRequests = 40
 
   def main(args: Map[String, String], spark: SparkSession): Unit = {
     val cpus = args("cpus").toInt
@@ -81,25 +80,10 @@ object Serve {
     val port = pub.serveBounded(0, MaxRows, cacheTtlMs = 3600000L,
       workers = cpus, maxQueue = 4 * cpus)
 
-    // untimed warm-up of the read, aggregate and promote paths, with the
-    // reads as concurrent as the load's, so the measured requests do not
-    // pay first-use costs (class loading, codegen, first JIT tiers)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(cpus)
-    val warm = (0 until cpus).map { t =>
-      pool.submit(new Runnable {
-        def run(): Unit = {
-          val rng = new scala.util.Random(t)
-          (0 until WarmRequests / cpus).foreach { i =>
-            val q = if (i % 10 == 0) pub.run("segment", Map("seg" -> "BUILDING"))
-              else pub.run("lookup", Map("key" -> rng.nextInt(keys).toString))
-            q.limit(MaxRows).collect()
-          }
-        }
-      })
-    }
+    // untimed warm-up of the promote path; the read paths and the
+    // response cache are warmed over HTTP by run.py's traffic, which also
+    // counts in setup_s
     (0 until 2).foreach(_ => promote())
-    warm.foreach(_.get())
-    pool.shutdown()
 
     val setup = (System.currentTimeMillis() -
       java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime) / 1e3

@@ -127,6 +127,15 @@ class OpenLoopTest(unittest.TestCase):
         self.assertTrue(all(0 <= x < 1000 for x in xs))
         self.assertGreater(xs.count(0), 20 * max(1, xs.count(500)))
 
+    def test_zipf_draws_match_the_distribution_in_short_runs(self):
+        n, a = 15000, 0.99
+        p0 = 1.0 / sum(1.0 / (k + 1) ** a for k in range(n))
+        for seed in range(5):
+            draw = loadgen.zipf_sampler(random.Random(seed), n, a)
+            xs = [draw() for _ in range(200)]
+            # independent draws would give 200 * p0 +- 4.2 (one sd)
+            self.assertLessEqual(abs(xs.count(0) - 200 * p0), 2.0)
+
     def test_stale_reads_after_promote(self):
         mk = lambda sent, gen: loadgen.Result(None, sent=sent, generation=gen)
         promotes = [(0.0, 1), (1.0, 2)]
@@ -136,14 +145,33 @@ class OpenLoopTest(unittest.TestCase):
 
 
 class AccountingTest(unittest.TestCase):
+    SCHEMA = "k:bigint,v:string"
+
+    def call(self, name, digest="", error="", schema=SCHEMA):
+        return {"name": name, "error": error, "digest": digest,
+                "schema": schema}
+
     def test_mismatch_error_and_unchecked_all_fail(self):
-        calls = [{"name": "a", "error": "", "digest": "1:x"},
-                 {"name": "b", "error": "", "digest": "1:y"},
-                 {"name": "c", "error": "Boom", "digest": ""},
-                 {"name": "d", "error": "", "digest": "2:z"}]
-        fails = accounting.check_calls(calls, {"a": "1:x", "b": "1:z", "c": "1:q"})
+        calls = [self.call("a", "1:x"), self.call("b", "1:y"),
+                 self.call("c", error="Boom"), self.call("d", "2:z")]
+        want = lambda d: {"digest": d, "schema": self.SCHEMA}
+        fails = accounting.check_calls(
+            calls, {"a": want("1:x"), "b": want("1:z"), "c": want("1:q")})
         self.assertEqual([f[0] for f in fails], ["b", "c", "d"])
         self.assertEqual(accounting.fail_ratio(len(fails), len(calls)), 0.75)
+
+    def test_columns_must_match_the_oracle(self):
+        # the digest alone would pass: the oracle's columns decide, not the
+        # columns the program happens to produce
+        want = {"a": {"digest": "1:x", "schema": self.SCHEMA}}
+        for schema in ("k:bigint", "k:int,v:string", "K:bigint,v:string",
+                       "k:bigint,v:string,w:int"):
+            fails = accounting.check_calls(
+                [self.call("a", "1:x", schema=schema)], want)
+            self.assertEqual(len(fails), 1, schema)
+            self.assertIn("columns", fails[0][1])
+        self.assertEqual(accounting.check_calls([self.call("a", "1:x")], want),
+                         [])
 
 
 class ContractTest(unittest.TestCase):
