@@ -56,13 +56,18 @@ WORKLOADS = ("thor-fixed", "roxie-serve")
 NOMINAL_RPS = 8.0
 ZIPF_EXPONENT = 0.99        # YCSB's zipfian request distribution
 AGGREGATE_EVERY = 20        # assumed: one request in 20 is an aggregate
-WARM_REQUESTS = 120         # fill the response cache in set-up
-SATURATE_SHARE = 0.25       # of --seconds: the closed loop, then
-READ_SHARE = 0.5            # reads at the nominal rate; then the writes
+WARM_REQUESTS = 120         # in set-up, in batches of 20,
+WARM_PROMOTES = 6           # each followed by a promote
+SATURATE_SHARE = 0.2        # of --seconds: the closed loop, then
+READ_SHARE = 0.4            # reads at the nominal rate; then the writes
+READS_AFTER_PROMOTE_S = 0.25    # reads at the nominal rate after each promote
 SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
 
-END_TO_END = {"setup_s": "s", "op_p50_ms": "ms", "op_tail_ms": "ms",
-              "throughput_per_s": "1/s", "write_ms": "ms",
+# Timings that gate a change are CPU times of the engine process: on a
+# shared host, wall times of the same code swing by a third between runs
+# (README.md). The wall-clock figures are the `client.*` metrics of the
+# traced run, and every run prints them to standard error.
+END_TO_END = {"setup_s": "s", "op_cpu_ms": "ms", "write_cpu_ms": "ms",
               "peak_rss_mb": "MB"}
 MODULES = ["CoreQueries", "JoinQueries", "OrderedQueries", "ShapeQueries",
            "TextQueries", "EmbeddingQueries", "StdlibQueries", "IoQueries",
@@ -76,7 +81,8 @@ PER_LAYER = {
     "sources.input_rows": "count", "sources.keyed_read_p50_ms": "ms",
     "sources.keyed_read_tail_ms": "ms", "sources.promote_s": "s",
     "exec.jobs": "count", "exec.stages": "count", "exec.tasks": "count",
-    "exec.driver_gap_s": "s", "exec.task_cpu_s": "s", "exec.gc_s": "s",
+    "exec.driver_gap_s": "s", "exec.driver_cpu_s": "s",
+    "exec.task_cpu_s": "s", "exec.gc_s": "s",
     "exec.core_util": "ratio", "exec.shuffle_write_bytes": "bytes",
     "exec.shuffle_read_bytes": "bytes", "exec.shuffle_records": "count",
     "exec.spill_bytes": "bytes",
@@ -86,6 +92,8 @@ PER_LAYER = {
     "serve.timeouts": "count", "serve.hit_ratio": "ratio",
     "serve.engine_p50_ms": "ms", "serve.engine_tail_ms": "ms",
     "serve.http_overhead_ms": "ms", "loadgen.late_tail_ms": "ms",
+    "client.op_p50_ms": "ms", "client.op_tail_ms": "ms",
+    "client.throughput_per_s": "1/s", "client.write_ms": "ms",
     "trace.overhead_ms": "ms",
 }
 
@@ -201,13 +209,12 @@ def expected_outputs(cp):
 # ---- thor workloads --------------------------------------------------------
 
 def run_thor(cp, seed, seconds, trace):
-    """One engine process: set-up with an untimed warm-up pass, then whole
+    """One engine process: set-up with untimed warm-up passes, then whole
     timed passes over the calls for ``seconds``."""
     expected = expected_outputs(cp)
-    calls = list(THOR_FIXED)
-    random.Random(seed).shuffle(calls)
     out = os.path.join(WORK, "thor.json")
-    run_java(cp, "thor", 170, data=data_dir(), calls=",".join(calls),
+    run_java(cp, "thor", 170, data=data_dir(), calls=",".join(THOR_FIXED),
+             seed=seed,
              ordered=",".join(sorted(ORDERED)), seconds=seconds, trace=trace,
              out=out)
     rep = json.load(open(out))
@@ -216,23 +223,51 @@ def run_thor(cp, seed, seconds, trace):
     failures = accounting.check_calls(rep["calls"], expected)
     for name, why in failures[:10]:
         log(f"FAIL {name}: {why}")
+    plain = [p["pass"] for p in passes if not p["traced"]]
+    wall = thor_wall([c for c in timed if c["pass"] in plain],
+                     [p for p in passes if not p["traced"]])
+    def cpu_per_call(keep):
+        """CPU time per call of the calls ``keep`` selects: a pass's CPU
+        time over its number of such calls, median over the passes."""
+        def mean(p):
+            cs = [c["cpu_s"] for c in timed if c["pass"] == p["pass"] and keep(c)]
+            return 1e3 * sum(cs) / len(cs)
+        return stats.median([mean(p) for p in passes])
+
+    op_cpu = cpu_per_call(lambda c: True)
+    log("thor-fixed: per pass, cpu/gc/jit s: " + "; ".join(
+        "%.2f/%.2f/%.2f" % tuple(sum(c[k] for c in timed if c["pass"] == p["pass"])
+                                 for k in ("cpu_s", "gc_cpu_s", "jit_s"))
+        for p in passes))
+    log(f"thor-fixed: wall pass_s={len(THOR_FIXED) / wall['client.throughput_per_s']:.3f} "
+        f"(n={len(plain)}); call p50={wall['client.op_p50_ms']:.1f} ms "
+        f"{wall['tail']}={wall['client.op_tail_ms']:.1f} ms; "
+        f"cpu per call {op_cpu:.1f} ms (n={len(passes)} passes); "
+        f"setup_s={rep['setup_s']}")
     if trace:
         metrics = thor_layers(rep["cpus"], timed, passes)
+        metrics.update({k: v for k, v in wall.items() if k in PER_LAYER})
     else:
-        summary = stats.summarize([c["wall_s"] * 1e3 for c in timed])
-        pass_s = stats.median([p["wall_s"] for p in passes])
-        writes = [c["wall_s"] * 1e3 for c in timed if c["name"].startswith("w_")]
         metrics = {
             "setup_s": rep["setup_s"],
-            "op_p50_ms": summary["p50"], "op_tail_ms": summary["tail"],
-            "throughput_per_s": len(calls) / pass_s,
-            "write_ms": stats.median(writes),
+            "op_cpu_ms": op_cpu,
+            "write_cpu_ms": cpu_per_call(lambda c: c["name"].startswith("w_")),
             "peak_rss_mb": rep["peak_rss_mb"]}
-        log(f"thor-fixed: pass_s={pass_s:.3f} (n={len(passes)}); "
-            f"call p50={summary['p50']:.1f} ms "
-            f"p{summary['tail_level']:g}={summary['tail']:.1f} ms "
-            f"(n={summary['n']}); setup_s={rep['setup_s']}")
     return metrics, len(rep["calls"]), len(failures)
+
+
+def thor_wall(calls, passes):
+    """Wall-clock figures of untraced passes: what a batch user waits."""
+    summary = stats.summarize([c["wall_s"] * 1e3 for c in calls])
+    return {
+        "client.op_p50_ms": summary["p50"],
+        "client.op_tail_ms": summary["tail"],
+        "tail": f"p{summary['tail_level']:g} (n={summary['n']})",
+        "client.throughput_per_s":
+            len(THOR_FIXED) / stats.median([p["wall_s"] for p in passes]),
+        "client.write_ms": stats.median(
+            [c["wall_s"] * 1e3 for c in calls if c["name"].startswith("w_")]),
+    }
 
 
 def thor_layers(cpus, timed, passes):
@@ -258,6 +293,8 @@ def thor_layers(cpus, timed, passes):
         "exec.stages": per_pass(lambda p: p["stages"]),
         "exec.tasks": per_pass(lambda p: p["tasks"]),
         "exec.driver_gap_s": per_pass(lambda p: p["driver_gap_s"]),
+        "exec.driver_cpu_s": per_pass(
+            lambda p: sum(c["driver_cpu_s"] for c in calls_of(p))),
         "exec.task_cpu_s": per_pass(lambda p: p["task_cpu_ns"] / 1e9),
         "exec.gc_s": per_pass(lambda p: p["gc_ms"] / 1e3),
         "exec.core_util": per_pass(
@@ -317,10 +354,10 @@ class Server:
         with self.lock:
             self.proc.stdin.write(command + "\n")
             self.proc.stdin.flush()
-            line = self.proc.stdout.readline()
-        if not line.startswith(tag + " "):
+            line = self.proc.stdout.readline().rstrip("\n")
+        if line != tag and not line.startswith(tag + " "):
             raise RuntimeError(f"serve harness: {command!r} -> {line!r}")
-        return line.split(" ", 1)[1]
+        return line[len(tag) + 1:]
 
     def close(self):
         try:
@@ -397,32 +434,6 @@ class Traffic:
             f"segment {seg}: mixed generations {gens}", None)
 
 
-class Writer(threading.Thread):
-    """Promotes new index generations back to back, from a seeded time
-    just after ``start`` until ``until`` (seconds after ``t0``)."""
-
-    def __init__(self, server, rng, t0, start, until):
-        super().__init__(daemon=True)
-        self.server, self.t0, self.until = server, t0, until
-        self.first = start + rng.uniform(0.0, 0.3)
-        self.tried = 0
-        self.acks = []      # (acked_at, generation, total_ms, catalog_ms)
-        self.error = None
-
-    def run(self):
-        try:
-            wait = self.first - (time.monotonic() - self.t0)
-            if wait > 0:
-                time.sleep(wait)
-            while time.monotonic() - self.t0 < self.until:
-                self.tried += 1
-                g, total, catalog = self.server.ask("promote", "PROMOTED").split()
-                self.acks.append((time.monotonic() - self.t0, int(g),
-                                  float(total), float(catalog)))
-        except Exception as e:  # reported as a failed operation
-            self.error = e
-
-
 def clients(server):
     pool = [loadgen.Client(server.port) for _ in range(CPUS)]
     return pool, (lambda i, path: pool[i].get(path))
@@ -447,96 +458,157 @@ def run_roxie(cp, seed, seconds, trace):
         part = serve(server, seed, seconds, trace, rows, segs)
     finally:
         server.close()
-    if trace:
-        return roxie_layers(part), part["attempted"], part["failed"]
-    summary = stats.summarize([r.latency * 1e3 for r in part["reads"]])
+    wall = roxie_wall(part)
     hits, misses = part["read_cache"]
-    log(f"roxie-serve: p50={summary['p50']:.2f} ms "
-        f"p{summary['tail_level']:g}={summary['tail']:.1f} ms "
-        f"(n={summary['n']}) at {NOMINAL_RPS:g}/s, cache hit ratio "
+    log(f"roxie-serve: wall p50={wall['client.op_p50_ms']:.2f} ms "
+        f"{wall['tail']}={wall['client.op_tail_ms']:.1f} ms at "
+        f"{NOMINAL_RPS:g}/s, cache hit ratio "
         f"{hits / max(1, hits + misses):.2f} ({hits}/{hits + misses}); "
-        f"saturated goodput {part['goodput']:.2f}/s; "
-        f"promotes={len(part['promotes'])}; setup_s={part['setup_s']:.3f}")
+        f"saturated goodput {wall['client.throughput_per_s']:.2f}/s; "
+        f"cpu {part['op_cpu_ms']:.1f} ms/request over {part['cpu_requests']} "
+        f"({part['cpu_hits']} hits) "
+        f"[phase 1 {part['p1_cpu']:.1f}, phase 2 {part['p2_cpu']:.1f}] "
+        f"(GC {part['gc_ms']:.1f} ms of it; JIT compiler {part['jit_ms']:.1f} ms more); "
+        f"promotes={len(part['promotes'])}, wall {wall['client.write_ms']:.0f} ms; "
+        f"setup_s={part['setup_s']:.3f}")
+    if trace:
+        metrics = roxie_layers(part)
+        metrics.update({k: v for k, v in wall.items() if k in PER_LAYER})
+        return metrics, part["attempted"], part["failed"]
     return {
         "setup_s": part["setup_s"],
-        "op_p50_ms": summary["p50"], "op_tail_ms": summary["tail"],
-        "throughput_per_s": part["goodput"],
-        "write_ms": stats.median([a[2] for a in part["promotes"]]),
+        "op_cpu_ms": part["op_cpu_ms"],
+        "write_cpu_ms": stats.median([a[4] for a in part["promotes"]]),
         "peak_rss_mb": part["stats"]["peak_rss_mb"],
     }, part["attempted"], part["failed"]
 
 
+def roxie_wall(part):
+    """Wall-clock figures: what a client waits at the nominal rate (the
+    untraced reads), saturated goodput, and the promote's own time."""
+    summary = stats.summarize([r.latency * 1e3 for r in part["plain"]])
+    return {
+        "client.op_p50_ms": summary["p50"],
+        "client.op_tail_ms": summary["tail"],
+        "tail": f"p{summary['tail_level']:g} (n={summary['n']})",
+        "client.throughput_per_s": part["goodput"],
+        "client.write_ms": stats.median([a[2] for a in part["promotes"]]),
+    }
+
+
 def serve(server, seed, seconds, trace, rows, segs):
     """Set-up ends with WARM_REQUESTS of the run's own traffic from CPUS
-    closed-loop clients, which fill the response cache. Then three phases,
-    each a share of ``seconds``:
+    closed-loop clients, in WARM_PROMOTES batches with a promote after
+    each, so reads and promotes have both run when timing starts. Timing
+    starts right after a promote, with the response cache empty, as after
+    every promote. Then three phases, each a share of ``seconds``:
 
-    - the same closed loop goes on (saturated goodput), and brings the
-      cache to its steady hit ratio;
-    - reads at the nominal rate, with no promote (`op_*`);
-    - the writer promoting back to back, while reads go on at the nominal
-      rate (`write_ms`; every read is checked for stale generations).
+    - the same closed loop goes on (saturated goodput), and starts to
+      fill the cache;
+    - reads at the nominal rate, with no promote (latencies);
+    - promote cycles: a promote with no request in flight, so the CPU time
+      the server spends in it is the promote's own, then
+      READS_AFTER_PROMOTE_S of reads at the nominal rate, each of which
+      must see the new generation.
 
-    A traced run skips the closed loop, times the first half of the read
-    phase untraced and the second half traced, and then times the engine
-    without HTTP."""
+    `op_cpu_ms` is the server's CPU time over the first two phases per
+    request answered. A traced run times the second half of the read phase
+    traced, and then times the engine without HTTP."""
     traffic = Traffic(seed, rows, segs)
 
-    def cache():
-        st = json.loads(server.ask("stats", "STATS"))
-        return st["cache_hits"], st["cache_misses"]
+    def stats_now():
+        return json.loads(server.ask("stats", "STATS"))
 
-    w0 = time.monotonic()
-    warm = open_loop(server, [traffic.request(0.0)
-                              for _ in range(WARM_REQUESTS)], w0)
-    warm_s = time.monotonic() - w0
-    part = {"setup_s": server.setup_s + warm_s}
-    log(f"set-up: engine {server.setup_s:.1f} s, cache warm-up {warm_s:.1f} s")
+    # every time below is in seconds after t0, set-up included
     t0 = time.monotonic()
-    sat_s = 0.0 if trace else seconds * SATURATE_SHARE
-    saturated = []
-    if not trace:
-        pool, send = clients(server)
+    acks, tried, promote_error = [], 0, None
+
+    def promote():
+        """One promote; its ack (time, generation, wall ms, catalog ms,
+        CPU ms, GC ms), or None when it failed."""
+        nonlocal tried, promote_error
+        tried += 1
         try:
-            saturated = loadgen.saturate(traffic.request, send, CPUS, t0,
-                                         0.0, sat_s)
-        finally:
-            for c in pool:
-                c.close()
-        part["goodput"] = loadgen.goodput(saturated, 0.0)
+            g, total, catalog, cpu, gc = server.ask("promote", "PROMOTED").split()
+        except Exception as e:  # reported as a failed operation
+            promote_error = e
+            return None
+        acks.append((time.monotonic() - t0, int(g), float(total),
+                     float(catalog), float(cpu), float(gc)))
+        return acks[-1]
+
+    def batch(n):
+        now = time.monotonic() - t0
+        return open_loop(server, [traffic.request(now) for _ in range(n)], t0)
+
+    warm = []
+    for _ in range(WARM_PROMOTES):
+        warm += batch(WARM_REQUESTS // WARM_PROMOTES)
+        promote()
+    warm_s = time.monotonic() - t0
+    part = {"setup_s": server.setup_s + warm_s}
+    log(f"set-up: engine {server.setup_s:.1f} s, warm-up {warm_s:.1f} s")
+    server.ask("mark", "MARKED")
+    first = stats_now()
+    t0 += warm_s
+    acks[:] = [(a[0] - warm_s,) + a[1:] for a in acks]
+    for r in warm:
+        r.sent -= warm_s
+        r.done -= warm_s
+    sat_s = seconds * SATURATE_SHARE
+    pool, send = clients(server)
+    try:
+        saturated = loadgen.saturate(traffic.request, send, CPUS, t0, 0.0, sat_s)
+    finally:
+        for c in pool:
+            c.close()
+    part["goodput"] = loadgen.goodput(saturated, 0.0)
     read_s = seconds * READ_SHARE
-    before = cache()
+    before = stats_now()
     if trace:
         half = read_s / 2
         part["plain"] = open_loop(server, traffic.schedule(sat_s, half), t0)
         server.tell("trace on")
-        part["base"] = json.loads(server.ask("stats", "STATS"))
+        part["base"] = stats_now()
         part["traced"] = open_loop(server, traffic.schedule(sat_s + half, half), t0)
-        part["after"] = json.loads(server.ask("stats", "STATS"))
+        part["after"] = stats_now()
         part["reads"] = part["plain"] + part["traced"]
     else:
-        part["reads"] = open_loop(server, traffic.schedule(sat_s, read_s), t0)
-    after = cache()
-    part["read_cache"] = (after[0] - before[0], after[1] - before[1])
-    write_start = sat_s + read_s
-    writer = Writer(server, random.Random(seed + 1), t0, write_start, seconds)
-    writer.start()
-    during = open_loop(server, traffic.schedule(write_start,
-                                                seconds - write_start), t0)
-    writer.join()
+        part["reads"] = part["plain"] = open_loop(
+            server, traffic.schedule(sat_s, read_s), t0)
+    after = stats_now()
+    part["read_cache"] = (after["cache_hits"] - before["cache_hits"],
+                          after["cache_misses"] - before["cache_misses"])
+    part["cpu_requests"] = len(saturated) + len(part["reads"])
+    part["op_cpu_ms"] = after["cpu_ns"] / 1e6 / part["cpu_requests"]
+    part["jit_ms"] = after["jit_ns"] / 1e6 / part["cpu_requests"]
+    part["gc_ms"] = after["gc_ns"] / 1e6 / part["cpu_requests"]
+    part["cpu_hits"] = after["cache_hits"] - first["cache_hits"]
+    part["p1_cpu"] = before["cpu_ns"] / 1e6 / len(saturated)
+    part["p2_cpu"] = (after["cpu_ns"] - before["cpu_ns"]) / 1e6 / len(part["reads"])
+    during, warm_acks = [], len(acks)
+    while not promote_error and (len(acks) == warm_acks or
+                                 time.monotonic() - t0 < seconds):
+        ack = promote()
+        if ack:
+            during += open_loop(
+                server, traffic.schedule(ack[0], READS_AFTER_PROMOTE_S), t0)
+    promotes = acks[warm_acks:]
+    log("promotes: cpu " + " ".join(f"{a[4]:.0f}" for a in promotes) +
+        " ms; gc " + " ".join(f"{a[5]:.0f}" for a in promotes) +
+        " ms; wall " + " ".join(f"{a[2]:.0f}" for a in promotes) + " ms")
     timed = part["reads"] + saturated + during
     failures = [r for r in warm + timed if r.failure]
-    live = [(0.0, server.generation)] + [(a[0], a[1]) for a in writer.acks]
-    stale = (loadgen.stale_reads([r for r in warm if not r.failure], live[:1]) +
-             loadgen.stale_reads([r for r in timed if not r.failure], live))
+    live = [(-warm_s, server.generation)] + [(a[0], a[1]) for a in acks]
+    stale = loadgen.stale_reads([r for r in warm + timed if not r.failure], live)
     for r in (failures + stale)[:10]:
         log(f"FAIL {r.request.path}: {r.failure or 'stale generation'}")
-    if writer.error:
-        log(f"FAIL promote: {writer.error}")
-    part["failed"] = len(failures) + len(stale) + (1 if writer.error else 0)
-    part["attempted"] = len(warm) + len(timed) + writer.tried
-    part["promotes"] = writer.acks
-    part["stats"] = json.loads(server.ask("stats", "STATS"))
+    if promote_error:
+        log(f"FAIL promote: {promote_error}")
+    part["failed"] = len(failures) + len(stale) + (1 if promote_error else 0)
+    part["attempted"] = len(warm) + len(timed) + tried
+    part["promotes"] = promotes
+    part["stats"] = stats_now()
     if trace:
         # direct engine calls alternating with sequential uncached HTTP
         # lookups (a nonce defeats the cache), so both see the same state

@@ -12,8 +12,9 @@ import org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction
   * what it reports; every statistic is computed there.
   *
   * Modes (arguments are `key=value`):
-  *  - `thor`: untimed warm-up pass, then timed passes over `calls` for
-  *    `seconds`; writes every call's timings and result digest to `out`.
+  *  - `thor`: untimed warm-up passes, then timed passes over `calls` for
+  *    `seconds`; writes every call's wall and CPU times and result digest
+  *    to `out`.
   *  - `serve`: see [[Serve]].
   *  - `digest`: digests and columns of the DuckDB oracle results under
   *    `oracles`, in the oracle's own schema.
@@ -21,7 +22,8 @@ import org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction
   *    output, keyed by call name.
   */
 object Harness {
-  private val MinPasses = 4
+  private val MinPasses = 3
+  private val WarmPasses = 3
   private val jvmStartMs =
     java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime
 
@@ -116,6 +118,53 @@ object Harness {
 
   private def secs(fromNs: Long): Double = (System.nanoTime() - fromNs) / 1e9
 
+  private val threads = java.lang.management.ManagementFactory.getThreadMXBean
+
+  /** CPU time each thread of this process has run so far, in ns, keyed
+    * by thread id, from `/proc/self/task/<tid>/schedstat`. The scheduler
+    * counts only time a thread ran: time the host gives to other guests
+    * (steal) and time spent waiting for a core are not in it, so it reads
+    * the same on a quiet and on a busy shared host.
+    */
+  def cpuSnapshot(): Map[String, Long] = {
+    val tids = Option(new java.io.File("/proc/self/task").list()).getOrElse(Array.empty)
+    tids.flatMap { tid =>
+      try {
+        val stat = new String(Files.readAllBytes(
+          Paths.get(s"/proc/self/task/$tid/schedstat")), UTF_8)
+        Some(tid -> stat.substring(0, stat.indexOf(' ')).toLong)
+      } catch { case _: java.io.IOException => None } // the thread has ended
+    }.toMap
+  }
+
+  /** CPU time since `from` (a [[cpuSnapshot]]), in ns, by kind of thread.
+    * A thread that started since counts from 0; one that ended since drops
+    * out, with the time it ran in between.
+    */
+  def cpuSince(from: Map[String, Long]): CpuTime = {
+    var engine, gc, jit = 0L
+    cpuSnapshot().foreach { case (tid, ns) =>
+      val d = ns - from.getOrElse(tid, 0L)
+      if (d > 0) kindOf(tid) match {
+        case Jit => jit += d
+        case Gc => gc += d
+        case _ => engine += d
+      }
+    }
+    CpuTime(engine, gc, jit)
+  }
+
+  private val Jit = "jit"
+  private val Gc = "gc"
+  private val kinds = new java.util.concurrent.ConcurrentHashMap[String, String]
+  private def kindOf(tid: String): String = kinds.computeIfAbsent(tid, { t =>
+    val name = new String(Files.readAllBytes(
+      Paths.get(s"/proc/self/task/$t/comm")), UTF_8).trim
+    if (name.matches("C\\d Compiler.*")) Jit
+    else if (name.startsWith("GC Thread") || name.startsWith("G1 ")) Gc
+    else "engine"
+  })
+
   /** Peak resident set size of this process in MB (Linux VmHWM). */
   def peakRssMb: Double =
     scala.io.Source.fromFile("/proc/self/status").getLines()
@@ -134,6 +183,8 @@ object Harness {
     val passes = ArrayBuffer.empty[String]
 
     def runCall(c: Call, pass: Int, probe: Option[Probe]): Unit = {
+      val cpu0 = cpuSnapshot()
+      val thread0 = threads.getCurrentThreadCpuTime
       val t0 = System.nanoTime()
       var build = 0.0
       var nocodegen = 0
@@ -154,10 +205,17 @@ object Harness {
         ("", s"${e.getClass.getSimpleName}: ${e.getMessage}".take(300))
       }
       val wall = secs(t0)
+      val used = cpuSince(cpu0)
+      val cpu = used.counted / 1e9
+      val jit = used.jit / 1e9
+      val gc = used.gc / 1e9
+      val driverCpu = (threads.getCurrentThreadCpuTime - thread0) / 1e9
       System.err.println(f"[perfbench] ${c.name} pass=$pass wall=$wall%.3f s $error")
       records += Json.obj(Seq("name" -> Json.str(c.name),
         "module" -> Json.str(c.module), "pass" -> pass.toString,
         "traced" -> probe.nonEmpty.toString, "wall_s" -> wall.toString,
+        "cpu_s" -> cpu.toString, "jit_s" -> jit.toString,
+        "gc_cpu_s" -> gc.toString, "driver_cpu_s" -> driverCpu.toString,
         "build_s" -> build.toString,
         "digest" -> Json.str(result), "schema" -> Json.str(schema),
         "error" -> Json.str(error),
@@ -165,9 +223,17 @@ object Harness {
         phases.toSeq.sorted.map { case (k, v) => s"catalyst_$k" -> v.toString })
     }
 
-    // untimed warm-up: JIT, codegen caches and file listings settle here,
-    // and it counts in setup_s
-    calls.foreach(runCall(_, -1, None))
+    // Untimed warm-up passes: JIT, codegen caches and file listings settle
+    // here, and they count in setup_s. They run in the listed order for
+    // every seed: the order code first runs in shapes the JIT's profiles,
+    // and with it the speed of the whole run.
+    (1 to WarmPasses).foreach(w => calls.foreach(runCall(_, -w, None)))
+    // Every timed pass runs the calls in an order of its own, drawn from
+    // the seed, so no one order (and what each write leaves behind for the
+    // next call) holds for a whole run.
+    val seed = args("seed").toLong
+    def order(pass: Int): Seq[Call] =
+      new scala.util.Random(seed * 1000003L + pass).shuffle(calls)
     val setup = (System.currentTimeMillis() - jvmStartMs) / 1e3
     val start = System.nanoTime()
     var pass = 0
@@ -182,7 +248,7 @@ object Harness {
       val p0 = System.nanoTime()
       val w0 = System.currentTimeMillis()
       var wall = 0.0
-      calls.foreach { c =>
+      order(pass).foreach { c =>
         val c0 = System.nanoTime()
         runCall(c, pass, probe)
         wall += secs(c0)
@@ -241,6 +307,15 @@ object Harness {
 
   def write(path: String, text: String): Unit =
     Files.write(Paths.get(path), text.getBytes(UTF_8))
+}
+
+/** CPU time of a process's threads over some interval, in ns: the
+  * engine's own threads, the garbage collector's, and the JIT compiler's.
+  * `counted` is what the benchmark reports as CPU time: all but the JIT
+  * compiler's, whose work is warm-up.
+  */
+final case class CpuTime(engine: Long, gc: Long, jit: Long) {
+  def counted: Long = engine + gc
 }
 
 /** Minimal JSON rendering for the flat reports above. */

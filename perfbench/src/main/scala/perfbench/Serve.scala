@@ -21,12 +21,17 @@ import org.apache.spark.sql.functions._
   *
   * After set-up it prints `READY <port> <generation> <setup_s>` and then
   * answers commands on stdin, one per line:
-  * `promote` → `PROMOTED <generation> <total_ms> <catalog_ms>`,
+  * `promote` → `PROMOTED <generation> <total_ms> <catalog_ms> <cpu_ms> <gc_ms>`
+  * (`cpu_ms`: CPU time of the process, JIT compiler aside, during the
+  * promote, of which `gc_ms` the garbage collector's),
   * `trace on|off`, `direct <n> <seed>` → `DIRECT {json}`,
-  * `stats` → `STATS {json}`, `quit`.
+  * `mark` → `MARKED` (starts the CPU clock of `stats`),
+  * `stats` → `STATS {json}` (`cpu_ns`, `gc_ns`, `jit_ns`: CPU time since
+  * `mark`, as in `promote`, and the JIT compiler's), `quit`.
   */
 object Serve {
   val MaxRows = 100
+  private val WarmPromotes = 2
 
   def main(args: Map[String, String], spark: SparkSession): Unit = {
     val cpus = args("cpus").toInt
@@ -83,20 +88,25 @@ object Serve {
     // untimed warm-up of the promote path; the read paths and the
     // response cache are warmed over HTTP by run.py's traffic, which also
     // counts in setup_s
-    (0 until 2).foreach(_ => promote())
+    (0 until WarmPromotes).foreach(_ => promote())
 
     val setup = (System.currentTimeMillis() -
       java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime) / 1e3
     println(s"READY $port $gen $setup")
     var probe: Option[Probe] = None
+    var mark = Harness.cpuSnapshot()
     val in = new java.io.BufferedReader(new java.io.InputStreamReader(System.in))
     var line = in.readLine()
     while (line != null && line != "quit") {
       line.split(" ").toList match {
         case "promote" :: Nil =>
+          val cpu0 = Harness.cpuSnapshot()
           val t0 = System.nanoTime()
           promote()
-          println(s"PROMOTED $gen ${(System.nanoTime() - t0) / 1e6} $catalogMs")
+          val wall = (System.nanoTime() - t0) / 1e6
+          val used = Harness.cpuSince(cpu0)
+          val cpu = used.counted / 1e6
+          println(s"PROMOTED $gen $wall $catalogMs $cpu ${used.gc / 1e6}")
         case "trace" :: "on" :: Nil =>
           val p = new Probe
           spark.sparkContext.addSparkListener(p)
@@ -105,7 +115,11 @@ object Serve {
           probe.foreach { p => p.settle(); spark.sparkContext.removeSparkListener(p) }
         case "direct" :: n :: seed :: Nil =>
           println("DIRECT " + direct(spark, pub, n.toInt, seed.toLong, keys, livePath))
+        case "mark" :: Nil =>
+          mark = Harness.cpuSnapshot()
+          println("MARKED")
         case "stats" :: Nil =>
+          val cpu = Harness.cpuSince(mark)
           val (hits, misses) = pub.cacheStats
           val layer = probe.map(_.snapshot).getOrElse(Map.empty)
           println("STATS " + Json.obj(Seq(
@@ -113,7 +127,9 @@ object Serve {
             "collapsed" -> pub.collapsedStats.toString,
             "shed" -> pub.shedStats.toString,
             "timeouts" -> pub.timeoutStats.toString,
-            "peak_rss_mb" -> Harness.peakRssMb.toString) ++
+            "peak_rss_mb" -> Harness.peakRssMb.toString,
+            "cpu_ns" -> cpu.counted.toString, "gc_ns" -> cpu.gc.toString,
+            "jit_ns" -> cpu.jit.toString) ++
             layer.toSeq.sorted.map { case (k, v) => k -> v.toString }))
         case other =>
           println(s"ERROR unknown command: ${other.mkString(" ")}")
