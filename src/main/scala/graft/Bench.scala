@@ -102,27 +102,6 @@ object Bench {
       })
   }
 
-  private def newSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-      // a long-lived session accumulates status-listener state across 80+
-      // queries; keep retention minimal so allocation-heavy queries late in
-      // the run don't pay growing GC costs
-      .config("spark.sql.ui.retainedExecutions", "2")
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.ui.retainedTasks", "2000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** Times one query `repeat` times → (name, min, median, firstError).
     * A crashed query must surface as an ERROR cell, never as a fast time
     * (r15 verdict #3: swallowing Throwable let a mid-sweep crash read as
@@ -257,7 +236,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Session.cpus
     // repetitions per query (arg 0 or SPARK_GRAFT_REPEAT, default 2): the
     // VM shows multi-minute noisy-neighbor windows that made committed
     // sweeps read 1.2× apart on identical code (r11 verdict #3); per-query
@@ -265,7 +244,7 @@ object Bench {
     // analysis used by hand — now emitted in the artifact itself.
     val repeat = args.headOption.orElse(sys.env.get("SPARK_GRAFT_REPEAT"))
       .map(_.toInt).getOrElse(2).max(1)
-    val spark = newSession(cpus)
+    val spark = Session.bench(cpus)
 
     // window-probe mode: run ONLY the calibration basket (one untimed JIT
     // pass + N timed) and print its JSON — tools/bench_sweep.sh gates sweep
@@ -349,7 +328,7 @@ object Bench {
     // queries), so the final printed line is a <1.5 KB object with the
     // headline totals that a tail parser can recover whole. The full
     // per-query record is the line above plus BENCH_LAST.json below.
-    println(renderSummaryLine(results, repeat, sfDir, cpus, calibAll))
+    println(renderSummaryLine(results, repeat, sfDir, cpus.toString, calibAll))
     // ALSO persist the full record: the driver's BENCH_r*.json tail
     // truncates at 2000 chars (r12 verdict "what's wrong" #4), so the
     // committed file — not the driver's clipped capture — is the

@@ -84,6 +84,7 @@ object DataPatterns {
   }
 
   /** Profile a DataFrame; returns one row per scalar attribute.
+    * Assumes `df` is deterministic: it is scanned several times.
     *
     * @param lcbLimit       emit cardinality_breakdown when cardinality <= this
     * @param maxPatterns    popular/rare pattern list length

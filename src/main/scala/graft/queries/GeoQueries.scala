@@ -51,7 +51,7 @@ object GeoQueries {
     lower(lpad(hex(cell), 16, "0"))
 
   /** q174's pinned summary — regenerate with
-    * `graft.tools.QueryProbe q174_h3_rollup` after any intended engine
+    * `graft.tools.Probe time q174_h3_rollup` after any intended engine
     * change: (n_rows, n_cells4, n_cells2, max_cell2, distinct parents
     * check).
     */

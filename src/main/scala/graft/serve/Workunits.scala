@@ -2,7 +2,7 @@ package graft.serve
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
 /** workunitservices surface (ref `plugins/workunitservices/
   * workunitservices.hpp:45-72`: wsWorkunitExists / wsWorkunitList /
@@ -60,18 +60,18 @@ final class Workunits(spark: SparkSession) {
     wuidOnDate(d.getYear, d.getMonthValue, d.getDayOfMonth)
   }
 
+  /** Spark's executed-plan walk: it unwraps `AdaptiveSparkPlanExec` and
+    * descends into every query stage, so the nodes below an exchange are
+    * reached under AQE.
+    */
+  private object ExecutedPlan extends AdaptiveSparkPlanHelper
+
   /** Paths the executed plan actually scanned (wsWorkunitFilesRead). */
-  private def scannedPaths(df: DataFrame): Seq[String] = {
-    def leaves(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => leaves(a.executedPlan)
-      case other => other +: other.children.flatMap(leaves)
-    }
-    leaves(df.queryExecution.executedPlan).collect {
-      case f: FileSourceScanExec =>
-        f.relation.location.rootPaths.map(_.toString)
-    }.flatten.distinct.sorted
-  }
+  private def scannedPaths(df: DataFrame): Seq[String] =
+    ExecutedPlan.flatMap(df.queryExecution.executedPlan) {
+      case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.toString)
+      case _ => Nil
+    }.distinct.sorted
 
   /** Execute a query as a workunit: runs `body`, counts the result, and
     * records timing + scanned files. Failures record a `failed` workunit
@@ -109,18 +109,12 @@ final class Workunits(spark: SparkSession) {
     * populated SQL metric of the executed plan, the Spark twin of the
     * reference's per-activity statistics tree.
     */
-  private def planStats(df: DataFrame): Seq[(String, String, Long)] = {
-    def leaves(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => leaves(a.executedPlan)
-      case other => other +: other.children.flatMap(leaves)
-    }
-    leaves(df.queryExecution.executedPlan).flatMap { node =>
+  private def planStats(df: DataFrame): Seq[(String, String, Long)] =
+    ExecutedPlan.flatMap(df.queryExecution.executedPlan) { node =>
       node.metrics.toSeq.collect {
         case (k, m) if m.value > 0 => (node.nodeName, k, m.value)
       }
     }
-  }
 
   /** wsWorkunitExists. */
   def workunitExists(wuid: String): Boolean = runs.contains(wuid)

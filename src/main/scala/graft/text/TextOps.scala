@@ -24,8 +24,7 @@ object TextOps {
 
   /** Default LSH bucket-size threshold above which [[lshJaccardPairs]]
     * routes a bucket through the distributed join lowering instead of the
-    * bucket-local generator (also the threshold `tools.BucketStats`
-    * reports against).
+    * bucket-local generator.
     */
   val DefaultMaxBucket = 1024
 

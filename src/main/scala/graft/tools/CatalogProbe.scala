@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Catalog-scale probe (dev tool): sizes the FileCatalog manifest engine
   * at Dali-like load — 100 k logical files, 1 k superfiles × 100 subs —
@@ -18,12 +17,7 @@ object CatalogProbe {
     val nFiles = if (args.length > 0) args(0).toInt else 100000
     val nSupers = if (args.length > 1) args(1).toInt else 1000
     val subsPer = if (args.length > 2) args(2).toInt else 100
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.engine(4)
     val root = s"/root/repo/target/catalog_probe/${System.nanoTime()}"
     val cat = new graft.sources.FileCatalog(spark, root)
     def timed[T](label: String)(f: => T): T = {

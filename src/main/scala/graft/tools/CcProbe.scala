@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.Tables
 import graft.text.TextOps
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -44,15 +43,7 @@ object CcProbe {
       case other  => sys.error(s"unknown storage mode: $other")
     }
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.bench(32)
     import graft.workflow.Workflow.checkpointEager
     println(s"[cc] storage mode: $mode (persist=$persistLevel, checkpoint=$ckLevel)")
 

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.{SparkEntry, Tables}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 
@@ -14,12 +13,7 @@ object PlanDump {
     // sf0.01 minimum: q174's pinned rollup summary asserts >= 1500
     // customer keys (c736d40's ADVICE guard) and fails fast below that
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.engine(4)
 
     val picks = Seq(
       "q01_agg" -> "TPC-H Q1 spine: pushed filter, pruned schema, partial agg",

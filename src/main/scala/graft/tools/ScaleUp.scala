@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: synthesize a 10×-scale dataset from sf0.1 for the scale
@@ -19,14 +19,7 @@ object ScaleUp {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val dst = if (args.length > 1) args(1) else "/tmp/sf1"
     val copies = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.engine(32)
 
     def scaled(table: String, keyCols: Seq[String],
         salt: DataFrame => DataFrame = identity): Unit = {

@@ -22,4 +22,10 @@ object GraftBridge {
   def ofRows(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Block until every listener has seen the events posted so far
+    * (`SparkContext.listenerBus` is private[spark]).
+    */
+  def awaitListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

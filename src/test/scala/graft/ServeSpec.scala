@@ -193,6 +193,24 @@ class ServeSpec extends SparkSpec {
     assert(wu.wuidOnDate(2020, 1, 1) < w)
   }
 
+  test("workunits: files read and scan statistics come from below an " +
+      "adaptive query stage (a recorded aggregate with an exchange)") {
+    val wu = new graft.serve.Workunits(spark)
+    val dir = s"target/graft_io/wu_spec3-${System.nanoTime()}"
+    Seq((1, "x"), (2, "y"), (1, "z")).toDF("k", "v")
+      .write.mode("overwrite").parquet(dir)
+    val w = wu.record("grouped") {
+      spark.read.parquet(dir).groupBy("k").agg(count(lit(1)).as("n"))
+    }
+    val files = wu.workunitFilesRead(w).collect().map(_.getString(1))
+    assert(files.exists(_.contains("wu_spec3")), files.mkString(","))
+    val stats = wu.workunitStatistics(w).collect()
+      .map(r => (r.getString(1), r.getString(2), r.getLong(3)))
+    assert(stats.exists { case (act, k, v) =>
+      act.startsWith("Scan") && k == "numOutputRows" && v == 3 },
+      stats.mkString(","))
+  }
+
   test("query timeout: a runaway Spark job is job-group-cancelled at the " +
       "deadline and the client gets a 503 timeout envelope, not a hung " +
       "worker") {

@@ -7,19 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * dominates test wall time otherwise).
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session.engine(4, appName = "graft-test")
 }
 
 abstract class SparkSpec extends AnyFunSuite {
