@@ -7,10 +7,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * All engine queries take `(SparkSession, sfDir)` and read via these
   * helpers so that filter/column pushdown reaches the parquet scan
   * (`PushedFilters` / `ReadSchema` in `.explain("formatted")`).
+  *
+  * No schema is declared here: each table's schema is the record layout
+  * stored in its parquet footer, read on the driver by `Sources.parquet`
+  * under the session's parquet confs, without a schema-inference job.
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.sources.Sources.parquet(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

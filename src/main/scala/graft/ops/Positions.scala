@@ -171,6 +171,8 @@ object Positions {
     * order) may settle differently between the passes — pass 1 and the
     * keys-only iterator read nothing beyond the keys, so summaries and run
     * lengths are unaffected (the same contract every key-scan here has).
+    * Groups are those of `groupBy`: keys compare through `normKey`, so
+    * -0.0 and 0.0 are one group, all NaNs one group, null one group.
     */
   private[ops] def quantileRowsGrouped(df: DataFrame, n: Int,
       groupKeys: Seq[Column], order: Seq[Column], first: Boolean,
@@ -336,16 +338,25 @@ object Positions {
     }
   }
 
-  /** Normalize a key value for Scala equality: `Row.get` returns
-    * `Array[Byte]` for BinaryType, whose `equals` is reference identity —
-    * raw arrays in a key Seq would make every binary key compare distinct.
-    * Wrapping in an immutable ArraySeq restores content equality (Spark's
-    * own null-safe semantic equality for binary compares bytes).
+  /** Normalize a key value so that Scala equality on key Seqs groups rows
+    * exactly as `groupBy` does (null-safe, Spark's NormalizeFloatingNumbers):
+    *  - `Row.get` returns `Array[Byte]` for BinaryType, whose `equals` is
+    *    reference identity; an immutable ArraySeq compares the bytes.
+    *  - -0.0 becomes 0.0 (Double and Float), so both signs are one key.
+    *  - Every NaN becomes one sentinel. Scala's `==` on boxed floating
+    *    values is IEEE (NaN != NaN), which would make each NaN row a run of
+    *    its own; the range sort already places all NaNs together.
+    *  - null stays null, one key of its own (`null == null`).
+    * Floating values nested in structs or arrays are not normalized.
     */
   private[ops] def normKey(v: Any): Any = v match {
     case b: Array[Byte] => scala.collection.immutable.ArraySeq.unsafeWrapArray(b)
+    case d: Double => if (d.isNaN) NaNKey else if (d == 0.0d) 0.0d else d
+    case f: Float => if (f.isNaN) NaNKey else if (f == 0.0f) 0.0f else f
     case other => other
   }
+
+  private case object NaNKey
 
   /** Read the key tuple of one row (normalized for value equality). */
   private[ops] def keyOf(r: Row, keyIdx: Seq[Int]): Seq[Any] =

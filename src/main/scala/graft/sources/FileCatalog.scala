@@ -321,7 +321,7 @@ final class FileCatalog(spark: SparkSession, root: String) {
   def read(name: String): DataFrame = {
     val st = load()
     require(st.files.contains(name), s"no such logical file: $name")
-    spark.read.parquet(st.files(name))
+    Sources.parquet(spark, st.files(name))
   }
 
   /** DeleteLogicalFile: drops the catalog entry (and any superfile

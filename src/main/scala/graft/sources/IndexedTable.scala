@@ -51,14 +51,14 @@ object IndexedTable {
     * (`ecl/hql/hqlfilter.hpp:111`).
     */
   def keyedRead(spark: SparkSession, path: String, pred: Column): DataFrame =
-    spark.read.parquet(path).filter(pred)
+    Sources.parquet(spark, path).filter(pred)
 
   /** KEYED JOIN (TAKkeyedjoin :1046, half-keyed): LHS rows probe the index.
     * Catalyst plans SMJ/BHJ; the index's sortedness + stats give pruning.
     */
   def keyedJoin(lhs: DataFrame, spark: SparkSession, indexPath: String,
       cond: Column, typ: String = "inner"): DataFrame =
-    lhs.join(spark.read.parquet(indexPath), cond, typ)
+    lhs.join(Sources.parquet(spark, indexPath), cond, typ)
 
   /** FETCH (TAKfetch :926): full-keyed pattern — probe the index for
     * filepos, then retrieve base records by position.
@@ -74,7 +74,7 @@ object IndexedTable {
     */
   def fetch(spark: SparkSession, basePath: String, indexPath: String,
       keyPred: Column): DataFrame = {
-    val pos = spark.read.parquet(indexPath).filter(keyPred)
+    val pos = Sources.parquet(spark, indexPath).filter(keyPred)
       .select(col("__filepos"))
     // r19 (guide §6 — make pushdown reach the scan): FETCH is a
     // positional SEEK, but a bare join gives the base scan no pushable
@@ -87,7 +87,7 @@ object IndexedTable {
     // keeps only the exact positions; results are unchanged (between is a
     // superset of the joined positions, and an empty probe short-circuits
     // to an empty scan).
-    val base = spark.read.parquet(basePath)
+    val base = Sources.parquet(spark, basePath)
     val r = pos.agg(min(col("__filepos")), max(col("__filepos"))).head()
     val bounded =
       if (r.isNullAt(0)) base.filter(lit(false))

@@ -1,6 +1,11 @@
 package graft.sources
 
+import scala.util.Try
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+import org.apache.spark.sql.execution.datasources.parquet.FooterBridge
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.StructType
 
@@ -11,6 +16,39 @@ import org.apache.spark.sql.types.StructType
   * files readable as one dataset, `dali/base/dadfs.hpp:493`).
   */
 object Sources {
+
+  /** The engine's parquet read: every parquet file carries its record
+    * layout in its footer, and the reader takes it from there, as an HPCC
+    * reader takes it from Dali or the index header — no inference job.
+    * Spark's own `read.parquet` runs a whole Spark job to read one footer;
+    * here the driver reads that same footer on the calling thread. The file
+    * is the one Spark's inference touches with mergeSchema off:
+    * `_common_metadata`, else `_metadata`, else the first data file by path,
+    * listed as the `DataSource` lists (`InMemoryFileIndex`). Partition
+    * columns are still discovered from the directory names. When no file
+    * matches (missing path, glob, empty dir), the footer cannot be read, or
+    * mergeSchema is on, Spark's own read runs and raises its own error.
+    */
+  def parquet(spark: SparkSession, paths: String*): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val roots = paths.map { p =>
+      val path = new Path(p)
+      path.getFileSystem(conf).makeQualified(path)
+    }
+    val summaries = Seq("_common_metadata", "_metadata")
+    val stored =
+      if (spark.conf.get("spark.sql.parquet.mergeSchema").toBoolean ||
+          roots.exists(r => r.toString.exists("{}[]*?\\".contains(_)) ||
+            !r.getFileSystem(conf).exists(r))) None
+      else {
+        val byPath = new InMemoryFileIndex(spark, roots, Map.empty, None)
+          .allFiles().sortBy(_.getPath.toString)
+        summaries.flatMap(n => byPath.find(_.getPath.getName == n)).headOption
+          .orElse(byPath.find(f => !summaries.contains(f.getPath.getName)))
+          .flatMap(f => Try(FooterBridge.schema(spark, f)).toOption.flatten)
+      }
+    stored.fold(spark.read.parquet(paths: _*))(spark.read.schema(_).parquet(paths: _*))
+  }
 
   /** OUTPUT(..., CSV) (TAKcsvwrite :921). */
   def csvWrite(df: DataFrame, path: String, sep: String = ",",
@@ -68,7 +106,7 @@ object Sources {
 
   /** Superfile read: a union of file paths presented as one dataset. */
   def superfile(spark: SparkSession, paths: Seq[String]): DataFrame =
-    spark.read.parquet(paths: _*)
+    parquet(spark, paths: _*)
 
   /** Schema-on-read translation: present parts written under DIFFERENT
     * record layouts as one dataset with the `expected` layout — the
@@ -96,7 +134,7 @@ object Sources {
       case t => lit(null).cast(t)
     }
     parts.map { p =>
-      val df = spark.read.parquet(p)
+      val df = parquet(spark, p)
       val have = df.columns.toSet
       df.select(expected.fields.toSeq.map { f =>
         if (have(f.name)) col(f.name).cast(f.dataType).as(f.name)

@@ -82,5 +82,5 @@ object ZOrder {
     * z-clustered layout do the skipping (PushedFilters in the plan).
     */
   def read(spark: SparkSession, path: String, pred: Column): DataFrame =
-    spark.read.parquet(path).filter(pred)
+    Sources.parquet(spark, path).filter(pred)
 }

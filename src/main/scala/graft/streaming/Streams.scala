@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -50,14 +51,15 @@ object Streams {
       case _ => df
     }
 
-  /** Streaming events fixture: declared schema from the sf directory's
-    * parquet footer, micro-batch source over the staged copy, then the same
+  /** Streaming events fixture: the schema stored in the sf directory's
+    * parquet footer (read on the driver by `Sources.parquet`, no job)
+    * declared to a micro-batch source over the staged copy, then the same
     * guarded `ts` normalization as the batch loader.
     */
   def eventsStream(spark: SparkSession, sfDir: String,
       stagedDir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
+    val schema = Sources.parquet(spark, s"$sfDir/events.parquet").schema
     normalizeEventTs(
       fileSource(spark, stagedDir, schema,
         maxFilesPerTrigger = maxFilesPerTrigger))

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.sources.Sources
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -23,7 +24,7 @@ object ScaleUp {
 
     def scaled(table: String, keyCols: Seq[String],
         salt: DataFrame => DataFrame = identity): Unit = {
-      val base = spark.read.parquet(s"$src/$table.parquet")
+      val base = Sources.parquet(spark, s"$src/$table.parquet")
       val out = (0 until copies).map { i =>
         val shifted = keyCols.foldLeft(base)((d, k) =>
           d.withColumn(k, col(k) + lit(i * K)))
@@ -35,7 +36,7 @@ object ScaleUp {
 
     // fixed-size dims copy once; everything else scales with key offsets
     Seq("region", "nation").foreach { t =>
-      spark.read.parquet(s"$src/$t.parquet")
+      Sources.parquet(spark, s"$src/$t.parquet")
         .write.mode("overwrite").parquet(s"$dst/$t.parquet")
       println(s"[scaleup] $t: copied")
     }

@@ -1,5 +1,6 @@
 package graft.workflow
 
+import graft.sources.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -59,7 +60,7 @@ final class Incremental(
     * when nothing has been consumed yet).
     */
   def state: Option[DataFrame] = versions.lastOption.map(v =>
-    spark.read.parquet(s"$stateDir/agg_v$v"))
+    Sources.parquet(spark, s"$stateDir/agg_v$v"))
 
   /** Fold any unseen `parts` into the state; returns the refreshed state
     * and the list of parts actually read (empty → no-op, state untouched).
@@ -72,7 +73,7 @@ final class Incremental(
         "was given no unseen parts — the aggregate schema (key/value types " +
         "come from the data) is unknowable; pass at least one part on the " +
         "first refresh")), Nil)
-    val delta = applyAggs(spark.read.parquet(fresh: _*))
+    val delta = applyAggs(Sources.parquet(spark, fresh: _*))
     val merged = state match {
       case Some(prev) => mergeAggs(prev.unionByName(delta))
       case None => delta
@@ -83,7 +84,7 @@ final class Incremental(
     Files.writeString(tmp, (seen ++ fresh).toSeq.sorted.mkString("\n"))
     Files.move(tmp, Paths.get(s"$stateDir/manifest_v$v.txt"),
       StandardCopyOption.ATOMIC_MOVE)
-    (spark.read.parquet(s"$stateDir/agg_v$v"), fresh)
+    (Sources.parquet(spark, s"$stateDir/agg_v$v"), fresh)
   }
 
   /** First-level aggregation of raw rows. */

@@ -1,5 +1,6 @@
 package graft.workflow
 
+import graft.sources.Sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,7 +25,7 @@ object Workflow {
     val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(marker)) df.write.mode("overwrite").parquet(path)
-    spark.read.parquet(path)
+    Sources.parquet(spark, path)
   }
 
   /** STORED('name') (`no_stored` hqlexpr.hpp:287): externally-settable

@@ -62,28 +62,39 @@ class DataPatternsSpec extends SparkSpec {
   test("profile pass 1 keeps the declarative aggregate in codegen: the " +
       "regex/cast work runs in HashAggregate, ObjectHashAggregate carries " +
       "only the percentile/HLL sketches (r20, guide §4)") {
+    import org.apache.spark.sql.catalyst.expressions.RLike
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec, ObjectHashAggregateExec}
     val plans =
-      new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = plans.add(qe.executedPlan.toString)
+          durationNs: Long): Unit = plans.add(qe.executedPlan)
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution,
           exception: Exception): Unit = ()
     }
+    // every node of the plan, through AQE's query stages
+    object Nodes extends AdaptiveSparkPlanHelper {
+      def apply(plan: SparkPlan): Seq[SparkPlan] = collect(plan) { case p => p }
+    }
+    def evidence(a: BaseAggregateExec): Boolean =
+      a.resultExpressions.exists(_.name.startsWith("allint__"))
     spark.listenerManager.register(listener)
     try {
       DataPatterns.profile(df).count()
       // execution-listener events post asynchronously; wait for the pass-1
       // action (the one carrying the best-type evidence columns) to land
       val deadline = System.nanoTime() + 10_000_000_000L
-      def pass1: Option[String] = {
+      def pass1: Option[Seq[SparkPlan]] = {
         val it = plans.iterator()
-        var found: Option[String] = None
+        var found: Option[Seq[SparkPlan]] = None
         while (it.hasNext && found.isEmpty) {
-          val p = it.next()
-          if (p.contains("allint__")) found = Some(p)
+          val nodes = Nodes(it.next())
+          if (nodes.exists { case a: BaseAggregateExec => evidence(a); case _ => false })
+            found = Some(nodes)
         }
         found
       }
@@ -92,20 +103,28 @@ class DataPatternsSpec extends SparkSpec {
         Thread.sleep(100); p1 = pass1
       }
       assert(p1.nonEmpty, "no executed plan contains the pass-1 aggregate")
-      val plan = p1.get
+      val nodes = p1.get
+      def plan = nodes.headOption.map(_.treeString).getOrElse("")
       // ONE TypedImperative agg forces the whole operator onto interpreted
       // ObjectHashAggregate, so the split is load-bearing: the declarative
       // side (rlike/try_cast per input row) must be a codegen'd
       // HashAggregate...
-      assert("""\*\(\d+\) HashAggregate""".r.findFirstIn(plan).nonEmpty,
+      def stage(p: SparkPlan): Seq[SparkPlan] =
+        p +: (p match {
+          case _: InputAdapter => Nil
+          case _ => p.children.flatMap(stage)
+        })
+      val codegened = nodes.collect { case w: WholeStageCodegenExec => w }
+        .flatMap(w => stage(w.child))
+      assert(codegened.exists { case h: HashAggregateExec => evidence(h); case _ => false },
         s"pass-1 declarative aggregate not codegen'd:\n$plan")
       // ...and no ObjectHashAggregate node may carry the per-row regex work
       // (sketches only — percentile_approx / approx_count_distinct)
-      val objLines = plan.linesIterator
-        .filter(_.contains("ObjectHashAggregate")).toSeq
-      assert(objLines.nonEmpty, s"sketch aggregate missing:\n$plan")
-      assert(!objLines.exists(_.contains("allint__")),
-        s"regex work leaked into ObjectHashAggregate:\n${objLines.mkString("\n")}")
+      val objAggs = nodes.collect { case o: ObjectHashAggregateExec => o }
+      assert(objAggs.nonEmpty, s"sketch aggregate missing:\n$plan")
+      assert(!objAggs.exists(o => evidence(o) ||
+          o.expressions.exists(_.exists(_.isInstanceOf[RLike]))),
+        s"regex work leaked into ObjectHashAggregate:\n$plan")
     } finally spark.listenerManager.unregister(listener)
   }
 
