@@ -16,11 +16,12 @@ import graft.queries.CoreQueries.{sumD, sumDSql}
   */
 object IoQueries {
 
-  /** Bump when a fixture-relevant on-disk layout changes (IndexedTable,
-    * ZOrder, bucketed builds): stale fixtures then self-invalidate via a
-    * fresh fixture root instead of failing a format-incompatible read.
+  /** Bump when a fixture-relevant on-disk layout changes (IndexedTable and
+    * its TLK, ZOrder, bucketed builds): stale fixtures then self-invalidate
+    * via a fresh fixture root instead of failing a format-incompatible read
+    * or missing a newer read path.
     */
-  private val FixtureLayoutVersion = 2
+  private val FixtureLayoutVersion = 3
 
   private def ioDir(sfDir: String): String = {
     val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_")

@@ -7,8 +7,15 @@ import org.apache.spark.sql.functions._
   * §2.10). The reference persists a B-tree of key+payload
   * (`system/jhtree/ctfile.hpp:32`) probed via `IKeyManager`
   * (`system/jhtree/jhtree.hpp:247`); our index is range-partitioned,
-  * in-partition-sorted Parquet: row-group min/max stats give the keyed
-  * pruning (data skipping), partition ranges give the B-tree's fan-out.
+  * in-partition-sorted Parquet parts plus a top-level key ([[TopLevelKey]],
+  * the `_tlk` file in the index dir). The TLK holds each part's name, length
+  * and leading-key null count, min and max, and the parts' stored layout, so
+  * a keyed read lists the dir once, reads no footer and opens only the parts
+  * whose key range can match — the reference's TLK probe. Within a part,
+  * row-group min/max stats skip the rest (data skipping). Readers fall back
+  * to the plain parquet read, all parts, when the dir's files no longer
+  * match the TLK (an append, a rewrite, a partial build) or it is missing or
+  * unreadable.
   *
   * FETCH (TAKfetch :926) retrieves base-file records by file position; the
   * filepos surrogate here is an explicit `__filepos` column assigned at
@@ -17,8 +24,8 @@ import org.apache.spark.sql.functions._
 object IndexedTable {
 
   /** BUILD(index) (TAKindexwrite :923): range-partition by key, sort within
-    * partitions, write Parquet. `payload` columns ride along (a payload
-    * index); omit for key-only.
+    * partitions, write Parquet, then the TLK on the leading key. `payload`
+    * columns ride along (a payload index); omit for key-only.
     */
   def build(df: DataFrame, keys: Seq[String], path: String,
       numPartitions: Int = 0): Unit = {
@@ -27,10 +34,11 @@ object IndexedTable {
     else df.repartitionByRange(keys.map(col): _*)
     keyed.sortWithinPartitions(keys.map(col): _*)
       .write.mode("overwrite").parquet(path)
+    TopLevelKey.write(df.sparkSession, path, keys.head)
   }
 
   /** BUILD with filepos: also writes the base table annotated with
-    * `__filepos` plus a key→filepos index (half-keyed pattern).
+    * `__filepos` plus a key→filepos index with its TLK (half-keyed pattern).
     */
   def buildWithFilepos(df: DataFrame, keys: Seq[String], basePath: String,
       indexPath: String): Unit = {
@@ -43,12 +51,13 @@ object IndexedTable {
       .repartitionByRange(keys.map(col): _*)
       .sortWithinPartitions(keys.map(col): _*)
       .write.mode("overwrite").parquet(indexPath)
+    TopLevelKey.write(df.sparkSession, indexPath, keys.head)
   }
 
   /** INDEX read with keyed filter (TAKindexread :963): the predicate is
-    * pushed to the Parquet scan — row-group stats skip non-matching groups
-    * exactly like the reference's key-range extraction
-    * (`ecl/hql/hqlfilter.hpp:111`).
+    * pushed to the scan — the TLK drops the parts whose key range cannot
+    * match, and row-group stats skip non-matching groups within the rest,
+    * like the reference's key-range extraction (`ecl/hql/hqlfilter.hpp:111`).
     */
   def keyedRead(spark: SparkSession, path: String, pred: Column): DataFrame =
     Sources.parquet(spark, path).filter(pred)

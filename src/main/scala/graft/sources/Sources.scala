@@ -20,11 +20,20 @@ object Sources {
   /** The engine's parquet read: every parquet file carries its record
     * layout in its footer, and the reader takes it from there, as an HPCC
     * reader takes it from Dali or the index header — no inference job.
-    * Spark's own `read.parquet` runs a whole Spark job to read one footer;
-    * here the driver reads that same footer on the calling thread. The file
-    * is the one Spark's inference touches with mergeSchema off:
-    * `_common_metadata`, else `_metadata`, else the first data file by path,
-    * listed as the `DataSource` lists (`InMemoryFileIndex`). Partition
+    *
+    * An INDEX dir ([[IndexedTable]]: range-sorted parts plus a top-level
+    * key) given as the one path is read through its TLK
+    * ([[TopLevelKey.read]]): one listing checks that the dir's data files
+    * are still exactly the TLK's parts, the schema comes from the TLK's copy
+    * of the first part's footer, and the scan opens only the parts whose
+    * leading-key stats can match the pushed filters. Any mismatch, or no
+    * readable TLK, takes the path below.
+    *
+    * Otherwise Spark's own `read.parquet` would run a whole Spark job to read
+    * one footer; here the driver reads that same footer on the calling
+    * thread. The file is the one Spark's inference touches with mergeSchema
+    * off: `_common_metadata`, else `_metadata`, else the first data file by
+    * path, listed as the `DataSource` lists (`InMemoryFileIndex`). Partition
     * columns are still discovered from the directory names. When no file
     * matches (missing path, glob, empty dir), the footer cannot be read, or
     * mergeSchema is on, Spark's own read runs and raises its own error.
@@ -36,18 +45,24 @@ object Sources {
       path.getFileSystem(conf).makeQualified(path)
     }
     val summaries = Seq("_common_metadata", "_metadata")
-    val stored =
-      if (spark.conf.get("spark.sql.parquet.mergeSchema").toBoolean ||
-          roots.exists(r => r.toString.exists("{}[]*?\\".contains(_)) ||
-            !r.getFileSystem(conf).exists(r))) None
-      else {
-        val byPath = new InMemoryFileIndex(spark, roots, Map.empty, None)
-          .allFiles().sortBy(_.getPath.toString)
-        summaries.flatMap(n => byPath.find(_.getPath.getName == n)).headOption
-          .orElse(byPath.find(f => !summaries.contains(f.getPath.getName)))
-          .flatMap(f => Try(FooterBridge.schema(spark, f)).toOption.flatten)
-      }
-    stored.fold(spark.read.parquet(paths: _*))(spark.read.schema(_).parquet(paths: _*))
+    val plain = spark.conf.get("spark.sql.parquet.mergeSchema").toBoolean ||
+      roots.exists(_.toString.exists("{}[]*?\\".contains(_)))
+    val indexed = roots match {
+      case Seq(root) if !plain => TopLevelKey.read(spark, root)
+      case _ => None
+    }
+    indexed.getOrElse {
+      val stored =
+        if (plain || roots.exists(r => !r.getFileSystem(conf).exists(r))) None
+        else {
+          val byPath = new InMemoryFileIndex(spark, roots, Map.empty, None)
+            .allFiles().sortBy(_.getPath.toString)
+          summaries.flatMap(n => byPath.find(_.getPath.getName == n)).headOption
+            .orElse(byPath.find(f => !summaries.contains(f.getPath.getName)))
+            .flatMap(f => Try(FooterBridge.schema(spark, f)).toOption.flatten)
+        }
+      stored.fold(spark.read.parquet(paths: _*))(spark.read.schema(_).parquet(paths: _*))
+    }
   }
 
   /** OUTPUT(..., CSV) (TAKcsvwrite :921). */

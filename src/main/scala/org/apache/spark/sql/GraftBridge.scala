@@ -23,6 +23,12 @@ object GraftBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** The schema a file-source read declares for a given one
+    * (`StructType.asNullable` is private[spark]).
+    */
+  def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    s.asNullable
+
   /** Block until every listener has seen the events posted so far
     * (`SparkContext.listenerBus` is private[spark]).
     */

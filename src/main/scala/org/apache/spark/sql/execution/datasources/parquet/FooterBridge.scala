@@ -1,8 +1,9 @@
 package org.apache.spark.sql.execution.datasources.parquet
 
-import org.apache.hadoop.fs.FileStatus
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
 import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{classic, SparkSession}
 import org.apache.spark.sql.types.StructType
@@ -14,7 +15,11 @@ import org.apache.spark.sql.types.StructType
 object FooterBridge {
   def schema(spark: SparkSession, file: FileStatus): Option[StructType] = {
     val conf = spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
-    val meta = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf), SKIP_ROW_GROUPS)
-    ParquetFileFormat.readSchema(Seq(new Footer(file.getPath, meta)), spark)
+    schema(spark, file.getPath,
+      ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf), SKIP_ROW_GROUPS))
   }
+
+  /** The schema Spark infers from a footer already in hand. */
+  def schema(spark: SparkSession, path: Path, footer: ParquetMetadata): Option[StructType] =
+    ParquetFileFormat.readSchema(Seq(new Footer(path, footer)), spark)
 }

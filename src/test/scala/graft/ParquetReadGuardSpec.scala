@@ -8,16 +8,26 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Every engine parquet read goes through `Sources.parquet`, which reads the
   * stored layout on the driver; a plain `read.parquet(` anywhere else in the
-  * engine would bring back the schema-inference job it removes.
+  * engine would bring back the schema-inference job it removes. The only
+  * other place that builds a parquet relation is the INDEX reader behind it,
+  * `TopLevelKey`.
   */
 class ParquetReadGuardSpec extends AnyFunSuite {
-  test("read.parquet( appears in src/main/scala only as Sources.parquet's fallback") {
-    val call = raw"read\s*\.\s*parquet\s*\(".r
-    val hits = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+  private def sitesOf(call: scala.util.matching.Regex): Seq[String] =
+    Files.walk(Paths.get("src/main/scala")).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .flatMap(f => call.findAllMatchIn(Files.readString(f)).map(_ => f.toString))
       .toSeq
+
+  test("read.parquet( appears in src/main/scala only as Sources.parquet's fallback") {
+    val hits = sitesOf(raw"read\s*\.\s*parquet\s*\(".r)
     assert(hits == Seq("src/main/scala/graft/sources/Sources.scala"),
       s"parquet reads outside Sources.parquet: ${hits.mkString(", ")}")
+  }
+
+  test("HadoopFsRelation( and baseRelationToDataFrame( appear only in TopLevelKey") {
+    val hits = sitesOf(raw"\b(HadoopFsRelation|baseRelationToDataFrame)\s*\(".r)
+    assert(hits.distinct == Seq("src/main/scala/graft/sources/TopLevelKey.scala"),
+      s"relations built outside TopLevelKey: ${hits.mkString(", ")}")
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Path => JPath, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
 import graft.sources.{IndexedTable, Sources}
 import org.apache.hadoop.conf.Configuration
@@ -10,8 +9,6 @@ import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.SparkThrowable
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
@@ -26,23 +23,9 @@ class ParquetReadSpec extends SparkSpec {
   private val tables = Seq("region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  private def jobsDuring[T](f: => T): (T, Int) = {
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    GraftBridge.awaitListeners(spark)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = f
-      GraftBridge.awaitListeners(spark)
-      (out, jobs.get)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   /** The helper's schema equals Spark's inferred one, read with no job. */
   private def assertSameLayout(paths: String*): StructType = {
-    val (df, n) = jobsDuring(Sources.parquet(spark, paths: _*))
+    val (df, n, _) = jobsAndTasks(Sources.parquet(spark, paths: _*))
     assert(n == 0, s"reading ${paths.mkString(",")} launched $n jobs")
     val inferred = spark.read.parquet(paths: _*).schema
     assert(df.schema == inferred, s"${paths.mkString(",")}: ${df.schema.treeString}")

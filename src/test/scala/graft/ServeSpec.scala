@@ -209,6 +209,16 @@ class ServeSpec extends SparkSpec {
     assert(stats.exists { case (act, k, v) =>
       act.startsWith("Scan") && k == "numOutputRows" && v == 3 },
       stats.mkString(","))
+    // a keyed read through an INDEX's top-level key names the index dir
+    val idx = s"target/graft_io/wu_spec3_idx-${System.nanoTime()}"
+    graft.sources.IndexedTable.build(Seq((1, "x"), (2, "y"), (3, "z")).toDF("k", "v"),
+      Seq("k"), idx, numPartitions = 2)
+    val keyed = wu.record("keyed") {
+      graft.sources.IndexedTable.keyedRead(spark, idx, col("k") === 3)
+    }
+    val indexFiles = wu.workunitFilesRead(keyed).collect().map(_.getString(1))
+    assert(indexFiles.toSeq == Seq("file:" + new java.io.File(idx).getAbsolutePath),
+      indexFiles.mkString(","))
   }
 
   test("query timeout: a runaway Spark job is job-group-cancelled at the " +

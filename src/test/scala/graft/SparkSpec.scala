@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskStart}
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all specs (one JVM-wide session — Spark startup
@@ -13,4 +16,20 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   lazy val sf = "/root/testdata/sf0.001"
+
+  /** `f`'s result with the Spark jobs and tasks started while it ran. */
+  def jobsAndTasks[T](f: => T): (T, Int, Int) = {
+    val jobs, tasks = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onTaskStart(e: SparkListenerTaskStart): Unit = tasks.incrementAndGet()
+    }
+    GraftBridge.awaitListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = f
+      GraftBridge.awaitListeners(spark)
+      (out, jobs.get, tasks.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }

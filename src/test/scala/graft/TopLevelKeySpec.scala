@@ -1,0 +1,203 @@
+package graft
+
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+
+import graft.sources.{IndexedTable, Sources, TopLevelKey}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.functions._
+
+/** An INDEX dir read through its top-level key: every keyed read must return
+  * exactly the rows of `filter` over the plain `spark.read.parquet(dir)`,
+  * scan only the parts whose leading-key stats can match, and launch no
+  * job to plan; a dir whose files no longer match its TLK, or that has none,
+  * must read every part.
+  */
+class TopLevelKeySpec extends SparkSpec with AdaptiveSparkPlanHelper {
+  import spark.implicits._
+
+  private def tmp(name: String): String = Files.createDirectories(
+    Paths.get(s"target/graft_io/tlk/$name-${System.nanoTime()}")).resolve("idx").toString
+
+  private def index(df: DataFrame, name: String, keys: String*): String = {
+    val dir = tmp(name)
+    IndexedTable.build(df, keys, dir, numPartitions = 4)
+    dir
+  }
+
+  private def parts(dir: String): Seq[String] =
+    new java.io.File(dir).list().filter(_.endsWith(".parquet")).sorted.toSeq.map(n => s"$dir/$n")
+
+  /** Part files holding a row that satisfies `pred`. */
+  private def partsWith(dir: String, pred: Column): Int =
+    parts(dir).count(p => !spark.read.parquet(p).filter(pred).isEmpty)
+
+  /** Reads `dir` filtered by `pred` through `Sources.parquet` and checks its
+    * rows against the plain read; returns the part files the scan read and
+    * whether it read through the TLK.
+    */
+  private def read(dir: String, pred: Column): (Long, Boolean) = {
+    val (df, jobs, _) = jobsAndTasks(Sources.parquet(spark, dir))
+    assert(jobs == 0, s"planning the read of $dir launched $jobs jobs")
+    val q = df.filter(pred)
+    def rendered(df: DataFrame) = df.collect().map(_.toSeq.map {
+      case b: Array[Byte] => b.mkString("bytes(", ",", ")")
+      case v => String.valueOf(v)
+    }.mkString("|")).sorted.toSeq
+    val got = rendered(q)
+    val want = rendered(spark.read.parquet(dir).filter(pred))
+    assert(got == want, s"$pred over $dir")
+    val scan = collectFirst(q.queryExecution.executedPlan) { case s: FileSourceScanExec => s }.get
+    assert(scan.relation.location.rootPaths.map(_.toUri.getPath) ==
+      Seq(new java.io.File(dir).getAbsolutePath), scan.relation.location.rootPaths)
+    (scan.metrics("numFiles").value,
+      scan.relation.location.getClass.getName.startsWith(TopLevelKey.getClass.getName))
+  }
+
+  /** The TLK read of `pred` scans exactly `expected` parts. */
+  private def assertScans(dir: String, pred: Column, expected: Int): Unit = {
+    val (files, tlk) = read(dir, pred)
+    assert(tlk, s"$dir was not read through its TLK")
+    assert(files == expected, s"$pred scanned $files parts, expected $expected")
+  }
+
+  private lazy val rows = spark.range(0, 400).withColumn("v", (col("id") % 7).cast("int"))
+
+  test("long, int, string and date leading keys: point, In, range and " +
+      "flipped comparisons scan only the parts that hold a match") {
+    val keyed = Seq(
+      ("long", col("id") * 3, (i: Long) => lit(i * 3)),
+      ("int", (col("id") * 3).cast("int"), (i: Long) => lit((i * 3).toInt)),
+      ("string", format_string("k%05d", col("id")), (i: Long) => lit(f"k$i%05d")),
+      ("date", date_add(lit(java.sql.Date.valueOf("2020-01-01")), col("id").cast("int")),
+        (i: Long) => lit(java.sql.Date.valueOf(java.time.LocalDate.of(2020, 1, 1).plusDays(i)))))
+    for ((kind, key, at) <- keyed) {
+      val dir = index(rows.withColumn("k", key).select("k", "v", "id"), kind, "k")
+      assert(parts(dir).size == 4)
+      val k = col("k")
+      for (pred <- Seq(k === at(399), at(7) === k, k <=> at(250), k.isin(at(3), at(398)),
+          k.between(at(90), at(310)), k < at(50), at(50) >= k, k > at(380),
+          at(200) < k, k >= at(399), k <= at(0), (k === at(5)) || (k === at(395)),
+          (k > at(100)) && (k < at(120)), k.isin(at(390), lit(null))))
+        assertScans(dir, pred, partsWith(dir, pred))
+      assertScans(dir, k > at(399), 0)
+      assertScans(dir, k < at(0), 0)
+      assertScans(dir, k.isNull, 0)
+      // a non-key predicate, alone or in an Or with a key one, keeps every part
+      assertScans(dir, col("v") === 3, 4)
+      assertScans(dir, (k === at(5)) || (col("v") === 3), 4)
+      assertScans(dir, !(k === at(5)), 4)
+    }
+  }
+
+  test("a two-column key prunes on its leading column, whose values span " +
+      "part boundaries") {
+    val dir = index(rows.select((col("id") / 150).cast("long").as("a"), col("id").as("b"),
+      col("v")), "two", "a", "b")
+    val a = col("a")
+    assert(partsWith(dir, a === 0) >= 2, "a leading value must span a part boundary")
+    assertScans(dir, a === 0, partsWith(dir, a === 0))
+    assertScans(dir, a === 2, partsWith(dir, a === 2))
+    assertScans(dir, (a === 1) && (col("b") === 200), partsWith(dir, a === 1))
+    assertScans(dir, col("b") === 5, 4)
+  }
+
+  test("a double key with -0.0 and NaN never prunes") {
+    val keys = Seq(-0.0, 0.0, Double.NaN, java.lang.Double.longBitsToDouble(0x7ff8000000000123L),
+      1.5, -2.5, Double.PositiveInfinity, Double.NegativeInfinity)
+    val df = spark.range(0, 400)
+      .select(element_at(typedLit(keys), (col("id") % keys.size + 1).cast("int")).as("k"),
+        col("id"))
+    val dir = index(df, "double", "k")
+    val k = col("k")
+    for (pred <- Seq(k === 0.0, k === -0.0, k.isNaN, k === Double.NaN, k > 1.0, k < -1.0,
+        k.isin(-0.0, Double.NaN)))
+      assertScans(dir, pred, parts(dir).size)
+  }
+
+  test("null keys: IsNull and <=> read the parts that hold nulls or the value") {
+    val df = rows.select(when(col("id") % 5 === 0, lit(null)).otherwise(col("id")).as("k"),
+      col("v"))
+    val dir = index(df, "nulls", "k")
+    val k = col("k")
+    for (pred <- Seq(k.isNull, k <=> lit(null).cast("long"), k <=> 7L, k === 399L,
+        k.isNull || (k === 399L)))
+      assertScans(dir, pred, partsWith(dir, pred))
+    assertScans(dir, k.isNotNull, parts(dir).size)
+  }
+
+  test("an empty index reads Spark's schema and no part for a keyed read") {
+    val dir = index(rows.select(col("id").as("k"), col("v")).filter(lit(false)), "empty", "k")
+    assert(Sources.parquet(spark, dir).schema == spark.read.parquet(dir).schema)
+    assertScans(dir, col("k") === 1L, 0)
+    assertScans(dir, col("v") === 1, parts(dir).size)
+  }
+
+  test("an appended part, a truncated or missing _tlk and a plain parquet " +
+      "dir fall back to the full read") {
+    val df = rows.select(col("id").as("k"), col("v"))
+    def fallsBack(dir: String, pred: Column): Unit = {
+      val (files, tlk) = read(dir, pred)
+      assert(!tlk && files == parts(dir).size, s"$dir: $files parts, TLK $tlk")
+    }
+    val appended = index(df, "appended", "k")
+    Seq((7L, 99)).toDF("k", "v").write.mode("append").parquet(appended)
+    fallsBack(appended, col("k") === 7L)
+    assert(Sources.parquet(spark, appended).filter(col("k") === 7L).count() == 2)
+
+    val truncated = index(df, "truncated", "k")
+    val tlkPath = new Path(s"$truncated/${TopLevelKey.FileName}")
+    val fs = tlkPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val text = new String(fs.open(tlkPath).readAllBytes(), UTF_8)
+    val out = fs.create(tlkPath, true)
+    try out.write(text.linesIterator.toSeq.init.mkString("\n").getBytes(UTF_8))
+    finally out.close()
+    fallsBack(truncated, col("k") === 7L)
+
+    val missing = index(df, "missing", "k")
+    fs.delete(new Path(s"$missing/${TopLevelKey.FileName}"), false)
+    fallsBack(missing, col("k") === 7L)
+
+    val plain = tmp("plain")
+    df.repartition(4).write.parquet(plain)
+    fallsBack(plain, col("k") === 7L)
+  }
+
+  test("the TLK read's schema is Spark's under the parquet read confs, with no job") {
+    val df = rows.select(col("id").as("k"), col("v"), col("id").cast("string").as("s"),
+      col("id").cast("string").cast("binary").as("bin"), current_timestamp().as("ts"),
+      current_date().as("d"), (col("id") / 3).cast("decimal(12,2)").as("dec"),
+      array(col("v")).as("arr"), struct(col("v").as("x")).as("st"))
+    val dir = index(df, "schema", "k")
+    def withConf[T](key: String, value: String)(f: => T): T = {
+      val old = spark.conf.getOption(key)
+      spark.conf.set(key, value)
+      try f finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    for (ntz <- Seq("true", "false"); bin <- Seq("true", "false"))
+      withConf("spark.sql.parquet.inferTimestampNTZ.enabled", ntz) {
+        withConf("spark.sql.parquet.binaryAsString", bin) {
+          val (ours, jobs, _) = jobsAndTasks(Sources.parquet(spark, dir))
+          assert(jobs == 0)
+          assert(ours.schema == spark.read.parquet(dir).schema, ours.schema.treeString)
+          assertScans(dir, col("k") === 5L, 1)
+        }
+      }
+  }
+
+  test("a point lookup on a 4-part index runs one job with one task") {
+    val idx = index(Tables.customer(spark, sf), "lookup", "c_custkey")
+    val firstKeys = parts(idx).map(p => 
+      spark.read.parquet(p).agg(min("c_custkey")).head.getAs[Number](0).longValue)
+    assert(firstKeys.size == 4)
+    for (key <- firstKeys) {
+      val (rows, jobs, tasks) = jobsAndTasks(
+        IndexedTable.keyedRead(spark, idx, col("c_custkey") === key).limit(100).collect())
+      assert(rows.length == 1)
+      assert((jobs, tasks) == (1, 1), s"key $key: $jobs jobs, $tasks tasks")
+    }
+  }
+}
