@@ -4,6 +4,8 @@ import java.io.File
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import graft.sources.ManifestIo
+
 /** Message-queue service — the `plugins/sqs` analog (`sqs.ecllib:35-42`
   * SQSPublisher.{CreateQueue,IsQueueExist,PublishMessage,
   * PublishOrderedMessage}; `sqs.cpp:244` receiveMessage single-message
@@ -19,8 +21,9 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * stamps a timestamp-derived seq, PublishOrderedMessage an explicit one,
   * mirroring the reference's ordered variant). A claim is
   * `<message>.claim` holding the visibility expiry; claims are won by
-  * atomic create-exclusive (the same winner-election primitive as
-  * [[graft.sources.VersionedManifest]]), so concurrent consumers never
+  * an atomic claim WITH content (`ManifestIo.claimLocal`, the same
+  * winner-election primitive as [[graft.sources.LogManifest]]), so a
+  * claim never exists without its expiry and concurrent consumers never
   * double-deliver inside a visibility window. Driver-side by design:
   * queues coordinate JOBS, not rows — row traffic belongs in
   * OUTPUT/superfiles.
@@ -96,35 +99,32 @@ final class MessageQueue(root: String) {
       .sortBy(_.getName)
     msgs.iterator.flatMap { m =>
       val claim = new File(qDir(queue), m.getName + ".claim")
-      // a claim whose expiry can't be read yet (the O_EXCL-create →
-      // content-write window) counts as LIVE under a grace period —
-      // treating it as expired would let a racer double-claim
-      def expiry: Long =
-        try new String(Files.readAllBytes(claim.toPath), UTF_8).trim.toLong
-        catch { case _: Exception => claim.lastModified() + 60000L }
-      val live = claim.exists() && {
+      val live = claimExpiry(claim).exists { expiry =>
         expiry > now || !claim.delete() // expired claims removed in place
       }
-      if (live) None
+      // winner election: exactly one claimer links its claim into place;
+      // losers move on to the next message
+      if (live ||
+          !ManifestIo.claimLocal(claim, (now + visibilityMs).toString)) None
       else {
         try {
-          // winner election: O_CREAT|O_EXCL — exactly one claimer wins;
-          // losers move on to the next message
-          Files.write(claim.toPath,
-            (now + visibilityMs).toString.getBytes(UTF_8),
-            java.nio.file.StandardOpenOption.CREATE_NEW,
-            java.nio.file.StandardOpenOption.WRITE)
           // the message may have been deleted between listing and claiming
           if (!m.exists()) { claim.delete(); None }
           else Some(Received(queue, m.getName,
             new String(Files.readAllBytes(m.toPath), UTF_8)))
         } catch {
-          case _: java.nio.file.FileAlreadyExistsException => None
           case _: java.nio.file.NoSuchFileException => None
         }
       }
     }.nextOption()
   }
+
+  /** The visibility expiry a claim holds, or None when there is no claim
+    * (never claimed, acked, or removed by a peer since the listing).
+    */
+  private def claimExpiry(claim: File): Option[Long] =
+    try Some(new String(Files.readAllBytes(claim.toPath), UTF_8).trim.toLong)
+    catch { case _: java.nio.file.NoSuchFileException => None }
 
   /** Ack: delete the message (and its claim) — completes the delivery. */
   def deleteMessage(queue: String, receiptHandle: String): Boolean = {
@@ -140,12 +140,8 @@ final class MessageQueue(root: String) {
     Option(qDir(queue).listFiles()).getOrElse(Array.empty)
       .count { f =>
         f.getName.endsWith(".msg") && {
-          val claim = new File(qDir(queue), f.getName + ".claim")
-          !claim.exists() || {
-            val exp = try new String(Files.readAllBytes(claim.toPath), UTF_8).trim.toLong
-              catch { case _: Exception => claim.lastModified() + 60000L }
-            exp <= now
-          }
+          claimExpiry(new File(qDir(queue), f.getName + ".claim"))
+            .forall(_ <= now)
         }
       }
   }

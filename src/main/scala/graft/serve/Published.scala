@@ -275,11 +275,7 @@ final class Published(spark: SparkSession) {
   // roxie/ccd/ccdlistener.cpp — because under overload an unbounded queue
   // turns every response late, while shedding keeps ACCEPTED requests
   // inside a computable latency bound: queued/workers × service time).
-  // Two-level semaphores: `admit` bounds workers + queue (excess gets an
-  // immediate 503 + Retry-After, never a blocked socket), `execute`
-  // bounds in-flight query evaluation to the worker count.
-  @volatile private var admission: Option[(java.util.concurrent.Semaphore,
-    java.util.concurrent.Semaphore)] = None
+  // Excess gets an immediate 503 + Retry-After, never a blocked socket.
   private val shedCount = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Requests shed with 503 since construction. */
@@ -365,15 +361,14 @@ final class Published(spark: SparkSession) {
   /** Serve with a bounded worker pool: at most `workers` requests evaluate
     * concurrently, at most `maxQueue` more wait; beyond that the listener
     * responds 503 immediately (clean rejection, not unbounded queueing).
+    * The single-class form of [[servePrioritized]]: a query with no
+    * [[setPriority]] takes the low lane, and a queued request that cannot
+    * reach a worker before the lane deadline is shed 503 too.
     */
   def serveBounded(port: Int, maxRows: Int, cacheTtlMs: Long,
-      workers: Int, maxQueue: Int): Int = {
-    require(workers > 0 && maxQueue >= 0, "workers > 0, maxQueue >= 0")
-    admission = Some((
-      new java.util.concurrent.Semaphore(workers + maxQueue),
-      new java.util.concurrent.Semaphore(workers)))
-    serve(port, maxRows, cacheTtlMs)
-  }
+      workers: Int, maxQueue: Int): Int =
+    servePrioritized(port, maxRows, cacheTtlMs, workers,
+      highQueue = maxQueue, lowQueue = maxQueue)
 
   def serve(port: Int = 0, maxRows: Int = 10000): Int = synchronized {
     require(server.isEmpty, "already serving")
@@ -651,16 +646,7 @@ final class Published(spark: SparkSession) {
                 } else try handle() finally pa.gate.release()
               } finally admit.release()
           }
-          case None => admission match {
-            case None => handle()
-            case Some((admit, execute)) =>
-              if (!admit.tryAcquire())
-                shed("server busy: worker pool and queue full")
-              else try {
-                execute.acquire()
-                try handle() finally execute.release()
-              } finally admit.release()
-          }
+          case None => handle()
         }
       })
     srv.start()

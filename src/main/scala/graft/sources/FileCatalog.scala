@@ -14,10 +14,11 @@ import java.nio.charset.StandardCharsets.UTF_8
   *
   * Catalog state is a versioned manifest chain under
   * `<root>/_catalog/v%016d.txt`, committed through [[LogManifest]] —
-  * the [[VersionedManifest]] claim protocol (atomic claim-with-content
-  * winner election, `#END`-guarded reads, stale-claim expiry) with
-  * O(delta) commits: each mutation publishes its operation records and a
-  * snapshot compacts the chain periodically, so a Dali-scale catalog
+  * the one commit engine for driver-side metadata, shared with the
+  * [[Store]] KV service (atomic claim-with-content winner election,
+  * `#END`-guarded reads, stale-claim expiry) with O(delta) commits: each
+  * mutation publishes its operation records and a snapshot compacts the
+  * chain periodically, so a Dali-scale catalog
   * (~1 M names) commits a single registration in milliseconds instead of
   * re-rendering the world (CatalogProbe / SCALE_NOTES). POSIX rename is
   * NOT used for commits because it silently overwrites, which would drop

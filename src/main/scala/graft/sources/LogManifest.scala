@@ -3,15 +3,25 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Incremental-log manifest: the [[VersionedManifest]] commit protocol
-  * (atomic POSIX `link(2)` claim-with-content on local filesystems,
-  * create-exclusive election elsewhere, `#END`-guarded reads, stale-claim
-  * expiry) with O(delta) commits. Dali serves catalog load from an
+/** The commit engine for driver-side metadata — the [[FileCatalog]] and
+  * the [[Store]] KV service — so every metadata service shares one proven
+  * concurrency story. Dali serves catalog load from an
   * incrementally-updated in-memory SDS tree (`dali/base/dadfs.hpp:493`);
-  * this is the crash-safe file-backed analog: each version file is either
+  * this is the crash-safe file-backed analog.
   *
-  *  - `#FULL` — a complete state snapshot (also every legacy untagged
-  *    [[VersionedManifest]] file, so existing catalogs read unchanged), or
+  * State is a chain of version files under `dir`, `v<seq>.txt`, each
+  * terminated by an `#END` line. A commit atomically CLAIMS the next
+  * sequence number WITH its content ([[ManifestIo.claimAndWrite]]: POSIX
+  * `link(2)` on local filesystems — atomic AND exclusive;
+  * `FileSystem.create(overwrite=false)` elsewhere) and a lost
+  * race re-runs the commit function against the fresher state. Readers
+  * take the newest `#END`-complete chain, so a crashed half-written claim
+  * is invisible; committers expire such claims after `staleClaimMs` and
+  * claim past them. Each version file is either
+  *
+  *  - `#FULL` — a complete state snapshot (also every legacy untagged,
+  *    `#END`-terminated snapshot written by the retired full-snapshot
+  *    engine, so existing `_catalog` and `_store` dirs read unchanged), or
   *  - `#DELTA` — the committed operation records, one per line, replayed
   *    over the previous chain state.
   *
@@ -25,15 +35,18 @@ import org.apache.spark.sql.SparkSession
   * huge catalog is not re-rendered every few commits (single-op commits at
   * 1 M names stay O(delta); CatalogProbe measures this).
   *
-  * Concurrency contract is VersionedManifest's, with one delta-specific
-  * sharpening: on non-local filesystems a committer that stalls longer
-  * than `staleClaimMs` between claiming and finishing its stream may have
-  * its claim expired and its record completed LATE — into a chain built
-  * without it. Each `#DELTA` therefore carries the sequence number of the
-  * record its ops were applied against (`#DELTA <parent>`), and readers
-  * skip any delta whose parent does not match the replay cursor: the
-  * late completion degrades to the documented non-durable (lost) commit
-  * instead of replaying into every future read — where a conflicting op
+  * This is an optimistic-concurrency design for LOW-RATE metadata commits
+  * (file registrations, KV config writes) — not a data path.
+  *
+  * One delta-specific sharpening of the claim protocol: on non-local
+  * filesystems a committer that stalls longer than `staleClaimMs` between
+  * claiming and finishing its stream may have its claim expired and its
+  * record completed LATE — into a chain built without it. Each `#DELTA`
+  * therefore carries the sequence number of the record its ops were
+  * applied against (`#DELTA <parent>`), and readers skip any delta whose
+  * parent does not match the replay cursor: the late completion degrades
+  * to the documented non-durable (lost) commit instead of replaying into
+  * every future read — where a conflicting op
   * (e.g. a duplicate AddSub, ops re-validate on replay) would otherwise
   * make `load()` throw for ALL readers, a permanently poisoned chain. On
   * local filesystems `link(2)` makes claim and content one atomic event,
@@ -92,9 +105,9 @@ private[graft] final class LogManifest[S, O](
     */
   private def readRecord(
       v: Long): Either[Boolean, (Boolean, Option[Long], String)] = {
-    val p = versionFile(v)
-    if (!fs.exists(p)) return Left(true)
-    val in = fs.open(p)
+    // a file GC'd after listing may vanish before (or at) the open
+    val in = try fs.open(versionFile(v))
+      catch { case _: java.io.FileNotFoundException => return Left(true) }
     val text =
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
@@ -114,7 +127,7 @@ private[graft] final class LogManifest[S, O](
         }, rest))
       } else if (body.startsWith(FullTag))
         Right((true, None, body.stripPrefix(FullTag).stripPrefix("\n")))
-      else Right((true, None, body)) // legacy VersionedManifest snapshot
+      else Right((true, None, body)) // legacy untagged snapshot
     }
   }
 
@@ -228,13 +241,6 @@ private[graft] final class LogManifest[S, O](
   private def terminate(content: String): String =
     if (content.isEmpty) EndMarker else content + "\n" + EndMarker
 
-  /** Atomic claim WITH content — the shared [[ManifestIo]] protocol
-    * (local filesystems claim via `link(2)` so content and claim are one
-    * atomic event, others use create-exclusive).
-    */
-  private def claimAndWrite(p: Path, content: String): Boolean =
-    ManifestIo.claimAndWrite(fs, p, content)
-
   /** Load-modify-commit loop: `f` reads the current state and returns the
     * operation records to commit; ops are validated/applied by `applyOp`
     * (throws abort the commit, nothing is written) and a lost claim race
@@ -242,11 +248,12 @@ private[graft] final class LogManifest[S, O](
     */
   def commit(f: S => Seq[O]): S = {
     fs.mkdirs(dir)
-    // two budgets (see VersionedManifest.commit): lost claim RACES count
-    // against the 1000-attempt contention bound; waiting out a peer's
-    // mid-write claim is bounded by its own deadline just past
-    // staleClaimMs — 20 ms sleeps must not exhaust the race budget before
-    // the 60 s expiry can fire
+    // two budgets: lost claim RACES are genuine contention and count
+    // against the 1000-attempt bound; waiting out a peer's mid-write claim
+    // is NOT contention and is bounded by its own deadline just past
+    // staleClaimMs — counting 20 ms sleeps against the race budget would
+    // exhaust it (~20 s) before the 60 s expiry ever fired, turning one
+    // crashed non-local committer into hard commit failures for all peers
     var attempts = 0
     val waitDeadline = System.currentTimeMillis() + staleClaimMs + 10000
     while (true) {
@@ -286,7 +293,7 @@ private[graft] final class LogManifest[S, O](
           else DeltaTag + " " + lastApplied + (if (ops.isEmpty) ""
             else "\n" + ops.map(renderOp).mkString("\n")))
         val seq = math.max(curSeq, newest) + 1
-        if (claimAndWrite(versionFile(seq), content)) {
+        if (ManifestIo.claimAndWrite(fs, versionFile(seq), content)) {
           val base = if (asFull) seq else curBase
           cacheAdvance((seq, base,
             if (asFull) 0 else opsSince + ops.size, seq, next))

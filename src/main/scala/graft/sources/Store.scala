@@ -13,13 +13,14 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * reference's response contracts (`was_found`, `was_deleted`, set
   * returns success).
   *
-  * Spark-native shape: the state is one [[VersionedManifest]] under
-  * `<root>/_store` — the SAME commit engine as the [[FileCatalog]], so
-  * concurrent writers from any process resolve through atomic version
-  * claims, not advisory locks. On top of that engine, [[setExclusive]]
-  * gives the create-exclusive winner election the reference expresses as
-  * CreateStore's `already_present` contract (Store.ecl:197): exactly one
-  * of N racing writers observes `true`.
+  * Spark-native shape: the state is a [[LogManifest]] chain under
+  * `<root>/_store` — the ONE commit engine for driver-side metadata, the
+  * same as the [[FileCatalog]]'s, so concurrent writers from any process
+  * resolve through atomic version claims, not advisory locks, and each
+  * write commits only its own `Put`/`Del` records. On top of that engine,
+  * [[setExclusive]] gives the create-exclusive winner election the
+  * reference expresses as CreateStore's `already_present` contract
+  * (Store.ecl:197): exactly one of N racing writers observes `true`.
   *
   * Values are for metadata-sized payloads (the reference's WsStore caps
   * value size per store — `MaxValSize`); datasets belong in the catalog,
@@ -34,18 +35,48 @@ final class Store(spark: SparkSession, root: String) {
   private def parse(text: String): State =
     text.split("\n").filter(_.startsWith("K\t")).map { l =>
       val p = l.split("\t", -1)
-      (p(1), p(2)) -> new String(
-        java.util.Base64.getDecoder.decode(p(3)), UTF_8)
+      (p(1), p(2)) -> unb64(p(3))
     }.toMap
 
   private def render(s: State): String =
     s.toSeq.sortBy(_._1).map { case ((ns, k), v) =>
-      s"K\t$ns\t$k\t${java.util.Base64.getEncoder.encodeToString(v.getBytes(UTF_8))}"
+      s"K\t$ns\t$k\t${b64(v)}"
     }.mkString("\n")
 
-  private val manifest = new VersionedManifest[State](spark,
+  // operation records: P\t<ns>\t<key>\t<b64> | D\t<ns>\t<key>
+  private sealed trait Op
+  private final case class Put(ns: String, key: String, value: String)
+    extends Op
+  private final case class Del(ns: String, key: String) extends Op
+
+  private def b64(v: String): String =
+    java.util.Base64.getEncoder.encodeToString(v.getBytes(UTF_8))
+
+  private def unb64(s: String): String =
+    new String(java.util.Base64.getDecoder.decode(s), UTF_8)
+
+  private def renderOp(op: Op): String = op match {
+    case Put(ns, k, v) => s"P\t$ns\t$k\t${b64(v)}"
+    case Del(ns, k) => s"D\t$ns\t$k"
+  }
+
+  private def parseOp(line: String): Op = {
+    val p = line.split("\t", -1)
+    p(0) match {
+      case "P" => Put(p(1), p(2), unb64(p(3)))
+      case "D" => Del(p(1), p(2))
+      case other => sys.error(s"unknown store op tag: $other")
+    }
+  }
+
+  private def applyOp(s: State, op: Op): State = op match {
+    case Put(ns, k, v) => s + ((ns, k) -> v)
+    case Del(ns, k) => s - ((ns, k))
+  }
+
+  private val manifest = new LogManifest[State, Op](spark,
     new org.apache.hadoop.fs.Path(root, "_store").toString,
-    Map.empty, parse, render)
+    Map.empty, parse, render, parseOp, renderOp, applyOp, _.size)
 
   private def check(s: String, what: String): String = {
     require(s.nonEmpty && !s.exists(c => c == '\t' || c == '\n'),
@@ -56,7 +87,7 @@ final class Store(spark: SparkSession, root: String) {
   /** SetKeyValue (Store.ecl:356): upsert, last committed write wins. */
   def set(namespace: String, key: String, value: String): Unit = {
     check(namespace, "namespace"); check(key, "key")
-    manifest.commit(_ + ((namespace, key) -> value))
+    manifest.commit(_ => Seq(Put(namespace, key, value)))
   }
 
   /** Create-exclusive set: succeeds iff the key is ABSENT at commit time
@@ -68,13 +99,13 @@ final class Store(spark: SparkSession, root: String) {
   def setExclusive(namespace: String, key: String, value: String): Boolean = {
     check(namespace, "namespace"); check(key, "key")
     val k = (namespace, key)
-    // the mutate fn is replayed on a lost race against the fresher state,
+    // the commit fn is re-run on a lost race against the fresher state,
     // so "was it absent when MY commit won" is exactly "absent in the
-    // state my winning render was built from"
+    // state my winning records were built from"
     var won = false
     manifest.commit { s =>
-      if (s.contains(k)) { won = false; s }
-      else { won = true; s + (k -> value) }
+      won = !s.contains(k)
+      if (won) Seq(Put(namespace, key, value)) else Nil
     }
     won
   }
@@ -87,7 +118,10 @@ final class Store(spark: SparkSession, root: String) {
   def delete(namespace: String, key: String): Boolean = {
     val k = (namespace, key)
     var existed = false
-    manifest.commit { s => existed = s.contains(k); s - k }
+    manifest.commit { s =>
+      existed = s.contains(k)
+      if (existed) Seq(Del(namespace, key)) else Nil
+    }
     existed
   }
 
@@ -108,9 +142,9 @@ final class Store(spark: SparkSession, root: String) {
   def deleteNamespace(namespace: String): Boolean = {
     var existed = false
     manifest.commit { s =>
-      val hit = s.keys.filter(_._1 == namespace)
+      val hit = s.keys.filter(_._1 == namespace).toSeq.sorted
       existed = hit.nonEmpty
-      s -- hit
+      hit.map { case (ns, k) => Del(ns, k) }
     }
     existed
   }

@@ -3,7 +3,7 @@ package graft
 import graft.sources.{FileCatalog, LogManifest}
 
 /** The incremental-log manifest engine: O(delta) commits over the
-  * VersionedManifest claim protocol — record tagging, compaction,
+  * ManifestIo claim protocol — record tagging, compaction,
   * legacy-snapshot interop, crash-claim handling, GC-with-chain, and the
   * concurrent-committer election (SURVEY §2.13 Std.File catalog; the Dali
   * analog is the incrementally-updated SDS tree `dali/base/dadfs.hpp:493`

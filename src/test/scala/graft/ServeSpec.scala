@@ -1121,49 +1121,58 @@ class ServeSpec extends SparkSpec {
 
   test("an admitted low request that cannot reach a worker before the lane " +
       "deadline is shed 503, freeing its handler thread (no unbounded park)") {
-    val pub = new Published(spark)
     val oneRow = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("ok",
         org.apache.spark.sql.types.StringType)))
-    pub.publish("park_q") { (s, _) =>
-      // driver-side sleep: job-group cancellation cannot interrupt it, so
-      // the single worker stays occupied PAST the lane-wait deadline
-      Thread.sleep(6500)
-      s.createDataFrame(java.util.Collections.singletonList(
-        org.apache.spark.sql.Row("y")), oneRow)
+    // serveBounded is the single-class form of servePrioritized: with no
+    // setPriority call its requests take the low lane and share its deadline
+    val servers = Seq[(String, Published => Int)](
+      "servePrioritized" -> (_.servePrioritized(0, 10, cacheTtlMs = 0,
+        workers = 1, highQueue = 2, lowQueue = 2)),
+      "serveBounded" -> (_.serveBounded(0, 10, cacheTtlMs = 0,
+        workers = 1, maxQueue = 2)))
+    servers.foreach { case (how, startServing) =>
+      val pub = new Published(spark)
+      pub.publish("park_q") { (s, _) =>
+        // driver-side sleep: job-group cancellation cannot interrupt it, so
+        // the single worker stays occupied PAST the lane-wait deadline
+        Thread.sleep(6500)
+        s.createDataFrame(java.util.Collections.singletonList(
+          org.apache.spark.sql.Row("y")), oneRow)
+      }
+      pub.withRequestTimeout(200) // lane wait = 200 + 5000 ms slack
+      val port = startServing(pub)
+      def doCall(): Int = {
+        val conn = new java.net.URI(
+          s"http://127.0.0.1:$port/query/park_q").toURL
+          .openConnection().asInstanceOf[java.net.HttpURLConnection]
+        conn.setReadTimeout(30000)
+        val code = conn.getResponseCode
+        val is = if (code >= 400) conn.getErrorStream else conn.getInputStream
+        try scala.io.Source.fromInputStream(is, "UTF-8").mkString
+        finally is.close()
+        code
+      }
+      try {
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+        val occupier = pool.submit(new java.util.concurrent.Callable[Int] {
+          def call(): Int = doCall()
+        })
+        Thread.sleep(400) // occupier holds the only worker
+        val t0 = System.nanoTime()
+        val queued = doCall() // admitted (queue of 2) → parks at the gate
+        val waitedMs = (System.nanoTime() - t0) / 1000000
+        // shed at the lane deadline (~5.2 s), NOT after the occupier's 6.5 s
+        assert(queued == 503, s"$how: queued low request not shed: $queued")
+        assert(waitedMs >= 5000 && waitedMs < 6300,
+          s"$how: shed outside the lane-deadline window: ${waitedMs}ms")
+        val (_, shedL) = pub.shedStatsByClass
+        assert(shedL >= 1, s"$how: lane-deadline shed not counted: $shedL")
+        assert(pub.shedStats >= 1, s"$how: shed not counted: ${pub.shedStats}")
+        occupier.get() // the occupier's own verdict is its own business
+        pool.shutdown()
+      } finally pub.stopServing()
     }
-    pub.withRequestTimeout(200) // lane wait = 200 + 5000 ms slack
-    val port = pub.servePrioritized(0, 10, cacheTtlMs = 0,
-      workers = 1, highQueue = 2, lowQueue = 2)
-    def doCall(): Int = {
-      val conn = new java.net.URI(
-        s"http://127.0.0.1:$port/query/park_q").toURL
-        .openConnection().asInstanceOf[java.net.HttpURLConnection]
-      conn.setReadTimeout(30000)
-      val code = conn.getResponseCode
-      val is = if (code >= 400) conn.getErrorStream else conn.getInputStream
-      try scala.io.Source.fromInputStream(is, "UTF-8").mkString
-      finally is.close()
-      code
-    }
-    try {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      val occupier = pool.submit(new java.util.concurrent.Callable[Int] {
-        def call(): Int = doCall()
-      })
-      Thread.sleep(400) // occupier holds the only worker
-      val t0 = System.nanoTime()
-      val queued = doCall() // admitted (lowQueue=2) → parks at the gate
-      val waitedMs = (System.nanoTime() - t0) / 1000000
-      // shed at the lane deadline (~5.2 s), NOT after the occupier's 6.5 s
-      assert(queued == 503, s"queued low request not shed: $queued")
-      assert(waitedMs >= 5000 && waitedMs < 6300,
-        s"shed outside the lane-deadline window: ${waitedMs}ms")
-      val (_, shedL) = pub.shedStatsByClass
-      assert(shedL >= 1, s"lane-deadline shed not counted: $shedL")
-      occupier.get() // the occupier's own verdict is its own business
-      pool.shutdown()
-    } finally pub.stopServing()
   }
 
   test("SOAPCALL drives real per-row HTTP against the published loopback") {
