@@ -1,6 +1,6 @@
 package graft.model
 
-import graft.ops.{DedupRollup, Sorting}
+import graft.ops.{DedupRollup, Positions, Sorting}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -45,27 +45,26 @@ final case class GraftFrame(df: DataFrame, groupKeys: Seq[String] = Nil,
     * Throws IllegalStateException naming the first violating partition.
     */
   def checkSorted(keys: String*): GraftFrame = {
-    val proj = df.select(keys.map(col): _*)
     val ord = GraftFrame.rowOrdering
-    val bounds = proj.rdd.mapPartitionsWithIndex { (idx, it) =>
-      if (!it.hasNext) Iterator.empty
-      else {
-        var prev = it.next(); val first = prev; var ok = true
+    // non-empty partitions in order: (index, first, last, internally sorted)
+    val bounds = Positions.partitionSummaries(df.select(keys.map(col): _*).rdd) { it =>
+      it.nextOption().map { first =>
+        var prev = first; var ok = true
         while (it.hasNext && ok) {
           val cur = it.next()
           if (ord.compare(prev, cur) > 0) ok = false
           prev = cur
         }
-        Iterator.single((idx, first, prev, ok))
+        (first, prev, ok)
       }
-    }.collect().sortBy(_._1)
+    }.zipWithIndex.collect { case (Some((f, l, ok)), i) => (i, f, l, ok) }
     bounds.find(!_._4).foreach { case (idx, _, _, _) =>
       throw new IllegalStateException(
         s"SORTED($keys) violated inside partition $idx")
     }
     bounds.sliding(2).foreach {
-      case Array((i, _, last, _), (j, first, _, _)) =>
-        if (GraftFrame.rowOrdering.compare(last, first) > 0)
+      case Seq((i, _, last, _), (j, first, _, _)) =>
+        if (ord.compare(last, first) > 0)
           throw new IllegalStateException(
             s"SORTED($keys) violated at partition boundary $i/$j")
       case _ => ()

@@ -35,7 +35,7 @@ object DedupRollup {
     // key-adjacency in BOTH scan passes (see Positions.scanSorted contract)
     Positions.scanSorted(proj, order ++ keyCols.map(col), proj.schema)(
       Positions.keyRunSummary(keyIdx))(
-      (Option.empty[Seq[Any]], 0L))(Positions.advanceKeyRun) {
+      _.scanLeft((Option.empty[Seq[Any]], 0L))(Positions.advanceKeyRun)) {
       case ((prevKeys, _), rows) =>
         var prev = prevKeys
         rows.filter { r =>
@@ -85,7 +85,7 @@ object DedupRollup {
         runCol, org.apache.spark.sql.types.LongType, nullable = false))
     Positions.scanSorted(proj, order ++ keyCols.map(col), outSchema)(
       Positions.keyRunSummary(keyIdx))(
-      (Option.empty[Seq[Any]], 0L))(Positions.advanceKeyRun) {
+      _.scanLeft((Option.empty[Seq[Any]], 0L))(Positions.advanceKeyRun)) {
       case ((prevKeys, runsBefore), rows) =>
         var prev = prevKeys
         var run = runsBefore

@@ -1,11 +1,13 @@
 package graft.ops
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import scala.reflect.ClassTag
 
-/** Scale-safe global-order primitives.
+/** Scale-safe global-order primitives, and the only copy of the two-pass
+  * per-partition scan.
   *
   * The reference's positional operators (SAMPLE/ENTH/QUANTILE/ds[n],
   * PROJECT COUNTER, COMBINE, adjacent DEDUP/ROLLUP, filepos assignment —
@@ -19,24 +21,39 @@ import scala.reflect.ClassTag
   * sort (sampled split points, same strategy as `thorlcr/msort/tsortm.cpp`)
   * followed by a TWO-PASS per-partition scan:
   *
-  *  - pass 1 computes a tiny per-partition summary (row count, boundary keys)
-  *    — one row per partition collected to the driver;
-  *  - the driver folds summaries in partition order into each partition's
-  *    initial state (cumulative offset, previous partition's last key);
+  *  - pass 1 ([[partitionSummaries]]) computes a tiny per-partition summary
+  *    (row count, boundary keys) — one value per partition collected to the
+  *    driver in partition order;
+  *  - the driver's `plan` step ([[scanSorted]]) turns all summaries at once
+  *    into each partition's initial state (cumulative offset, previous
+  *    partition's last key, quantile boundaries);
   *  - pass 2 re-scans each partition with its initial state broadcast.
   *
   * Both passes share the same shuffle stage (same RDD lineage), so the sort
   * shuffle is written once; only the post-shuffle scan runs twice. Every
   * stage is parallel across the cluster; driver traffic is O(#partitions).
+  * Every other per-partition summary pass in the engine (the SORTED assert
+  * in `GraftFrame.checkSorted`, TeraSort's validation) calls
+  * [[partitionSummaries]] too.
   */
 object Positions {
 
   private def sortedByRange(df: DataFrame, order: Seq[Column]): DataFrame =
     df.repartitionByRange(order: _*).sortWithinPartitions(order: _*)
 
+  /** Pass 1: `summarize` each partition of `rdd` — one Spark job, one value
+    * per partition, returned in partition order (`collect` concatenates
+    * task results by partition index).
+    */
+  private[graft] def partitionSummaries[S: ClassTag](rdd: RDD[Row])(
+      summarize: Iterator[Row] => S): IndexedSeq[S] =
+    rdd.mapPartitions(it => Iterator.single(summarize(it))).collect()
+      .toIndexedSeq
+
   /** Generic two-pass ordered scan: `summarize` each sorted partition,
-    * fold summaries on the driver with `advance` (giving the state each
-    * partition starts from), then `emit` rows with that state.
+    * `plan` the state every partition starts from out of all summaries
+    * (callers folding left pass `_.scanLeft(init)(advance)`), then `emit`
+    * each partition's rows with its state.
     *
     * Determinism contract: both passes share one RDD lineage (one shuffle
     * write, deterministic range bounds), but shuffle-read block order can
@@ -47,20 +64,16 @@ object Positions {
     * key-scan entry points below append the key columns to the sort for
     * exactly this reason.
     */
-  def scanSorted[S: ClassTag, T: ClassTag](df: DataFrame, order: Seq[Column],
+  def scanSorted[S: ClassTag, T](df: DataFrame, order: Seq[Column],
       outSchema: StructType)(
       summarize: Iterator[Row] => S)(
-      initial: T)(
-      advance: (T, S) => T)(
+      plan: IndexedSeq[S] => IndexedSeq[T])(
       emit: (T, Iterator[Row]) => Iterator[Row]): DataFrame = {
     val spark = df.sparkSession
     val rdd = sortedByRange(df, order).rdd
-    val summaries = rdd
-      .mapPartitionsWithIndex((i, it) => Iterator((i, summarize(it))))
-      .collect().sortBy(_._1).map(_._2)
-    // inits(i) = state accumulated over partitions 0..i-1
-    val inits = summaries.scanLeft(initial)(advance)
-    val bc = spark.sparkContext.broadcast(inits)
+    // element i = the state partition i starts from
+    val bc = spark.sparkContext.broadcast(
+      plan(partitionSummaries(rdd)(summarize)))
     val out = rdd.mapPartitionsWithIndex((i, it) => emit(bc.value(i), it))
     spark.createDataFrame(out, outSchema)
   }
@@ -74,68 +87,58 @@ object Positions {
     val outSchema = StructType(df.schema.fields :+
       StructField(posCol, LongType, nullable = false))
     scanSorted(df, order, outSchema)(
-      it => { var n = 0L; while (it.hasNext) { it.next(); n += 1 }; n })(
-      0L)(_ + _) { (offset, rows) =>
+      countRows)(_.scanLeft(0L)(_ + _)) { (offset, rows) =>
       var i = offset
       rows.map { r => i += 1; Row.fromSeq(r.toSeq :+ i) }
     }
   }
 
-  /** QUANTILE fused into the two-pass scan (r20, guide §2.4 — remove a
-    * pass): the former lowering ran a SEPARATE `df.count()` — one full
-    * input scan whose only product was the total — before the range sort,
-    * then joined the positioned rows against a broadcast boundary table.
-    * But pass 1's per-partition summaries already yield the total, so the
-    * driver can compute the n−1 boundary positions between the passes and
-    * pass 2 can emit ONLY boundary rows: partitions holding no boundary
-    * return without consuming their shuffle input, and a partition stops
-    * pulling rows once its last boundary is emitted. One shuffle, no extra
-    * input scan, no join.
+  /** QUANTILE as one [[scanSorted]] call: pass 1 counts each partition,
+    * the `plan` step turns the counts into offsets, the total and each
+    * partition's boundary positions, and pass 2 emits ONLY boundary rows —
+    * a partition holding no boundary returns without consuming its shuffle
+    * input, and the others stop pulling rows after their last boundary.
+    * One shuffle, no separate count, no join.
     *
-    * Contract (same as the join shape it replaces): rows at position
-    * ceil(q·total/n), q = 1..n−1, each emitted once PER quantile index
-    * that lands on it (total < n puts several indices on one row); a
-    * pre-existing `quantileCol` column participates in `order` but is
-    * replaced in the output; output columns = df's (minus `quantileCol`)
-    * in order, then `quantileCol`.
+    * Contract: rows at position ceil(q·total/n), q = 1..n−1, each emitted
+    * once PER quantile index that lands on it (total < n puts several
+    * indices on one row); a pre-existing `quantileCol` column participates
+    * in `order` but is replaced in the output; output columns = df's
+    * (minus `quantileCol`) in order, then `quantileCol`.
     */
   private[ops] def quantileRows(df: DataFrame, n: Int, order: Seq[Column],
       quantileCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val rdd = sortedByRange(df, order).rdd
-    val counts = rdd
-      .mapPartitionsWithIndex((i, it) =>
-        Iterator((i, { var c = 0L; while (it.hasNext) { it.next(); c += 1 }; c })))
-      .collect().sortBy(_._1).map(_._2)
-    val offsets = counts.scanLeft(0L)(_ + _)
-    val total = offsets.last
-    // boundary positions, ascending; (q·total + n − 1) div n is exact
-    // integer ceil(q·total/n) for any total below 2^63/n
-    val qp: Array[(Long, Int)] =
-      (1 until n).map(q => ((q.toLong * total + n - 1) / n, q)).toArray
     val dropIdx: Int =
       df.schema.fields.indexWhere(_.name == quantileCol) // -1 if absent
     val outSchema = StructType(
       df.schema.fields.filterNot(_.name == quantileCol) :+
-        StructField(quantileCol, org.apache.spark.sql.types.IntegerType,
-          nullable = false))
-    val bc = spark.sparkContext.broadcast((offsets, qp))
-    val out = rdd.mapPartitionsWithIndex { (i, it) =>
-      val (offs, qps) = bc.value
-      val lo = offs(i); val hi = offs(i + 1)
-      // boundaries inside (lo, hi] — this partition's 1-based global ranks
-      var j = qps.indexWhere(_._1 > lo)
-      val end = { val k = qps.indexWhere(_._1 > hi); if (k < 0) qps.length else k }
-      if (j < 0 || j >= end) Iterator.empty
+        StructField(quantileCol, IntegerType, nullable = false))
+    scanSorted(df, order, outSchema)(countRows) { counts =>
+      val offsets = counts.scanLeft(0L)(_ + _)
+      val total = offsets.last
+      // boundary positions, ascending; (q·total + n − 1) div n is exact
+      // integer ceil(q·total/n) for any total below 2^63/n
+      var rest = (1 until n).map(q => ((q.toLong * total + n - 1) / n, q))
+      // partition i: its offset and the boundaries inside (lo, hi], its
+      // 1-based global ranks
+      counts.indices.map { i =>
+        val (mine, later) = rest.span(_._1 <= offsets(i + 1))
+        rest = later
+        (offsets(i), mine)
+      }
+    } { case ((lo, qps), it) =>
+      // a partition holding no boundary leaves its shuffle input unread;
+      // the others stop pulling rows after their last boundary
+      if (qps.isEmpty) Iterator.empty
       else {
-        var p = lo
-        it.takeWhile(_ => j < end).flatMap { r =>
+        var p = lo; var j = 0
+        it.takeWhile(_ => j < qps.length).flatMap { r =>
           p += 1
-          if (j < end && qps(j)._1 == p) {
+          if (qps(j)._1 == p) {
             val s = r.toSeq
             val base = if (dropIdx >= 0) s.patch(dropIdx, Nil, 1) else s
             val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
-            while (j < end && qps(j)._1 == p) {
+            while (j < qps.length && qps(j)._1 == p) {
               rows += Row.fromSeq(base :+ qps(j)._2); j += 1
             }
             rows
@@ -143,27 +146,27 @@ object Positions {
         }
       }
     }
-    spark.createDataFrame(out, outSchema)
   }
 
-  /** Grouped QUANTILE fused into the ordered scan (r20, guide §2.1/§2.4):
-    * the former lowering positioned rows, aggregated per-group (start,
-    * count) stats, and JOINED them back — at many-group scale that join is
-    * a second input-sized exchange (the positioned rows leave the scan as
-    * an ExistingRDD with no recognized ordering, so a sort-merge join
-    * re-shuffles everything), plus one extra post-shuffle scan to feed the
-    * stats aggregate. Groups are CONTIGUOUS under the (groupKeys ++ order)
-    * range sort, so per-row group stats need only (a) each partition's
-    * local run lengths and (b) how its first/last runs continue into
-    * neighboring partitions. Pass 1 collects an O(1)-per-partition summary
-    * (count, first/last key, first/last run length); the driver stitches
-    * boundary runs into carry-in/tail-carry row counts; pass 2 zips the
-    * sorted partition with itself — one keys-only iterator records the
-    * local run lengths (8 bytes per local group, the only per-task state),
-    * the other emits boundary rows. No aggregate exchange, no join, no
-    * second input-sized shuffle.
+  /** Grouped QUANTILE as a fused ordered scan: no per-group stats
+    * aggregate joined back onto positioned rows (at many-group scale that
+    * join is a second input-sized exchange). Groups are CONTIGUOUS under
+    * the (groupKeys ++ order) range sort, so per-row group stats need only
+    * (a) each partition's local run lengths and (b) how its first/last runs
+    * continue into neighboring partitions. Pass 1 ([[partitionSummaries]])
+    * collects an O(1)-per-partition summary (count, first/last key,
+    * first/last run length); the driver stitches boundary runs into
+    * carry-in/tail-carry row counts; pass 2 zips the sorted partition with
+    * itself — one keys-only iterator records the local run lengths (8
+    * bytes per local group, the only per-task state), the other emits
+    * boundary rows.
     *
-    * Output contract (same as the join shape): per group of c rows the row
+    * Pass 2 is this keys-then-rows `zipPartitions`, not [[scanSorted]]'s
+    * single iterator: a row's quantiles need its run's full length before
+    * the run's first row is emitted, and buffering a run instead would
+    * hold up to one partition of external Rows in the task.
+    *
+    * Output contract: per group of c rows the row
     * at rank ceil(q·c/n) for q = 1..n−1 (one output row PER index when
     * several land on one row), plus rank 1 as 0 under `first` and rank c
     * as n under `last`; a pre-existing `quantileCol` is replaced in place,
@@ -183,7 +186,7 @@ object Positions {
     val rdd = sortedByRange(proj,
       keyNames.map(org.apache.spark.sql.functions.col) ++ order).rdd
     // pass 1: O(1)-per-partition boundary summary
-    val sums = rdd.mapPartitionsWithIndex { (i, it) =>
+    val sums = partitionSummaries(rdd) { it =>
       var c = 0L
       var fk: Seq[Any] = null; var fr = 0L
       var lk: Seq[Any] = null; var lr = 0L
@@ -194,8 +197,8 @@ object Positions {
         if (lk == fk) fr += 1 // sorted ⇒ fk can only be the leading run
         lr += 1
       }
-      Iterator((i, (c, fk, fr, lk, lr)))
-    }.collect().sortBy(_._1).map(_._2)
+      (c, fk, fr, lk, lr)
+    }
     // driver stitch: carryIn(i) = rows of partition i's FIRST group lying
     // in earlier partitions; tailCarry(i) = rows of its LAST group lying in
     // later partitions. Sorted order ⇒ firstKey == lastKey iff the whole
@@ -230,8 +233,7 @@ object Positions {
     val dropIdx: Set[Int] = keyIdx.toSet
     val kept = proj.schema.fields.zipWithIndex
       .filterNot { case (_, i) => dropIdx(i) }
-    val qField = StructField(quantileCol,
-      org.apache.spark.sql.types.IntegerType, nullable = false)
+    val qField = StructField(quantileCol, IntegerType, nullable = false)
     val existingQ = kept.indexWhere(_._1.name == quantileCol)
     val outSchema = StructType(
       if (existingQ >= 0) kept.map(_._1).updated(existingQ, qField)
@@ -332,10 +334,15 @@ object Positions {
       }
     scanSorted[Any, Any](wv, order, outSchema)(
       it => it.foldLeft(zero)((acc, r) => plus(acc, valueOf(r))))(
-      zero)(plus) { (offset, rows) =>
+      _.scanLeft(zero)(plus)) { (offset, rows) =>
       var acc = offset
       rows.map { r => acc = plus(acc, valueOf(r)); Row.fromSeq(r.toSeq.init :+ acc) }
     }
+  }
+
+  /** Pass-1 summary of the positional scans: the partition's row count. */
+  private def countRows(it: Iterator[Row]): Long = {
+    var n = 0L; while (it.hasNext) { it.next(); n += 1 }; n
   }
 
   /** Normalize a key value so that Scala equality on key Seqs groups rows

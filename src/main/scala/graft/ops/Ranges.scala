@@ -173,7 +173,7 @@ object Ranges {
           case 1 => e += 1; case 2 => s += 1; case _ => ()
         }
         (s, e)
-      })((0L, 0L))((st, p) => (st._1 + p._1, st._2 + p._2)) { (init, rows) =>
+      })(_.scanLeft((0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2))) { (init, rows) =>
       var s = init._1; var e = init._2
       rows.flatMap { r =>
         r.getInt(1) match {

@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * `orderBy.limit(n)` which Catalyst executes as TakeOrderedAndProject —
   * per-partition heaps + driver merge, no global shuffle. The positional ops
   * (SAMPLE/ENTH/QUANTILE/ds[n]) require a defined global order; they use
-  * [[Positions.withGlobalPosition]] — a range-partitioned sort plus
-  * broadcast per-partition offsets — so every stage stays parallel (never a
+  * the [[Positions]] two-pass scan — a range-partitioned sort plus
+  * broadcast per-partition state — so every stage stays parallel (never a
   * single-partition window).
   */
 object Sorting {
@@ -142,12 +142,9 @@ object Sorting {
     * with the division index.
     */
   def quantile(df: DataFrame, n: Int, keys: Seq[Column]): DataFrame =
-    // r20: the total now comes from pass 1 of the positioning scan itself
-    // (one per-partition-count row per partition to the driver) instead of
-    // a SEPARATE df.count() — that count was a full input scan at every SF
-    // — and pass 2 emits only the boundary rows, replacing the broadcast
-    // position join. Same output contract, including the pre-existing
-    // `quantile` column replacement (it still participates in `keys`).
+    // the total comes from pass 1 of the scan itself; pass 2 emits only
+    // the boundary rows. A pre-existing `quantile` column still takes part
+    // in `keys` and is replaced in the output.
     Positions.quantileRows(df, n, keys, "quantile")
 
   /** Grouped QUANTILE (TAKquantile on a GROUPED dataset — per-group
@@ -160,27 +157,18 @@ object Sorting {
     * ONE task — with few groups (order status, language, country) that is
     * a parallelism collapse at scale (3 tasks sorting 10⁹ rows each at
     * 100 TB). Instead: one RANGE sort on (groupKeys ++ order) — parallel
-    * across all partitions regardless of group count
-    * ([[Positions.withGlobalPosition]]) — then per-group rank = global
-    * position − the group's start offset, joined from a slim per-group
-    * (start, count) aggregate that Spark broadcasts when groups are few.
+    * across all partitions regardless of group count — and a fused scan
+    * ([[Positions.quantileRowsGrouped]]) that derives each group's count
+    * from local run lengths plus O(1)-per-partition boundary stitching.
+    * Row p of a group of c rows is the boundary for EXACTLY the integer
+    * quantiles q with ceil(q·c/n) = p, i.e. q ∈ (n(p−1)/c, np/c], computed
+    * with exact integer div, so the scan stays O(N + output). A null group
+    * key is a group of its own, exactly as groupBy treats it; empty
+    * groupKeys = one global group.
     */
   def quantileGrouped(df: DataFrame, n: Int, groupKeys: Seq[Column],
       order: Seq[Column], first: Boolean = false,
       last: Boolean = false): DataFrame =
-    // Inverse mapping, no amplification: row p of a group of c rows is the
-    // boundary for EXACTLY the integer quantiles q with ceil(q·c/n) = p,
-    // i.e. q ∈ (n(p−1)/c, np/c] — an interval computable per row with
-    // exact integer div (no double CEIL at 100 TB row counts), so each row
-    // emits only its own (usually empty) quantile list and the scan stays
-    // O(N + output). r20: the per-group (start, count) stats no longer come
-    // from a groupBy + join back onto the positioned rows — groups are
-    // contiguous under the range sort, so the fused scan derives them from
-    // local run lengths plus O(1)-per-partition boundary stitching
-    // ([[Positions.quantileRowsGrouped]]); the stats exchange, the join
-    // (input-sized at many-group scale), and one post-shuffle pass are
-    // gone. A null group key is a group of its own, exactly as groupBy
-    // treats it; empty groupKeys = one global group.
     Positions.quantileRowsGrouped(df, n, groupKeys, order, first, last,
       "quantile")
 

@@ -29,26 +29,10 @@ import org.apache.spark.sql.functions._
   * task's local sort — the same bound as any per-key ordered fold
   * (ITERATE, session windows), and spill-safe because Spark's window
   * buffers only the carry column here, not the whole partition payload.
+  * This is the only as-of lowering; DifferentialSpec pins the one-key
+  * skew shape against a naive per-row scan.
   */
 object Temporal {
-
-  /** Internal column names the as-of lowerings stage on the merged
-    * stream; a left input carrying any of them would collide after the
-    * union, and `matched_ts`/payload names collide in the final select.
-    */
-  private val AsofReserved =
-    Set("__asof_p", "__asof_ts", "__asof_side", "__asof_m", "__asof_ok")
-
-  private def checkAsofColumns(leftCols: Seq[String],
-      payload: Seq[String]): Unit = {
-    val reserved = leftCols.filter(AsofReserved)
-    require(reserved.isEmpty,
-      s"left input carries reserved as-of columns: ${reserved.mkString(", ")}")
-    val clash = leftCols.filter(c => c == "matched_ts" || payload.contains(c))
-    require(clash.isEmpty,
-      "left columns collide with as-of output columns (matched_ts / " +
-        s"payload): ${clash.mkString(", ")} — rename before joining")
-  }
 
   /** Left as-of join (backward): every left row survives; `payload`
     * columns from `right` arrive nulled when no right row is at-or-before
@@ -74,7 +58,16 @@ object Temporal {
       toleranceSec: Option[Long] = None,
       forward: Boolean = false): DataFrame = {
     val leftCols = left.columns.toSeq
-    checkAsofColumns(leftCols, payload)
+    // internal names staged on the merged stream would collide after the
+    // union; `matched_ts`/payload names would collide in the final select
+    val reserved = leftCols.filter(
+      Set("__asof_p", "__asof_ts", "__asof_side", "__asof_m", "__asof_ok"))
+    require(reserved.isEmpty,
+      s"left input carries reserved as-of columns: ${reserved.mkString(", ")}")
+    val clash = leftCols.filter(c => c == "matched_ts" || payload.contains(c))
+    require(clash.isEmpty,
+      "left columns collide with as-of output columns (matched_ts / " +
+        s"payload): ${clash.mkString(", ")} — rename before joining")
     // right side: key + event time + payload rolled into one struct so the
     // window carries a single column regardless of payload width
     val rTagged = right.select(
@@ -112,156 +105,6 @@ object Temporal {
       when(col("__asof_ok"), col("__asof_m.__m_ts")).as("matched_ts") +:
         payload.map(f => when(col("__asof_ok"), col(s"__asof_m.$f")).as(f))
     matched.select(leftCols.map(col) ++ matchedCols: _*)
-  }
-
-  /** [[asofJoin]] for SKEWED key domains — the variant that survives one
-    * monster key. The window lowering puts each key in ONE task; fine
-    * when keys are numerous (users, instruments), a straggler when one
-    * key holds half the data. Here the merged stream range-partitions on
-    * (key, ts, side) — a single key SPANS partitions — and the carry
-    * crosses partition boundaries by a two-pass handoff, the same
-    * per-partition-summary + broadcast-prefix discipline as
-    * [[Positions.withGlobalPosition]]:
-    *
-    *  pass 1: per partition, the last right payload per key (≤ #keys-in-
-    *          partition rows; with the few-huge-keys workload this serves,
-    *          #partitions × #keys is driver-bounded);
-    *  pass 2: re-stream each partition seeded with the latest payload any
-    *          EARLIER partition holds for each key.
-    *
-    * Same semantics as [[asofJoin]] (backward, tie-inclusive, left-outer,
-    * tolerance) — DifferentialSpec pins the two lowerings to each other.
-    *
-    * NOTE: the carry-budget guard runs an EAGER approx-distinct job over
-    * `right`'s key column at plan-construction time (one scan even if the
-    * returned frame is never executed) — callers building many ranged
-    * as-of plans over the same right side should cache it. The estimate
-    * is approximate (rsd 2%), so the budget is compared with a 0.9
-    * safety factor; a borderline workload falls back to the window
-    * lowering rather than risk an over-budget collect.
-    */
-  def asofJoinRanged(
-      left: DataFrame,
-      right: DataFrame,
-      key: String,
-      leftTs: String,
-      rightTs: String,
-      payload: Seq[String],
-      toleranceSec: Option[Long] = None,
-      numPartitions: Int = 0,
-      maxCarryEntries: Long = 1L << 20): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    val spark = left.sparkSession
-    val leftCols = left.columns.toSeq
-    checkAsofColumns(leftCols, payload)
-    // Driver-budget guard on the pass-1 boundary collect (r11 verdict #8).
-    // Partitions are ranges over sorted (key, ts), so each partition's key
-    // set is a contiguous key range and overlaps its neighbors only at the
-    // two boundaries: Σ_p distinctKeys(p) ≤ distinctKeys + np − 1. One
-    // cheap approx-distinct pass bounds the collect BEFORE it happens; a
-    // many-key workload over the budget is exactly the shape the window
-    // lowering handles well (one task per key, no monster stragglers), so
-    // falling back is the right plan, not a degradation.
-    // only RIGHT rows create carry entries (pass 1 records the last right
-    // payload per key), so the right side's key cardinality is the bound
-    val approxKeys = right.select(col(key))
-      .agg(approx_count_distinct(col(key), 0.02)).collect().head.getLong(0)
-    if (approxKeys + math.max(numPartitions, 1) > maxCarryEntries * 0.9)
-      return asofJoin(left, right, key, leftTs, rightTs, payload,
-        toleranceSec)
-    val rTagged = right.select(
-      Seq(col(key), col(rightTs).as("__asof_ts"), lit(0).as("__asof_side"),
-        struct(col(rightTs).as("__m_ts") +: payload.map(col): _*).as("__asof_p")) ++
-        leftCols.filterNot(_ == key).map(c => lit(null).as(c)): _*)
-    val lTagged = left.select(
-      Seq(col(key), col(leftTs).as("__asof_ts"), lit(1).as("__asof_side"),
-        lit(null).cast(rTagged.schema("__asof_p").dataType).as("__asof_p")) ++
-        leftCols.filterNot(_ == key).map(col): _*)
-    val merged = rTagged.unionByName(lTagged)
-    val np = if (numPartitions > 0) numPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // eager localCheckpoint, NOT persist: pass 1's per-partition boundary
-    // carries become broadcast constants of the returned plan, so the row
-    // blocks pass 2 reads must be PINNED to the pass-1 snapshot. A persist
-    // could silently recompute from the (possibly mutated/regenerated)
-    // source on block loss and replay stale carries over fresh rows; lost
-    // checkpoint blocks instead fail LOUDLY (the r14 LSH-routing lesson:
-    // a plan-time decision must never silently disagree with execution).
-    val ordered = merged
-      .repartitionByRange(np, col(key), col("__asof_ts"), col("__asof_side"))
-      .sortWithinPartitions(col(key), col("__asof_ts"), col("__asof_side"))
-      .localCheckpoint(true)
-    val schema = ordered.schema
-    val kIdx = schema.fieldIndex(key)
-    val tsIdx = schema.fieldIndex("__asof_ts")
-    val sideIdx = schema.fieldIndex("__asof_side")
-    val pIdx = schema.fieldIndex("__asof_p")
-
-    // pass 1: (partitionId, key, last right payload) — driver-bounded by
-    // #partitions × #distinct-keys-per-partition
-    val bounds = ordered.rdd.mapPartitionsWithIndex { (pid, it) =>
-      val lastPerKey = scala.collection.mutable.LinkedHashMap.empty[Any, Row]
-      it.foreach { r =>
-        if (r.getInt(sideIdx) == 0) lastPerKey(r.get(kIdx)) = r.getStruct(pIdx)
-      }
-      lastPerKey.iterator.map { case (k, p) => (pid, k, p) }
-    }.collect()
-    // carry entering partition p for key k = payload from the LARGEST
-    // earlier partition holding k (partition ranges follow the sort order,
-    // so larger pid = later (key, ts) range)
-    val entering: Map[(Int, Any), Row] = {
-      val byKey = bounds.groupBy(_._2)
-      (for {
-        (k, rows) <- byKey.iterator
-        sorted = rows.sortBy(_._1)
-        p <- 0 until np
-        prior = sorted.filter(_._1 < p)
-        if prior.nonEmpty
-      } yield (p, k) -> prior.last._3).toMap
-    }
-    val enteringB = spark.sparkContext.broadcast(entering)
-
-    val leftFieldIdx = leftCols.map { c =>
-      if (c == key) kIdx
-      else if (c == leftTs) tsIdx
-      else schema.fieldIndex(c)
-    }
-    val pStruct = schema("__asof_p").dataType.asInstanceOf[StructType]
-    val tolUs = toleranceSec.map(_ * 1000000L)
-    val outRows = ordered.rdd.mapPartitionsWithIndex { (pid, it) =>
-      val carry = scala.collection.mutable.HashMap.empty[Any, Row]
-      enteringB.value.foreach { case ((p, k), row) =>
-        if (p == pid) carry(k) = row
-      }
-      it.flatMap { r =>
-        if (r.getInt(sideIdx) == 0) {
-          carry(r.get(kIdx)) = r.getStruct(pIdx); Iterator.empty
-        } else {
-          def us(t: java.sql.Timestamp): Long =
-            t.getTime / 1000 * 1000000L + t.getNanos / 1000
-          val m = carry.get(r.get(kIdx)).filter { pr =>
-            tolUs.forall(t =>
-              us(r.getAs[java.sql.Timestamp](tsIdx)) -
-                us(pr.getAs[java.sql.Timestamp](0)) <= t)
-          }
-          val matched: Seq[Any] = m match {
-            case Some(pr) => pr.toSeq
-            case None => Seq.fill(pStruct.length)(null)
-          }
-          Iterator(Row.fromSeq(leftFieldIdx.map(r.get) ++ matched))
-        }
-      }
-    }
-    val outSchema = StructType(
-      leftCols.map(c => schema(if (c == leftTs) "__asof_ts" else c)
-        .copy(name = c)) ++
-        (StructField("matched_ts", pStruct(0).dataType) +:
-          payload.map(f => pStruct(pStruct.fieldIndex(f))))
-          .map(_.copy(nullable = true)))
-    // `ordered` stays checkpointed: pass 1 already materialized it and
-    // pass 2 re-reads the pinned blocks instead of re-shuffling the union
-    spark.createDataFrame(outRows, outSchema)
   }
 
   /** Regular-grid resampling with fill-forward — the time-series

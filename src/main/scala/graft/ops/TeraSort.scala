@@ -51,7 +51,7 @@ object TeraSort {
     * oracle-reproducible: DuckDB computes the same sum from the md5
     * hex, so the certificate row is hash-checkable end to end).
     */
-  private final case class PartSummary(pid: Int, okWithin: Boolean,
+  private final case class PartSummary(okWithin: Boolean,
       first: Array[Byte], last: Array[Byte], rows: Long,
       checksum: java.math.BigDecimal)
 
@@ -89,25 +89,23 @@ object TeraSort {
   /** One streaming pass over each partition of `sorted` (keyed by column
     * `key`): O(#partitions) rows to the driver, never the data.
     */
-  private def summarize(sorted: DataFrame, key: String): Seq[PartSummary] = {
-    sorted.select(col(key))
-      .rdd.mapPartitionsWithIndex { (pid, it) =>
-        var ok = true
-        var first: Array[Byte] = null
-        var last: Array[Byte] = null
-        var rows = 0L
-        var sum = java.math.BigDecimal.ZERO
-        it.foreach { r =>
-          val k = r.getAs[Array[Byte]](0)
-          if (first == null) first = k
-          if (last != null && unsignedCompare(last, k) > 0) ok = false
-          last = k
-          rows += 1
-          sum = sum.add(keyValue(k))
-        }
-        Iterator(PartSummary(pid, ok, first, last, rows, sum))
-      }.collect().toSeq.sortBy(_.pid)
-  }
+  private def summarize(sorted: DataFrame, key: String): Seq[PartSummary] =
+    Positions.partitionSummaries(sorted.select(col(key)).rdd) { it =>
+      var ok = true
+      var first: Array[Byte] = null
+      var last: Array[Byte] = null
+      var rows = 0L
+      var sum = java.math.BigDecimal.ZERO
+      it.foreach { r =>
+        val k = r.getAs[Array[Byte]](0)
+        if (first == null) first = k
+        if (last != null && unsignedCompare(last, k) > 0) ok = false
+        last = k
+        rows += 1
+        sum = sum.add(keyValue(k))
+      }
+      PartSummary(ok, first, last, rows, sum)
+    }
 
   /** Order-independent permutation checksum of `key` over `df` — one
     * streaming JVM pass (the hex→conv→decimal expression form computes
@@ -115,12 +113,9 @@ object TeraSort {
     * pins the two paths equal on the n=1000 golden value).
     */
   def checksum(df: DataFrame, key: Column): java.math.BigDecimal =
-    df.select(key)
-      .rdd.mapPartitions { it =>
-        var sum = java.math.BigDecimal.ZERO
-        it.foreach(r => sum = sum.add(keyValue(r.getAs[Array[Byte]](0))))
-        Iterator.single(sum)
-      }.reduce(_.add(_))
+    Positions.partitionSummaries(df.select(key).rdd)(_.foldLeft(
+      java.math.BigDecimal.ZERO)((sum, r) => sum.add(keyValue(r.getAs[Array[Byte]](0)))))
+      .foldLeft(java.math.BigDecimal.ZERO)(_.add(_))
 
   /** Full validation certificate over a sorted frame: every partition
     * internally sorted, partition boundaries globally ordered (range

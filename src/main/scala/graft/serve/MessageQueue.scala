@@ -19,12 +19,17 @@ import graft.sources.ManifestIo
   * Layout: one directory per queue; one file per message named
   * `m<seq16>-<uuid>.msg` (the seq prefix gives FIFO order — PublishMessage
   * stamps a timestamp-derived seq, PublishOrderedMessage an explicit one,
-  * mirroring the reference's ordered variant). A claim is
-  * `<message>.claim` holding the visibility expiry; claims are won by
-  * an atomic claim WITH content (`ManifestIo.claimLocal`, the same
-  * winner-election primitive as [[graft.sources.LogManifest]]), so a
-  * claim never exists without its expiry and concurrent consumers never
-  * double-deliver inside a visibility window. Driver-side by design:
+  * mirroring the reference's ordered variant). Claims are versioned,
+  * `<message>.claim.<n>`, each holding a visibility expiry; the newest
+  * version is the claim. Version n+1 is won by an atomic claim WITH
+  * content (`ManifestIo.claimLocal`, the same winner-election primitive
+  * as [[graft.sources.LogManifest]]), and only when version n is absent
+  * or expired, so a claim never exists without its expiry. An expired
+  * claim is never deleted in place: a consumer acting on a stale read of
+  * it loses the link of n+1 to the peer that took it over, instead of
+  * deleting that peer's live claim, so concurrent consumers never
+  * double-deliver inside a visibility window. The winner prunes older
+  * versions. Driver-side by design:
   * queues coordinate JOBS, not rows — row traffic belongs in
   * OUTPUT/superfiles.
   */
@@ -94,55 +99,81 @@ final class MessageQueue(root: String) {
   def receive(queue: String, visibilityMs: Long = 30000L): Option[Received] = {
     require(queueExists(queue), s"no such queue: $queue")
     val now = System.currentTimeMillis()
-    val msgs = Option(qDir(queue).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("m") && f.getName.endsWith(".msg"))
-      .sortBy(_.getName)
+    val names = listing(queue)
+    val newest = claims(names).view.mapValues(_.last).toMap
+    val msgs = names.filter(n => n.startsWith("m") && n.endsWith(".msg")).sorted
+      .map(new File(qDir(queue), _))
     msgs.iterator.flatMap { m =>
-      val claim = new File(qDir(queue), m.getName + ".claim")
-      val live = claimExpiry(claim).exists { expiry =>
-        expiry > now || !claim.delete() // expired claims removed in place
-      }
-      // winner election: exactly one claimer links its claim into place;
-      // losers move on to the next message
-      if (live ||
-          !ManifestIo.claimLocal(claim, (now + visibilityMs).toString)) None
+      val n = newest.getOrElse(m.getName, 0L)
+      val free = n == 0L ||
+        claimExpiry(claimFile(queue, m.getName, n)).exists(_ <= now)
+      // winner election on version n+1: exactly one claimer links it;
+      // losers (and readers of a claim a peer has since taken over) move
+      // on to the next message
+      val mine = claimFile(queue, m.getName, n + 1)
+      if (!free || !ManifestIo.claimLocal(mine, (now + visibilityMs).toString))
+        None
       else {
-        try {
-          // the message may have been deleted between listing and claiming
-          if (!m.exists()) { claim.delete(); None }
-          else Some(Received(queue, m.getName,
-            new String(Files.readAllBytes(m.toPath), UTF_8)))
-        } catch {
-          case _: java.nio.file.NoSuchFileException => None
+        val versions = claims(listing(queue)).getOrElse(m.getName, Nil)
+        // a newer version means n+1 was taken over and pruned before this
+        // stale link landed: the peer holding the newest version owns it
+        if (versions.exists(_ > n + 1)) { mine.delete(); None }
+        else {
+          versions.filter(_ <= n).foreach(v => claimFile(queue, m.getName, v).delete())
+          try {
+            // the message may have been deleted between listing and claiming
+            if (!m.exists()) { mine.delete(); None }
+            else Some(Received(queue, m.getName,
+              new String(Files.readAllBytes(m.toPath), UTF_8)))
+          } catch {
+            case _: java.nio.file.NoSuchFileException => None
+          }
         }
       }
     }.nextOption()
   }
 
+  private def claimFile(queue: String, msg: String, version: Long): File =
+    new File(qDir(queue), s"$msg.claim.$version")
+
+  private def listing(queue: String): Seq[String] =
+    Option(qDir(queue).list()).map(_.toSeq).getOrElse(Nil)
+
+  /** Every claim version in a queue dir listing, ascending, per message. */
+  private def claims(names: Seq[String]): Map[String, Seq[Long]] =
+    names.flatMap { name =>
+      val i = name.lastIndexOf(".claim.")
+      if (i < 0) None
+      else name.substring(i + 7).toLongOption.map(name.substring(0, i) -> _)
+    }.groupMap(_._1)(_._2).view.mapValues(_.sorted).toMap
+
   /** The visibility expiry a claim holds, or None when there is no claim
-    * (never claimed, acked, or removed by a peer since the listing).
+    * (never claimed, acked, or pruned by a peer since the listing).
     */
   private def claimExpiry(claim: File): Option[Long] =
     try Some(new String(Files.readAllBytes(claim.toPath), UTF_8).trim.toLong)
     catch { case _: java.nio.file.NoSuchFileException => None }
 
-  /** Ack: delete the message (and its claim) — completes the delivery. */
+  /** Ack: delete the message and every version of its claim — completes
+    * the delivery.
+    */
   def deleteMessage(queue: String, receiptHandle: String): Boolean = {
     val m = new File(qDir(queue), receiptHandle)
     val ok = m.delete()
-    new File(qDir(queue), receiptHandle + ".claim").delete()
+    claims(listing(queue)).getOrElse(receiptHandle, Nil)
+      .foreach(v => claimFile(queue, receiptHandle, v).delete())
     ok
   }
 
   /** Approximate visible depth (monitoring; SQS's ApproximateNumberOfMessages). */
   def depth(queue: String): Int = {
     val now = System.currentTimeMillis()
-    Option(qDir(queue).listFiles()).getOrElse(Array.empty)
-      .count { f =>
-        f.getName.endsWith(".msg") && {
-          claimExpiry(new File(qDir(queue), f.getName + ".claim"))
-            .forall(_ <= now)
-        }
+    val names = listing(queue)
+    val versions = claims(names)
+    names.count { n =>
+      n.endsWith(".msg") && versions.get(n).forall { vs =>
+        claimExpiry(claimFile(queue, n, vs.last)).forall(_ <= now)
       }
+    }
   }
 }

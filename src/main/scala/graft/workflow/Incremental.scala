@@ -1,10 +1,12 @@
 package graft.workflow
 
-import graft.sources.Sources
+import graft.sources.{ManifestIo, Sources}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.io.File
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Incrementally-maintained keyed aggregate — the reference's daily-build
@@ -23,11 +25,16 @@ import scala.jdk.CollectionConverters._
   * the state stays mergeable.
   *
   * State layout under `stateDir`:
-  *   agg_v<N>/           partial-aggregate parquet (the current state)
-  *   manifest_v<N>.txt   consumed part paths, one per line
-  * Writes land at version N+1 and become current only when the manifest
-  * write succeeds (write-then-rename, same crash discipline as
-  * [[graft.sources.FileCatalog]] manifests).
+  *   agg_v<N>-<uuid>/    partial-aggregate parquet of version N
+  *   manifest_v<N>.txt   `#agg\t<dir>`, then the consumed part paths, one
+  *                       per line
+  * A refresh writes its aggregate to a dir of its own, then publishes
+  * version N+1 by claiming `manifest_v<N+1>.txt` (`ManifestIo.claimLocal`,
+  * atomic and exclusive, the claim [[graft.sources.LogManifest]] commits
+  * through). A refresher that loses the claim to a concurrent one deletes
+  * its own aggregate dir and retries against the fresher state, so no
+  * consumed part is ever dropped. Manifests with no `#agg` line (state
+  * dirs written before it existed) name their aggregate `agg_v<N>`.
   */
 final class Incremental(
     spark: SparkSession,
@@ -48,43 +55,56 @@ final class Incremental(
     finally stream.close() // directory stream holds an fd until closed
   }
 
-  /** Part paths already folded into the current state. */
-  def consumed: Set[String] = versions.lastOption match {
-    case Some(v) =>
-      Files.readAllLines(Paths.get(s"$stateDir/manifest_v$v.txt"))
-        .asScala.filter(_.nonEmpty).toSet
-    case None => Set.empty
-  }
+  /** The newest version: (N, consumed part paths, aggregate dir). */
+  private def current: Option[(Int, Set[String], String)] =
+    versions.lastOption.map { v =>
+      val (agg, parts) = Files.readAllLines(Paths.get(s"$stateDir/manifest_v$v.txt"))
+        .asScala.filter(_.nonEmpty).partition(_.startsWith(AggLine))
+      (v, parts.toSet, agg.headOption.fold(s"agg_v$v")(_.stripPrefix(AggLine)))
+    }
 
-  /** Current partial-aggregate state (empty frame with the right schema
-    * when nothing has been consumed yet).
+  /** Part paths already folded into the current state. */
+  def consumed: Set[String] = current.fold(Set.empty[String])(_._2)
+
+  /** Current partial-aggregate state (None when nothing has been consumed
+    * yet).
     */
-  def state: Option[DataFrame] = versions.lastOption.map(v =>
-    Sources.parquet(spark, s"$stateDir/agg_v$v"))
+  def state: Option[DataFrame] = current.map(c => aggAt(c._3))
+
+  private def aggAt(dir: String): DataFrame =
+    Sources.parquet(spark, s"$stateDir/$dir")
 
   /** Fold any unseen `parts` into the state; returns the refreshed state
     * and the list of parts actually read (empty → no-op, state untouched).
     */
+  @scala.annotation.tailrec
   def refresh(parts: Seq[String]): (DataFrame, Seq[String]) = {
-    val seen = consumed
+    val cur = current
+    val seen = cur.fold(Set.empty[String])(_._2)
     val fresh = parts.filterNot(seen)
-    if (fresh.isEmpty) return (state.getOrElse(throw new IllegalStateException(
+    val prev = cur.map(c => aggAt(c._3))
+    if (fresh.isEmpty) return (prev.getOrElse(throw new IllegalStateException(
       s"Incremental state at $stateDir has no prior version and refresh() " +
         "was given no unseen parts — the aggregate schema (key/value types " +
         "come from the data) is unknowable; pass at least one part on the " +
         "first refresh")), Nil)
     val delta = applyAggs(Sources.parquet(spark, fresh: _*))
-    val merged = state match {
-      case Some(prev) => mergeAggs(prev.unionByName(delta))
+    val merged = prev match {
+      case Some(p) => mergeAggs(p.unionByName(delta))
       case None => delta
     }
-    val v = versions.lastOption.getOrElse(0) + 1
-    merged.write.mode("overwrite").parquet(s"$stateDir/agg_v$v")
-    val tmp = Paths.get(s"$stateDir/.manifest_v$v.tmp")
-    Files.writeString(tmp, (seen ++ fresh).toSeq.sorted.mkString("\n"))
-    Files.move(tmp, Paths.get(s"$stateDir/manifest_v$v.txt"),
-      StandardCopyOption.ATOMIC_MOVE)
-    (Sources.parquet(spark, s"$stateDir/agg_v$v"), fresh)
+    val v = cur.fold(0)(_._1) + 1
+    val agg = s"agg_v$v-${java.util.UUID.randomUUID()}"
+    merged.write.parquet(s"$stateDir/$agg")
+    val manifest = (s"$AggLine$agg" +: (seen ++ fresh).toSeq.sorted).mkString("\n")
+    if (ManifestIo.claimLocal(new File(s"$stateDir/manifest_v$v.txt"), manifest))
+      (aggAt(agg), fresh)
+    else {
+      // a concurrent refresher published version v first
+      val dir = new Path(s"$stateDir/$agg")
+      dir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dir, true)
+      refresh(parts)
+    }
   }
 
   /** First-level aggregation of raw rows. */
@@ -99,6 +119,9 @@ final class Incremental(
 }
 
 object Incremental {
+  /** Manifest line naming the version's aggregate dir. */
+  private val AggLine = "#agg\t"
+
   /** One maintained aggregate: how to compute it from raw rows and how to
     * merge two partials under the same alias.
     */

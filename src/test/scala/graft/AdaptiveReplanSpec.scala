@@ -1,6 +1,5 @@
 package graft
 
-import graft.ops.Temporal
 import graft.text.Embeddings
 import graft.workflow.Workflow
 import org.apache.spark.sql.functions._
@@ -16,10 +15,6 @@ import org.apache.spark.sql.functions._
   *  - `Workflow.dictionaryAuto` (probe-capped size classes): a dictionary
   *    is a BUILD — both size classes snapshot at construction, so the
   *    class chosen can never change staleness semantics.
-  *  - `Temporal.asofJoinRanged` (driver-budget guard + two-pass carries):
-  *    pass-1 boundary carries are plan constants, so the row blocks pass 2
-  *    reads are checkpoint-PINNED — stale carries can never replay over
-  *    regenerated rows (lost blocks fail loudly instead).
   *  - `Embeddings.planesFor`/`ivfAssignAuto` (corpus-size probes): the
   *    probed value is a bucketing/occupancy knob — growth under a stale
   *    knob degrades occupancy or recall, NEVER the correctness contract
@@ -67,45 +62,6 @@ class AdaptiveReplanSpec extends SparkSpec {
       .collect()
     assert(out.head.getString(1) == "v5",
       s"join-class dictionary leaked post-build source state: ${out.toSeq}")
-  }
-
-  test("asofJoinRanged: pass-2 rows are checkpoint-pinned to the pass-1 " +
-      "snapshot — re-execution after an in-place source rewrite returns " +
-      "the build-time answer, never stale carries over fresh rows") {
-    def ts(s: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 00:00:$s%02d")
-    val lp = tmp("asof-l"); val rp = tmp("asof-r")
-    Seq(("a", ts(10)), ("a", ts(30)), ("b", ts(20)))
-      .toDF("k", "lts").write.parquet(lp)
-    Seq(("a", ts(5), 100L), ("a", ts(25), 200L), ("b", ts(15), 300L))
-      .toDF("k", "rts", "pay").write.parquet(rp)
-    val joined = Temporal.asofJoinRanged(
-      spark.read.parquet(lp), spark.read.parquet(rp),
-      "k", "lts", "rts", Seq("pay"))
-    assert(scanFree(joined),
-      s"ranged as-of still scans a source:\n${joined.queryExecution.executedPlan}")
-    val before = joined.collect().map(_.toSeq).toSet
-    Seq(("a", ts(5), -1L), ("a", ts(25), -2L), ("b", ts(15), -3L))
-      .toDF("k", "rts", "pay").write.mode("overwrite").parquet(rp)
-    val after = joined.collect().map(_.toSeq).toSet
-    assert(after == before,
-      "re-executed ranged as-of mixed post-build data into pinned carries")
-    assert(before.exists(_.contains(200L)), s"fixture lost its matches: $before")
-  }
-
-  test("asofJoinRanged over-budget fallback: the window route is ONE plan " +
-      "(no cross-pass seam) and matches the direct as-of join exactly") {
-    def ts(s: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 00:00:$s%02d")
-    val left = Seq(("a", ts(10)), ("a", ts(30)), ("b", ts(20)), ("c", ts(9)))
-      .toDF("k", "lts")
-    val right = Seq(("a", ts(5), 1L), ("a", ts(25), 2L), ("b", ts(15), 3L))
-      .toDF("k", "rts", "pay")
-    // maxCarryEntries=1 trips the driver-budget guard (approxKeys + np > 0.9)
-    val routed = Temporal.asofJoinRanged(left, right, "k", "lts", "rts",
-      Seq("pay"), maxCarryEntries = 1)
-    val direct = Temporal.asofJoin(left, right, "k", "lts", "rts", Seq("pay"))
-    assert(routed.collect().map(_.toSeq).toSet ==
-      direct.collect().map(_.toSeq).toSet,
-      "budget fallback diverged from the direct as-of join")
   }
 
   test("planesFor growth contract: a plane count probed from a SMALLER " +

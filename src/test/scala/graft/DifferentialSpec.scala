@@ -143,74 +143,46 @@ class DifferentialSpec extends SparkSpec {
     assert(viaOp == naive)
   }
 
-  test("AS-OF ranged (skew-safe two-pass) == window lowering on real events") {
-    val ev = Tables.events(spark, sf)
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts"), col("value"))
-    val pur = ev.filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    def norm(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("event_id"), col("matched_ts"), col("value")).collect()
-        .map(r => (r.getLong(0),
-          if (r.isNullAt(1)) null else r.getTimestamp(1),
-          if (r.isNullAt(2)) null else r.getDouble(2))).toSet
-    val win = norm(graft.ops.Temporal
-      .asofJoin(pur, clicks, "user_id", "ts", "ts", Seq("value")))
-    val ranged = norm(graft.ops.Temporal
-      .asofJoinRanged(pur, clicks, "user_id", "ts", "ts", Seq("value"),
-        numPartitions = 7))
-    assert(ranged == win)
-  }
-
-  test("AS-OF ranged: ONE monster key spanning every partition still " +
-      "matches the window lowering (the skew case the variant exists for)") {
+  test("AS-OF join: ONE monster key (one task holds every row) == naive " +
+      "per-row scan, backward, toleranceSec = 4 and forward") {
     import spark.implicits._
     val n = 20000
+    // right ts 10·id s; left ts 20·id + id%7 s, so the backward gap runs
+    // 0..6 s (0 = an exact tie) and the tolerance keeps only some matches
     val right = spark.range(n).select(lit(1L).as("k"),
       timestamp_seconds(col("id") * 10).as("ts"),
       (col("id") * 2).as("v"))
     val left = spark.range(n / 2).select(lit(1L).as("k"),
-      timestamp_seconds(col("id") * 20 + 5).as("ts"),
+      timestamp_seconds(col("id") * 20 + col("id") % 7).as("ts"),
       col("id").as("lid"))
+    val rTs = (0L until n).map(_ * 10).toArray
+    val lTs = (0L until n / 2).map(id => id * 20 + id % 7)
     def norm(df: org.apache.spark.sql.DataFrame) =
       df.select(col("lid"), col("v")).as[(Long, Option[Long])].collect().toSet
-    val win = norm(graft.ops.Temporal
-      .asofJoin(left, right, "k", "ts", "ts", Seq("v")))
-    val ranged = norm(graft.ops.Temporal
-      .asofJoinRanged(left, right, "k", "ts", "ts", Seq("v"),
-        numPartitions = 16))
-    assert(ranged == win)
-    // tolerance parity on the same skewed layout
-    val winT = norm(graft.ops.Temporal
-      .asofJoin(left, right, "k", "ts", "ts", Seq("v"),
-        toleranceSec = Some(4L)))
-    val rangedT = norm(graft.ops.Temporal
-      .asofJoinRanged(left, right, "k", "ts", "ts", Seq("v"),
-        toleranceSec = Some(4L), numPartitions = 16))
-    assert(rangedT == winT)
-  }
-
-  test("AS-OF ranged: over the carry budget it falls back to the window " +
-      "lowering (plan shows Window), results identical either way") {
-    // a MANY-key workload whose boundary-carry collect would exceed the
-    // driver budget must route to the per-key window plan — which is the
-    // right plan for many keys anyway (no monster-key straggler to dodge)
-    val right = spark.range(5000).select(col("id").as("k"),
-      timestamp_seconds(col("id")).as("ts"), (col("id") * 3).as("v"))
-    val left = spark.range(5000).select(col("id").as("k"),
-      timestamp_seconds(col("id") + 1).as("ts"), col("id").as("lid"))
-    val guarded = graft.ops.Temporal.asofJoinRanged(left, right,
-      "k", "ts", "ts", Seq("v"), maxCarryEntries = 100L)
-    assert(guarded.queryExecution.executedPlan.toString.contains("Window"),
-      "expected fallback to the window lowering under the carry budget")
-    def norm(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("lid"), col("v")).as[(Long, Option[Long])].collect().toSet
-    assert(norm(guarded) == norm(graft.ops.Temporal.asofJoin(
-      left, right, "k", "ts", "ts", Seq("v"))))
-    // under the budget the two-pass path is kept (no Window operator)
-    val ranged = graft.ops.Temporal.asofJoinRanged(left, right,
-      "k", "ts", "ts", Seq("v"))
-    assert(!ranged.queryExecution.executedPlan.toString.contains("Window"))
+    // naive: scan every right row for each left row
+    def naive(forward: Boolean, tol: Option[Long]): Set[(Long, Option[Long])] =
+      lTs.zipWithIndex.map { case (t, lid) =>
+        var best = -1
+        var i = 0
+        while (i < rTs.length) {
+          val ok = if (forward) rTs(i) >= t else rTs(i) <= t
+          if (ok && (best < 0 || (if (forward) rTs(i) < rTs(best)
+              else rTs(i) > rTs(best)))) best = i
+          i += 1
+        }
+        val m = Option(best).filter(b => b >= 0 &&
+          tol.forall(tl => math.abs(t - rTs(b)) <= tl))
+        (lid.toLong, m.map(_ * 2L))
+      }.toSet
+    def asof(tol: Option[Long], forward: Boolean) = norm(graft.ops.Temporal
+      .asofJoin(left, right, "k", "ts", "ts", Seq("v"), tol, forward))
+    val back = naive(forward = false, None)
+    assert(back.forall(_._2.isDefined))
+    assert(asof(None, forward = false) == back)
+    val tol = naive(forward = false, Some(4L))
+    assert(tol.exists(_._2.isDefined) && tol.exists(_._2.isEmpty))
+    assert(asof(Some(4L), forward = false) == tol)
+    assert(asof(None, forward = true) == naive(forward = true, None))
   }
 
   test("embedding ops: double production mode == decimal oracle mode on " +

@@ -85,4 +85,55 @@ class MessageQueueSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(dups.isEmpty, s"double deliveries: $dups")
     assert(mq.depth("work") == 0 && mq.receive("work").isEmpty)
   }
+
+  test("a consumer acting on a stale read of an expired claim never takes " +
+      "over the claim a peer has since won (no double delivery)") {
+    import java.io.{File, FileInputStream, FileOutputStream}
+    import java.nio.file.Files
+    import java.util.concurrent.{Executors, TimeUnit}
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val root = s"target/graft_io/mq_spec/${System.nanoTime()}"
+    val mq = new MessageQueue(root)
+    mq.createQueue("q")
+    mq.publish("q", "only")
+    val dir = new File(root, "q")
+    // a first delivery that expires unacked leaves an expired claim
+    assert(mq.receive("q", visibilityMs = 1).map(_.body) == Some("only"))
+    Thread.sleep(20)
+    val Array(claim) = dir.listFiles().filterNot(_.getName.endsWith(".msg"))
+    val expired = Files.readString(claim.toPath)
+    // Replay the interleaving: consumer A reads the expired claim, peer B
+    // takes the message over, then A acts on what it read. The claim is
+    // swapped for a FIFO so A's read blocks until the test releases it.
+    claim.delete()
+    assert(new ProcessBuilder("mkfifo", claim.getPath).start().waitFor() == 0)
+    val pool = Executors.newCachedThreadPool { r =>
+      val t = new Thread(r); t.setDaemon(true); t
+    }
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val a = Future(new MessageQueue(root).receive("q", visibilityMs = 60000))
+      // opening the FIFO's write end returns once A has opened it to read
+      val opened = Future(new FileOutputStream(claim))
+      val writer = try Await.result(opened, 30.seconds) catch {
+        case e: java.util.concurrent.TimeoutException =>
+          new FileInputStream(claim).close() // unblock the pending open
+          throw e
+      }
+      // A now holds the expired claim open; the path gets the same expired
+      // content as a plain file, and B wins the message through it
+      claim.delete()
+      Files.writeString(claim.toPath, expired)
+      val b = new MessageQueue(root).receive("q", visibilityMs = 60000)
+      assert(b.map(_.body) == Some("only"))
+      writer.write(expired.getBytes("UTF-8")); writer.close()
+      val gotA = Await.result(a, 30.seconds)
+      assert(gotA.isEmpty,
+        "A deleted B's live claim and received the message inside B's window")
+      assert(mq.depth("q") == 0 && mq.receive("q").isEmpty)
+      assert(mq.deleteMessage("q", b.get.receiptHandle))
+      assert(dir.listFiles().isEmpty, dir.listFiles().map(_.getName).toSeq)
+    } finally pool.shutdownNow()
+  }
 }

@@ -13,11 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * `TopLevelKey`.
   */
 class ParquetReadGuardSpec extends AnyFunSuite {
-  private def sitesOf(call: scala.util.matching.Regex): Seq[String] =
-    Files.walk(Paths.get("src/main/scala")).iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
-      .flatMap(f => call.findAllMatchIn(Files.readString(f)).map(_ => f.toString))
-      .toSeq
+  import ParquetReadGuardSpec.sitesOf
 
   test("read.parquet( appears in src/main/scala only as Sources.parquet's fallback") {
     val hits = sitesOf(raw"read\s*\.\s*parquet\s*\(".r)
@@ -30,4 +26,13 @@ class ParquetReadGuardSpec extends AnyFunSuite {
     assert(hits.distinct == Seq("src/main/scala/graft/sources/TopLevelKey.scala"),
       s"relations built outside TopLevelKey: ${hits.mkString(", ")}")
   }
+}
+
+object ParquetReadGuardSpec {
+  /** One entry per match of `call` in a Scala file under src/main/scala. */
+  def sitesOf(call: scala.util.matching.Regex): Seq[String] =
+    Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap(f => call.findAllMatchIn(Files.readString(f)).map(_ => f.toString))
+      .toSeq
 }

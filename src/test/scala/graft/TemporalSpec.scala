@@ -103,6 +103,21 @@ class TemporalSpec extends SparkSpec {
     assert(plan.contains("Window"), s"carry must be a window:\n$plan")
   }
 
+  test("building an as-of frame over parquet inputs launches no Spark job") {
+    val ev = Tables.events(spark, sf)
+    val clicks = ev.filter(col("event_type") === "click")
+      .select(col("user_id"), col("ts").as("cts"), col("value"))
+    val pur = ev.filter(col("event_type") === "purchase")
+      .select(col("event_id"), col("user_id"), col("ts"))
+    val (_, jobs, tasks) = jobsAndTasks {
+      Seq((None, false), (Some(60L), false), (Some(60L), true)).map {
+        case (tol, fwd) => Temporal.asofJoin(pur, clicks, "user_id", "ts",
+          "cts", Seq("value"), tol, fwd).queryExecution.analyzed
+      }
+    }
+    assert(jobs == 0 && tasks == 0, s"$jobs jobs, $tasks tasks at build time")
+  }
+
   test("reserved internal columns and output-name collisions on the left " +
       "input are rejected up front") {
     val r = mkRight((1, 50L, 1.0))
@@ -121,7 +136,7 @@ class TemporalSpec extends SparkSpec {
     // a left column shadowing a payload name
     val pay = mkLeft((1, 100L, "a")).withColumn("price", lit(9.9))
     val e3 = intercept[IllegalArgumentException] {
-      Temporal.asofJoinRanged(pay, r, "k", "lt", "rt", Seq("price"))
+      Temporal.asofJoin(pay, r, "k", "lt", "rt", Seq("price"))
     }
     assert(e3.getMessage.contains("price"))
   }

@@ -665,4 +665,64 @@ class WorkflowSpec extends SparkSpec {
     val e = intercept[IllegalStateException] { inc.refresh(Nil) }
     assert(e.getMessage.contains("no prior version"))
   }
+
+  test("incremental aggregate: a refresher whose next version a peer " +
+      "claimed first retries on the fresher state, losing no part") {
+    import graft.workflow.Incremental
+    val base = s"target/graft_io/inc_race/${System.nanoTime()}"
+    val rows = Seq((1, 10.0), (2, 5.0), (1, 40.0), (3, 1.0), (2, 7.0), (1, 2.0))
+    val paths = rows.grouped(2).zipWithIndex.map { case (g, i) =>
+      val p = s"$base/part$i"
+      g.toDF("k", "v").write.parquet(p)
+      p
+    }.toSeq
+    def inc() = new Incremental(spark, s"$base/state", Seq("k"),
+      Seq(Incremental.sumOf("v", "s"), Incremental.countAll("n")))
+    val a = inc(); val b = inc()
+    a.refresh(paths.take(1))
+    // the peer commits version 2 while `a` traverses its part list, i.e.
+    // after `a` read version 1 and before it publishes version 2
+    var peerRan = false
+    val racing = LazyList(paths(2)).map { p =>
+      if (!peerRan) { peerRan = true; b.refresh(paths.slice(1, 2)) }
+      p
+    }
+    val (st, read) = a.refresh(racing)
+    assert(peerRan && read == Seq(paths(2)))
+    assert(a.consumed == paths.take(3).toSet && b.consumed == a.consumed,
+      s"lost parts: ${paths.take(3).toSet -- a.consumed}")
+    val expected = rows.take(6).toDF("k", "v").groupBy(col("k"))
+      .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
+      .orderBy(col("k")).collect()
+      .map(r => (r.getInt(0), r.getDouble(1), r.getLong(2))).toSeq
+    def norm(df: org.apache.spark.sql.DataFrame) = df.orderBy(col("k"))
+      .collect().map(r => (r.getInt(0), r.getDecimal(1).doubleValue, r.getLong(2)))
+      .toSeq
+    assert(norm(st) == expected && norm(b.state.get) == expected)
+    // the losing attempt's aggregate dir is gone: one dir per version
+    val aggs = new java.io.File(s"$base/state").list().filter(_.startsWith("agg_"))
+    assert(aggs.length == 3, aggs.toSeq)
+  }
+
+  test("incremental aggregate: a state dir whose manifests name no " +
+      "aggregate dir (agg_v<N> layout) reads unchanged and refreshes on top") {
+    import graft.workflow.Incremental
+    val base = s"target/graft_io/inc_legacy/${System.nanoTime()}"
+    Seq((1, 3L), (2, 4L)).toDF("k", "n").write.parquet(s"$base/part0")
+    Seq((1, 1L)).toDF("k", "n").write.parquet(s"$base/part1")
+    val aggs = Seq(Incremental.countAll("n"))
+    // version 1 as the earlier layout wrote it: agg_v1 + bare part list
+    spark.read.parquet(s"$base/part0").groupBy(col("k"))
+      .agg(count(lit(1)).as("n")).write.parquet(s"$base/state/agg_v1")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$base/state/manifest_v1.txt"), s"$base/part0")
+    val inc = new Incremental(spark, s"$base/state", Seq("k"), aggs)
+    assert(inc.consumed == Set(s"$base/part0"))
+    assert(inc.state.get.orderBy("k").as[(Int, Long)].collect().toSeq ==
+      Seq((1, 1L), (2, 1L)))
+    val (st, read) = inc.refresh(Seq(s"$base/part0", s"$base/part1"))
+    assert(read == Seq(s"$base/part1"))
+    assert(st.orderBy("k").as[(Int, Long)].collect().toSeq ==
+      Seq((1, 2L), (2, 1L)))
+  }
 }
