@@ -21,7 +21,7 @@ object IoQueries {
     * via a fresh fixture root instead of failing a format-incompatible read
     * or missing a newer read path.
     */
-  private val FixtureLayoutVersion = 3
+  private val FixtureLayoutVersion = 4
 
   private def ioDir(sfDir: String): String = {
     val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_")

@@ -1,13 +1,22 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+
+import org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader}
 import org.apache.spark.sql.functions._
 
 /** INDEX / BUILD / keyed read / KEYED JOIN / FETCH (SURVEY §2.1, §2.4,
   * §2.10). The reference persists a B-tree of key+payload
   * (`system/jhtree/ctfile.hpp:32`) probed via `IKeyManager`
-  * (`system/jhtree/jhtree.hpp:247`); our index is range-partitioned,
-  * in-partition-sorted Parquet parts plus a top-level key ([[TopLevelKey]],
+  * (`system/jhtree/jhtree.hpp:247`); our index is sorted Parquet parts,
+  * each a contiguous key range in part-name order (a key may span two
+  * adjacent parts of a one-task build), plus a top-level key ([[TopLevelKey]],
   * the `_tlk` file in the index dir). The TLK holds each part's name, length
   * and leading-key null count, min and max, and the parts' stored layout, so
   * a keyed read lists the dir once, reads no footer and opens only the parts
@@ -23,35 +32,82 @@ import org.apache.spark.sql.functions._
   */
 object IndexedTable {
 
-  /** BUILD(index) (TAKindexwrite :923): range-partition by key, sort within
-    * partitions, write Parquet, then the TLK on the leading key. `payload`
-    * columns ride along (a payload index); omit for key-only.
+  /** BUILD(index) (TAKindexwrite :923): sort by key into parts that each
+    * hold a contiguous key range, write Parquet, then the TLK on the leading
+    * key. `payload` columns ride along (a payload index); omit for key-only.
+    * `numPartitions` parts are written; 0 lets the build choose.
+    *
+    * A small input is written by one task, as the reference runs a small
+    * build on the single-process hthor rather than Thor (`pickBestEngine`):
+    * when `df` is a plain parquet read (only projections over a scan of
+    * unpartitioned parquet files) no bigger than
+    * `spark.sql.files.maxPartitionBytes`, its row count is summed from the
+    * files' footers on the driver, and one task sorts every row and rolls
+    * them into `max(numPartitions, 1)` parts of equal row count, in key
+    * order by part name. That is one Spark job of one task. Any other input
+    * (a filter, a join, a generated or local relation, a partitioned,
+    * oversize or unreadable input) is range-partitioned by key
+    * (`repartitionByRange`: a sampling job, then a shuffle), so the rows of
+    * one key always share a part. In a one-task build the rows of one key
+    * may span two adjacent parts; both parts' TLK ranges hold that key, so
+    * keyed reads stay exact.
     */
   def build(df: DataFrame, keys: Seq[String], path: String,
       numPartitions: Int = 0): Unit = {
-    val keyed = if (numPartitions > 0)
-      df.repartitionByRange(numPartitions, keys.map(col): _*)
-    else df.repartitionByRange(keys.map(col): _*)
-    keyed.sortWithinPartitions(keys.map(col): _*)
-      .write.mode("overwrite").parquet(path)
+    val order = keys.map(col)
+    plainParquetRows(df) match {
+      case Some(rows) =>
+        val parts = math.max(numPartitions, 1)
+        df.coalesce(1).sortWithinPartitions(order: _*)
+          .write.mode("overwrite").option("maxRecordsPerFile", (rows + parts - 1) / parts)
+          .parquet(path)
+      case None =>
+        val keyed = if (numPartitions > 0) df.repartitionByRange(numPartitions, order: _*)
+          else df.repartitionByRange(order: _*)
+        keyed.sortWithinPartitions(order: _*).write.mode("overwrite").parquet(path)
+    }
     TopLevelKey.write(df.sparkSession, path, keys.head)
   }
 
+  /** The row count of `df` when it reads every row of unpartitioned parquet
+    * files totalling at most `spark.sql.files.maxPartitionBytes`: the sum of
+    * their footers' row-group row counts. None for any other plan, or when a
+    * footer cannot be read.
+    */
+  private def plainParquetRows(df: DataFrame): Option[Long] = {
+    def scan(p: LogicalPlan): Option[HadoopFsRelation] = p match {
+      case Project(_, child) => scan(child)
+      case l: LogicalRelation => l.relation match {
+        case r: HadoopFsRelation if r.fileFormat.isInstanceOf[ParquetFileFormat] &&
+            r.partitionSchema.isEmpty => Some(r)
+        case _ => None
+      }
+      case _ => None
+    }
+    val spark = df.sparkSession
+    val conf = spark.sparkContext.hadoopConfiguration
+    for {
+      r <- scan(df.queryExecution.optimizedPlan)
+      if r.sizeInBytes <= spark.sessionState.conf.filesMaxPartitionBytes
+      rows <- Try(r.location.listFiles(Nil, Nil).flatMap(_.files).map { f =>
+        ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f.fileStatus, conf), NO_FILTER)
+          .getBlocks.asScala.map(_.getRowCount).sum
+      }.sum).toOption
+    } yield rows
+  }
+
   /** BUILD with filepos: also writes the base table annotated with
-    * `__filepos` plus a key→filepos index with its TLK (half-keyed pattern).
+    * `__filepos` plus a key→filepos index with its TLK (half-keyed pattern),
+    * built by [[build]] from the base just written.
     */
   def buildWithFilepos(df: DataFrame, keys: Seq[String], basePath: String,
       indexPath: String): Unit = {
     // scale-safe filepos assignment: range-partitioned sort + broadcast
     // per-partition offsets (never a single-partition window)
-    val withPos = graft.ops.Positions.withGlobalPosition(
-      df, keys.map(col), "__filepos")
-    withPos.write.mode("overwrite").parquet(basePath)
-    withPos.select((keys.map(col) :+ col("__filepos")): _*)
-      .repartitionByRange(keys.map(col): _*)
-      .sortWithinPartitions(keys.map(col): _*)
-      .write.mode("overwrite").parquet(indexPath)
-    TopLevelKey.write(df.sparkSession, indexPath, keys.head)
+    graft.ops.Positions.withGlobalPosition(df, keys.map(col), "__filepos")
+      .write.mode("overwrite").parquet(basePath)
+    build(Sources.parquet(df.sparkSession, basePath).select((keys :+ "__filepos").map(col): _*),
+      keys, indexPath)
   }
 
   /** INDEX read with keyed filter (TAKindexread :963): the predicate is

@@ -5,7 +5,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import java.io.File
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -35,6 +34,17 @@ import scala.jdk.CollectionConverters._
   * its own aggregate dir and retries against the fresher state, so no
   * consumed part is ever dropped. Manifests with no `#agg` line (state
   * dirs written before it existed) name their aggregate `agg_v<N>`.
+  *
+  * Disk use is bounded: after winning the claim for version N, a refresh
+  * deletes every version up to N−2, its aggregate dir and then its
+  * manifest. Version N−1 stays, so a frame returned by the previous refresh
+  * stays readable while the newest one is published; frames of older
+  * versions must not be read after a later refresh, and a refresh that
+  * peers overtake by two versions while it merges fails on its deleted
+  * input. Pruning frees version numbers: a refresher that merged on version
+  * N−1 while peers then published N, N+1 and N+2 can win the claim of the
+  * pruned N, below the newest version. Unless the newest version already
+  * holds every part it consumed, it withdraws that claim and retries.
   */
 final class Incremental(
     spark: SparkSession,
@@ -55,13 +65,17 @@ final class Incremental(
     finally stream.close() // directory stream holds an fd until closed
   }
 
-  /** The newest version: (N, consumed part paths, aggregate dir). */
-  private def current: Option[(Int, Set[String], String)] =
-    versions.lastOption.map { v =>
-      val (agg, parts) = Files.readAllLines(Paths.get(s"$stateDir/manifest_v$v.txt"))
-        .asScala.filter(_.nonEmpty).partition(_.startsWith(AggLine))
-      (v, parts.toSet, agg.headOption.fold(s"agg_v$v")(_.stripPrefix(AggLine)))
-    }
+  private def manifestPath(v: Int) = Paths.get(s"$stateDir/manifest_v$v.txt")
+
+  /** Version `v`: (N, consumed part paths, aggregate dir). */
+  private def at(v: Int): (Int, Set[String], String) = {
+    val (agg, parts) = Files.readAllLines(manifestPath(v))
+      .asScala.filter(_.nonEmpty).partition(_.startsWith(AggLine))
+    (v, parts.toSet, agg.headOption.fold(s"agg_v$v")(_.stripPrefix(AggLine)))
+  }
+
+  /** The newest version. */
+  private def current: Option[(Int, Set[String], String)] = versions.lastOption.map(at)
 
   /** Part paths already folded into the current state. */
   def consumed: Set[String] = current.fold(Set.empty[String])(_._2)
@@ -96,14 +110,35 @@ final class Incremental(
     val v = cur.fold(0)(_._1) + 1
     val agg = s"agg_v$v-${java.util.UUID.randomUUID()}"
     merged.write.parquet(s"$stateDir/$agg")
-    val manifest = (s"$AggLine$agg" +: (seen ++ fresh).toSeq.sorted).mkString("\n")
-    if (ManifestIo.claimLocal(new File(s"$stateDir/manifest_v$v.txt"), manifest))
+    val folded = seen ++ fresh
+    val manifest = (s"$AggLine$agg" +: folded.toSeq.sorted).mkString("\n")
+    val claim = manifestPath(v).toFile
+    val claimed = ManifestIo.claimLocal(claim, manifest)
+    val stale = claimed && current.exists(n => n._1 != v && !folded.subsetOf(n._2))
+    if (stale) claim.delete()
+    if (claimed && !stale) {
+      prune(v)
       (aggAt(agg), fresh)
-    else {
-      // a concurrent refresher published version v first
-      val dir = new Path(s"$stateDir/$agg")
-      dir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dir, true)
+    } else {
+      // a concurrent refresher published version v first, or v was pruned
+      delete(agg)
       refresh(parts)
+    }
+  }
+
+  private def delete(dir: String): Unit = {
+    val path = new Path(s"$stateDir/$dir")
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(path, true)
+  }
+
+  /** Deletes every version up to `v`−2: its aggregate dir, then its
+    * manifest, so an interrupted prune leaves no aggregate unnamed. A
+    * version a concurrent prune already deleted is skipped.
+    */
+  private def prune(v: Int): Unit = versions.filter(_ <= v - 2).foreach { old =>
+    scala.util.Try(at(old)).foreach { case (_, _, agg) =>
+      delete(agg)
+      Files.deleteIfExists(manifestPath(old))
     }
   }
 

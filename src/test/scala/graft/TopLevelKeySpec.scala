@@ -64,24 +64,38 @@ class TopLevelKeySpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(files == expected, s"$pred scanned $files parts, expected $expected")
   }
 
+  private def withConf[T](key: String, value: String)(f: => T): T = {
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try f finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   private lazy val rows = spark.range(0, 400).withColumn("v", (col("id") % 7).cast("int"))
+
+  /** Leading keys of each prunable kind: the key column over `id`, and the
+    * key value of a given `id`.
+    */
+  private val keyed = Seq(
+    ("long", col("id") * 3, (i: Long) => lit(i * 3)),
+    ("int", (col("id") * 3).cast("int"), (i: Long) => lit((i * 3).toInt)),
+    ("string", format_string("k%05d", col("id")), (i: Long) => lit(f"k$i%05d")),
+    ("date", date_add(lit(java.sql.Date.valueOf("2020-01-01")), col("id").cast("int")),
+      (i: Long) => lit(java.sql.Date.valueOf(java.time.LocalDate.of(2020, 1, 1).plusDays(i)))))
+
+  /** Point, In, range and flipped-comparison predicates on `k` over ids 0–399. */
+  private def keyPreds(k: Column, at: Long => Column): Seq[Column] =
+    Seq(k === at(399), at(7) === k, k <=> at(250), k.isin(at(3), at(398)),
+      k.between(at(90), at(310)), k < at(50), at(50) >= k, k > at(380),
+      at(200) < k, k >= at(399), k <= at(0), (k === at(5)) || (k === at(395)),
+      (k > at(100)) && (k < at(120)), k.isin(at(390), lit(null)))
 
   test("long, int, string and date leading keys: point, In, range and " +
       "flipped comparisons scan only the parts that hold a match") {
-    val keyed = Seq(
-      ("long", col("id") * 3, (i: Long) => lit(i * 3)),
-      ("int", (col("id") * 3).cast("int"), (i: Long) => lit((i * 3).toInt)),
-      ("string", format_string("k%05d", col("id")), (i: Long) => lit(f"k$i%05d")),
-      ("date", date_add(lit(java.sql.Date.valueOf("2020-01-01")), col("id").cast("int")),
-        (i: Long) => lit(java.sql.Date.valueOf(java.time.LocalDate.of(2020, 1, 1).plusDays(i)))))
     for ((kind, key, at) <- keyed) {
       val dir = index(rows.withColumn("k", key).select("k", "v", "id"), kind, "k")
       assert(parts(dir).size == 4)
       val k = col("k")
-      for (pred <- Seq(k === at(399), at(7) === k, k <=> at(250), k.isin(at(3), at(398)),
-          k.between(at(90), at(310)), k < at(50), at(50) >= k, k > at(380),
-          at(200) < k, k >= at(399), k <= at(0), (k === at(5)) || (k === at(395)),
-          (k > at(100)) && (k < at(120)), k.isin(at(390), lit(null))))
+      for (pred <- keyPreds(k, at))
         assertScans(dir, pred, partsWith(dir, pred))
       assertScans(dir, k > at(399), 0)
       assertScans(dir, k < at(0), 0)
@@ -172,11 +186,6 @@ class TopLevelKeySpec extends SparkSpec with AdaptiveSparkPlanHelper {
       current_date().as("d"), (col("id") / 3).cast("decimal(12,2)").as("dec"),
       array(col("v")).as("arr"), struct(col("v").as("x")).as("st"))
     val dir = index(df, "schema", "k")
-    def withConf[T](key: String, value: String)(f: => T): T = {
-      val old = spark.conf.getOption(key)
-      spark.conf.set(key, value)
-      try f finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-    }
     for (ntz <- Seq("true", "false"); bin <- Seq("true", "false"))
       withConf("spark.sql.parquet.inferTimestampNTZ.enabled", ntz) {
         withConf("spark.sql.parquet.binaryAsString", bin) {
@@ -199,5 +208,127 @@ class TopLevelKeySpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(rows.length == 1)
       assert((jobs, tasks) == (1, 1), s"key $key: $jobs jobs, $tasks tasks")
     }
+  }
+
+  /** `df` written as parquet and read back: a plain parquet read. */
+  private def stored(df: DataFrame, name: String): DataFrame = {
+    val dir = tmp(s"$name-input")
+    df.write.parquet(dir)
+    Sources.parquet(spark, dir)
+  }
+
+  /** The parts' `keys` in part-name order, then in file order, equal the
+    * whole index's sorted by `keys` (nulls first): each part is sorted and
+    * the parts' key ranges are ordered by name.
+    */
+  private def assertOrdered(dir: String, keys: Seq[String]): Unit = {
+    val byPart = parts(dir).flatMap(p => spark.read.parquet(p).select(keys.map(col): _*).collect())
+    val sorted = spark.read.parquet(dir).select(keys.map(col): _*)
+      .orderBy(keys.map(col(_).asc_nulls_first): _*).collect().toSeq
+    assert(byPart == sorted, s"$dir: parts out of key order")
+  }
+
+  /** Builds the parquet read `in` into a 4-part index twice: with
+    * `spark.sql.files.maxPartitionBytes` at the input's size, through the
+    * one-task path (1 job, 1 task), then one byte below it, through the range
+    * shuffle (≥ 2 jobs). Checks both layouts' key order and returns each dir
+    * with whether it is the one-task build.
+    */
+  private def bothBuilds(in: DataFrame, name: String, keys: String*): Seq[(String, Boolean)] = {
+    val bytes = in.inputFiles.map(f => new java.io.File(new java.net.URI(f)).length).sum
+    for (oneTask <- Seq(true, false)) yield {
+      val dir = tmp(s"$name-${if (oneTask) "one-task" else "shuffle"}")
+      val (_, jobs, tasks) = withConf("spark.sql.files.maxPartitionBytes",
+          (if (oneTask) bytes else bytes - 1).toString) {
+        jobsAndTasks(IndexedTable.build(in, keys, dir, numPartitions = 4))
+      }
+      if (oneTask) assert((jobs, tasks) == (1, 1), s"$name one-task build: $jobs jobs, $tasks tasks")
+      else assert(jobs >= 2, s"$name shuffle build: $jobs jobs")
+      assertOrdered(dir, keys)
+      (dir, oneTask)
+    }
+  }
+
+  test("one-task and shuffle builds of long, string and date keys, with nulls " +
+      "and a key spanning parts: ordered parts and row-exact keyed reads") {
+    for ((kind, key, at) <- keyed if kind != "int") {
+      // ids 0–399 keyed as above, then 8 null keys, then 150 more rows of
+      // id 150's key: more than a part's 140 rows
+      val in = stored(spark.range(0, 558).select(
+          when(col("id") >= 408, at(150)).when(col("id") >= 400, lit(null))
+            .otherwise(key).as("k"),
+          (col("id") % 7).cast("int").as("v"), col("id")), kind)
+      for ((dir, oneTask) <- bothBuilds(in, kind, "k")) {
+        val k = col("k")
+        if (oneTask) assert(parts(dir).size == 4)
+        val nulls = parts(dir).map(p => spark.read.parquet(p).filter(k.isNull).count())
+        assert(nulls.head == 8 && nulls.tail.forall(_ == 0), s"$kind: nulls per part $nulls")
+        val dup = partsWith(dir, k === at(150))
+        if (oneTask) assert(dup >= 2, s"$kind: the duplicate key spans no part boundary")
+        else assert(dup == 1, s"$kind: a shuffle build split one key over $dup parts")
+        for (pred <- keyPreds(k, at) ++ Seq(k.isNull, k <=> at(150), k === at(150)))
+          assertScans(dir, pred, partsWith(dir, pred))
+      }
+    }
+  }
+
+  test("one-task and shuffle builds of a two-column key, fewer rows than " +
+      "parts and an empty input") {
+    val two = stored(rows.select((col("id") / 150).cast("long").as("a"), col("id").as("b"),
+      col("v")), "two")
+    for ((dir, _) <- bothBuilds(two, "two", "a", "b"); a <- 0 to 2)
+      assertScans(dir, col("a") === a, partsWith(dir, col("a") === a))
+
+    val few = stored(Seq((3L, "c"), (1L, "a"), (2L, "b")).toDF("k", "s"), "few")
+    for ((dir, oneTask) <- bothBuilds(few, "few", "k")) {
+      if (oneTask) assert(parts(dir).size == 3)
+      for (key <- 0L to 3L)
+        assertScans(dir, col("k") === key, partsWith(dir, col("k") === key))
+    }
+
+    val empty = stored(rows.select(col("id").as("k"), col("v")).filter(lit(false)), "none")
+    for ((dir, _) <- bothBuilds(empty, "none", "k")) {
+      assert(Sources.parquet(spark, dir).schema == spark.read.parquet(dir).schema)
+      assertScans(dir, col("k") === 1L, 0)
+    }
+  }
+
+  test("a small parquet build runs one job with one task: equal parts in key order") {
+    val dir = tmp("small")
+    val (_, jobs, tasks) = jobsAndTasks(IndexedTable.build(
+      Tables.customer(spark, sf).withColumn("gen", lit(1)), Seq("c_custkey"), dir, 4))
+    assert((jobs, tasks) == (1, 1), s"$jobs jobs, $tasks tasks")
+    val sizes = parts(dir).map(p => spark.read.parquet(p).count())
+    val perPart = (sizes.sum + 3) / 4
+    assert(sizes.size == 4 && sizes.init.forall(_ == perPart) && sizes.last <= perPart, sizes)
+    assertOrdered(dir, Seq("c_custkey"))
+  }
+
+  test("a filtered parquet input and a generated input keep the range shuffle") {
+    val in = stored(rows, "filtered")
+    for ((name, df) <- Seq("filtered" -> in.filter(col("v") =!= 3), "range" -> rows)) {
+      val dir = tmp(name)
+      val (_, jobs, _) = jobsAndTasks(IndexedTable.build(df, Seq("id"), dir, 4))
+      assert(jobs >= 2, s"$name: $jobs jobs")
+      assert(parts(dir).size == 4)
+      assertOrdered(dir, Seq("id"))
+    }
+  }
+
+  test("buildWithFilepos builds its index from the base it wrote: one-task " +
+      "index, FETCH by position unchanged") {
+    val orders = Tables.orders(spark, sf)
+    val (base, idx) = (tmp("fetch-base"), tmp("fetch-index"))
+    val (_, jobs, tasks) = jobsAndTasks(
+      IndexedTable.buildWithFilepos(orders, Seq("o_orderkey"), base, idx))
+    // the positions pass and base write, then the index build: one job, one task
+    assert((jobs, tasks) == (5, 5), s"$jobs jobs, $tasks tasks")
+    assert(parts(idx).size == 1)
+    assertOrdered(idx, Seq("o_orderkey"))
+    val got = IndexedTable.fetch(spark, base, idx, col("o_orderkey") <= 1000)
+      .select("o_orderkey", "o_orderstatus").orderBy("o_orderkey").collect().toSeq
+    val want = orders.filter(col("o_orderkey") <= 1000)
+      .select("o_orderkey", "o_orderstatus").orderBy("o_orderkey").collect().toSeq
+    assert(got.nonEmpty && got == want)
   }
 }

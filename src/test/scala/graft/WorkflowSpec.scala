@@ -699,9 +699,11 @@ class WorkflowSpec extends SparkSpec {
       .collect().map(r => (r.getInt(0), r.getDecimal(1).doubleValue, r.getLong(2)))
       .toSeq
     assert(norm(st) == expected && norm(b.state.get) == expected)
-    // the losing attempt's aggregate dir is gone: one dir per version
-    val aggs = new java.io.File(s"$base/state").list().filter(_.startsWith("agg_"))
-    assert(aggs.length == 3, aggs.toSeq)
+    // the losing attempt's aggregate dir is gone, and version 1 was pruned
+    // when version 3 was published: one dir for each of versions 2 and 3
+    val state = new java.io.File(s"$base/state").list().toSeq
+    assert(state.filter(_.startsWith("agg_")).map(_.takeWhile(_ != '-')).sorted ==
+      Seq("agg_v2", "agg_v3"), state)
   }
 
   test("incremental aggregate: a state dir whose manifests name no " +
@@ -724,5 +726,40 @@ class WorkflowSpec extends SparkSpec {
     assert(read == Seq(s"$base/part1"))
     assert(st.orderBy("k").as[(Int, Long)].collect().toSeq ==
       Seq((1, 2L), (2, 1L)))
+  }
+  test("incremental aggregate: each refresh prunes every version but the " +
+      "newest two, a legacy agg_v<N> dir too, and the state stays exact") {
+    import graft.workflow.Incremental
+    val base = s"target/graft_io/inc_prune/${System.nanoTime()}"
+    val rows = Seq((1, 10.0), (2, 5.0), (1, 40.0), (3, 1.0), (2, 7.0), (1, 2.0), (4, 3.0),
+      (3, 8.0), (2, 6.0), (1, 9.0))
+    val paths = rows.grouped(2).zipWithIndex.map { case (g, i) =>
+      val p = s"$base/part$i"
+      g.toDF("k", "v").write.parquet(p)
+      p
+    }.toSeq
+    val aggs = Seq(Incremental.sumOf("v", "s"), Incremental.countAll("n"))
+    // version 1 in the earlier layout: agg_v1 and a bare part list
+    spark.read.parquet(paths.head).groupBy(col("k"))
+      .agg(aggs.head.first, aggs(1).first).write.parquet(s"$base/state/agg_v1")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$base/state/manifest_v1.txt"), paths.head)
+    val inc = new Incremental(spark, s"$base/state", Seq("k"), aggs)
+    // four refreshes publish versions 2 to 5
+    val states = (2 to 5).map(i => inc.refresh(paths.take(i))._1)
+    val files = new java.io.File(s"$base/state").list().toSeq.sorted
+    assert(files.filter(_.startsWith("manifest_v")) == Seq("manifest_v4.txt", "manifest_v5.txt") &&
+      files.filter(_.startsWith("agg_")).map(_.takeWhile(_ != '-')) == Seq("agg_v4", "agg_v5"),
+      files)
+    def scratch(n: Int) = rows.take(n).toDF("k", "v").groupBy(col("k"))
+      .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
+      .orderBy(col("k")).collect()
+      .map(r => (r.getInt(0), r.getDouble(1), r.getLong(2))).toSeq
+    def norm(df: org.apache.spark.sql.DataFrame) = df.orderBy(col("k"))
+      .collect().map(r => (r.getInt(0), r.getDecimal(1).doubleValue, r.getLong(2))).toSeq
+    assert(inc.consumed == paths.toSet)
+    assert(norm(inc.state.get) == scratch(10) && norm(states(3)) == scratch(10))
+    // the previous refresh's frame, version 4, stays readable
+    assert(norm(states(2)) == scratch(8))
   }
 }
