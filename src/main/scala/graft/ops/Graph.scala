@@ -30,7 +30,8 @@ object Graph {
 
   /** Large-star round: every node connects its LARGER neighbors to its
     * minimum known neighbor (or itself). Input/output edges oriented
-    * u > v; output is distinct. One groupBy shuffle + one join.
+    * u > v; output is distinct. One groupBy shuffle + one join, both
+    * hash-partitioned on the node id (PlanAuditSpec pins the plan).
     */
   private[graft] def largeStar(edges: DataFrame): DataFrame = {
     val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
@@ -76,19 +77,11 @@ object Graph {
     * bounded by the partition's node count (≤ 2× its rows ≤
     * maxPartitionBytes-sized), not the graph.
     */
-  private[graft] def localContract(edges: DataFrame,
-      rawCount: Option[org.apache.spark.util.LongAccumulator] = None,
-      outCount: Option[org.apache.spark.util.LongAccumulator] = None)
-      : DataFrame = {
+  private[graft] def localContract(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     edges.select(col("u"), col("v")).as[(Long, Long)]
-      .mapPartitions { it0 =>
-        // optional pre-contract input / star-forest output row counts,
-        // observed inside the SAME pass (no second evaluation of the
-        // upstream refine) — CcProbe prints the contraction ratio (raw
-        // pairs vs rows entering the first distinct() shuffle) from one run
-        val it = rawCount.fold(it0)(acc => it0.map { e => acc.add(1); e })
+      .mapPartitions { it =>
         val parent = new java.util.HashMap[Long, Long]()
         def find(x: Long): Long = {
           var r = x
@@ -110,19 +103,11 @@ object Graph {
         val kit = parent.keySet().iterator()
         var i = 0
         while (kit.hasNext) { keys(i) = kit.next(); i += 1 }
-        val out = keys.iterator.map(k => (k, find(k)))
+        keys.iterator.map(k => (k, find(k)))
           .filter { case (k, r) => k != r }
-        outCount.fold(out)(acc => out.map { e => acc.add(1); e })
       }
       .toDF("u", "v")
   }
-
-  /** Formatted physical plan of one large-star round (PLANS.md evidence —
-    * the component loop itself is iterative, one such plan per round).
-    */
-  def largeStarPlan(edges: DataFrame): String =
-    largeStar(edges).queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
 
   /** Connected components by alternating large-star / small-star
     * contraction (Kiveris et al., "Connected Components in MapReduce and
@@ -143,29 +128,8 @@ object Graph {
     */
   def connectedComponents(vertices: DataFrame, vid: Column,
       edges: DataFrame, src: Column, dst: Column,
-      maxRounds: Int = 30): DataFrame =
-    connectedComponentsReleasable(vertices, vid, edges, src, dst,
-      maxRounds)._1
-
-  /** [[connectedComponents]] plus a release handle for the RESULT's
-    * checkpoint blocks (O(|V|) label rows — everything larger is already
-    * released before returning). The plain variant leaves the label
-    * frame pinned until the ContextCleaner collects it after a driver
-    * GC; long-lived sessions running many component jobs should call
-    * `release()` once the labels are consumed.
-    */
-  def connectedComponentsReleasable(vertices: DataFrame, vid: Column,
-      edges: DataFrame, src: Column, dst: Column,
-      maxRounds: Int = 30,
-      localContraction: Boolean = true,
-      // single-JVM rehearsals of cluster-sized inputs pass DISK_ONLY so
-      // round checkpoints spill instead of crowding the one shared heap
-      // (the r15 64 GB `ser` discipline); on a cluster the default holds
-      ckLevel: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      : (DataFrame, () => Unit) = {
-    def checkpointEager(df: DataFrame) =
-      graft.workflow.Workflow.checkpointEager(df, ckLevel)
+      maxRounds: Int = 30): DataFrame = {
+    import graft.workflow.Workflow.{checkpointEager, checkpointLazy, Checkpointed}
     val verts = vertices.select(vid.cast("long").as("id"))
     // superseded rounds release their checkpoint blocks through the RDD
     // handle (Workflow.Checkpointed) — Dataset.unpersist is a no-op on
@@ -177,8 +141,6 @@ object Graph {
       .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
       .select(greatest(col("u"), col("v")).as("u"),
         least(col("u"), col("v")).as("v"))
-    def checkpointLazy(df: DataFrame) =
-      graft.workflow.Workflow.checkpointLazy(df, ckLevel)
     // contract BEFORE the distinct(): the first shuffle then carries the
     // per-partition star forests (≤ raw edge count, far less on the dense
     // clusters near-dup graphs produce) instead of the raw pair stream.
@@ -189,10 +151,9 @@ object Graph {
     // rdd-level count: ONE plain job that both materializes the lazy
     // checkpoint's blocks and returns the row count — a Dataset count
     // plans an exchange that AQE materializes as a separate job
-    def countMaterializing(ck: graft.workflow.Workflow.Checkpointed): Long =
+    def countMaterializing(ck: Checkpointed): Long =
       ck.df.queryExecution.toRdd.count()
-    var e = checkpointLazy(
-      (if (localContraction) localContract(oriented) else oriented).distinct())
+    var e = checkpointLazy(localContract(oriented).distinct())
     var eCount = countMaterializing(e)
     var converged = false
     var rounds = 0
@@ -220,11 +181,12 @@ object Graph {
     // edge checkpoint can be released before returning — otherwise each
     // call leaves |E| blocks pinned until driver GC, and back-to-back
     // component runs degrade as dead blocks crowd the store (measured
-    // 128 s → 252 s across two sf10 runs in one session).
+    // 128 s → 252 s across two sf10 runs in one session). The O(|V|)
+    // label blocks stay until the ContextCleaner collects the frame.
     val roots = e.df.groupBy(col("u").as("id")).agg(min(col("v")).as("m"))
     val out = checkpointEager(verts.join(roots, Seq("id"), "left")
       .select(col("id"), coalesce(col("m"), col("id")).as("component")))
     e.release()
-    (out.df, out.release)
+    out.df
   }
 }

@@ -21,16 +21,7 @@ object Shape {
     * CSE row). Use on any subplan consumed more than once.
     */
   def split(df: DataFrame): DataFrame =
-    split(df, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-  /** [[split]] with an explicit storage level: single-JVM rehearsals of
-    * cluster-sized inputs persist serialized/disk-backed so the fixture's
-    * storage does not crowd the one shared heap (on a cluster the same
-    * blocks spread across executors); semantics are identical.
-    */
-  def split(df: DataFrame,
-      level: org.apache.spark.storage.StorageLevel): DataFrame =
-    df.persist(level)
+    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** MERGE(ds1, ds2, SORTED(keys) [, DEDUP]) (TAKmerge :937): ordered merge
     * of sorted inputs. In a declarative plan union+orderBy yields the same

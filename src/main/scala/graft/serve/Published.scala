@@ -421,14 +421,21 @@ final class Published(spark: SparkSession) {
         (0 until kids.getLength).map(kids.item)
           .collect { case e: org.w3c.dom.Element => e }
       }
-      // descend Envelope/Body if present, then into a *Request wrapper
+      // descend Envelope/Body if present: the params are the children of
+      // its first element (the *Request wrapper), else of the root
       var cur: org.w3c.dom.Element = doc.getDocumentElement
       if (isSoap) elems(cur).find(_.getLocalName == "Body")
         .flatMap(b => elems(b).headOption).foreach(cur = _)
-      if (cur.getLocalName.endsWith("Request"))
-        (elems(cur).map(e => e.getLocalName -> e.getTextContent).toMap, isSoap)
-      else (elems(cur).map(e => e.getLocalName -> e.getTextContent).toMap, isSoap)
+      (elems(cur).map(e => e.getLocalName -> e.getTextContent).toMap, isSoap)
     }
+    // urlencoded `k=v&...` params (query string or form body); a malformed
+    // escape throws IllegalArgumentException
+    def formParams(encoded: String): Map[String, String] =
+      encoded.split('&').filter(_.contains('=')).map { kv =>
+        val Array(k, v) = kv.split("=", 2)
+        java.net.URLDecoder.decode(k, "UTF-8") ->
+          java.net.URLDecoder.decode(v, "UTF-8")
+      }.toMap
     srv.createContext("/queries",
       (ex: com.sun.net.httpserver.HttpExchange) =>
         respond(ex, 200, list.map(jsonStr).mkString("[", ",", "]")))
@@ -439,12 +446,6 @@ final class Published(spark: SparkSession) {
       (ex: com.sun.net.httpserver.HttpExchange) => {
         val name = ex.getRequestURI.getPath.stripPrefix("/query/")
         def handle(): Unit = {
-        val qsParams = Option(ex.getRequestURI.getRawQuery).getOrElse("")
-          .split('&').filter(_.contains('=')).map { kv =>
-            val Array(k, v) = kv.split("=", 2)
-            java.net.URLDecoder.decode(k, "UTF-8") ->
-              java.net.URLDecoder.decode(v, "UTF-8")
-          }.toMap
         val bodyText =
           if (ex.getRequestMethod == "POST")
             scala.io.Source.fromInputStream(ex.getRequestBody, "UTF-8").mkString
@@ -452,17 +453,21 @@ final class Published(spark: SparkSession) {
         val contentType = Option(ex.getRequestHeaders.getFirst("Content-Type"))
           .getOrElse("")
         var soapIn = false
-        val bodyParams: Map[String, String] =
-          if (bodyText.isEmpty) Map.empty
-          else if (contentType.contains("xml")) {
-            try { val (p, s) = xmlParams(bodyText); soapIn = s; p }
-            catch { case _: Exception => Map.empty }
-          } else bodyText.split('&').filter(_.contains('=')).map { kv =>
-            val Array(k, v) = kv.split("=", 2)
-            java.net.URLDecoder.decode(k, "UTF-8") ->
-              java.net.URLDecoder.decode(v, "UTF-8")
-          }.toMap
-        val params = qsParams ++ bodyParams
+        val params = try {
+          formParams(Option(ex.getRequestURI.getRawQuery).getOrElse("")) ++ (
+            if (bodyText.isEmpty) Map.empty[String, String]
+            else if (contentType.contains("xml")) {
+              try { val (p, s) = xmlParams(bodyText); soapIn = s; p }
+              catch { case _: Exception => Map.empty[String, String] }
+            } else formParams(bodyText))
+        } catch {
+          // a malformed %-escape is the client's error: answer it, never
+          // let the handler throw (the server would drop the connection)
+          case e: IllegalArgumentException =>
+            respond(ex, 400, s"""{"error":${jsonStr(
+              s"malformed urlencoded parameters: ${e.getMessage}")}}""")
+            return
+        }
         val accept = Option(ex.getRequestHeaders.getFirst("Accept"))
           .getOrElse("")
         val wantXml = soapIn || accept.contains("xml") ||

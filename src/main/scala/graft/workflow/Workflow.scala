@@ -56,11 +56,6 @@ object Workflow {
     cached
   }
 
-  /** LOOP(ds, n, body) (TAKloopcount :987): driver-side iteration;
-    * localCheckpoint every few rounds truncates lineage so plans don't
-    * grow exponentially (`LFparallel` flags :2671 are Spark's scheduler's
-    * concern).
-    */
   /** A localCheckpoint'd frame plus a handle that ACTUALLY releases its
     * blocks. `Dataset.unpersist()` is a no-op here: checkpoint blocks are
     * RDD-level persistence on the internal RDD, not a CacheManager entry,
@@ -71,22 +66,11 @@ object Workflow {
   private[graft] final case class Checkpointed(df: DataFrame,
       release: () => Unit)
 
-  private[graft] def checkpointEager(df: DataFrame): Checkpointed =
-    checkpointEager(df,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-  /** [[checkpointEager]] at an explicit storage level (DISK_ONLY keeps a
-    * huge checkpoint out of a single-JVM rehearsal's heap; the default
-    * matches `localCheckpoint()`'s MEMORY_AND_DISK).
+  /** Eager localCheckpoint at MEMORY_AND_DISK (`localCheckpoint()`'s
+    * level): one job materializes the blocks before this returns.
     */
-  private[graft] def checkpointEager(df: DataFrame,
-      level: org.apache.spark.storage.StorageLevel): Checkpointed = {
-    val ck = df.localCheckpoint(true, level)
-    val rdds = ck.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }
-    Checkpointed(ck, () => rdds.foreach(_.unpersist(blocking = false)))
-  }
+  private[graft] def checkpointEager(df: DataFrame): Checkpointed =
+    checkpoint(df, eager = true)
 
   /** LAZY localCheckpoint: the caller's FIRST action over the returned
     * frame materializes the blocks as a side effect (RDD persistence
@@ -102,16 +86,23 @@ object Workflow {
     * wrongness) — for frames consumed twice structurally (e.g. smallStar's
     * groupBy+join input), keep [[checkpointEager]].
     */
-  private[graft] def checkpointLazy(df: DataFrame,
-      level: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): Checkpointed = {
-    val ck = df.localCheckpoint(false, level)
+  private[graft] def checkpointLazy(df: DataFrame): Checkpointed =
+    checkpoint(df, eager = false)
+
+  private def checkpoint(df: DataFrame, eager: Boolean): Checkpointed = {
+    val ck = df.localCheckpoint(eager,
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val rdds = ck.queryExecution.analyzed.collect {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }
     Checkpointed(ck, () => rdds.foreach(_.unpersist(blocking = false)))
   }
 
+  /** LOOP(ds, n, body) (TAKloopcount :987): driver-side iteration;
+    * localCheckpoint every few rounds truncates lineage so plans don't
+    * grow exponentially (`LFparallel` flags :2671 are Spark's scheduler's
+    * concern).
+    */
   def loopN(df: DataFrame, n: Int, checkpointEvery: Int = 4)(
       body: (DataFrame, Int) => DataFrame): DataFrame = {
     var cur = df

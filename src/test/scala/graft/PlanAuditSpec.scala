@@ -341,6 +341,34 @@ class PlanAuditSpec extends SparkSpec {
       s"expected the distinct() exchange above the pre-pass:\n${nodes.head}")
   }
 
+  test("one executed large-star round plans hash exchanges and a " +
+      "partial+final aggregate, never a cartesian or nested-loop join") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, Partial}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // a chain oriented u > v: every node has a larger neighbor to re-point
+    val edges = spark.range(1, 500)
+      .select((col("id") + 1).as("u"), col("id").as("v"))
+    val round = graft.ops.Graph.largeStar(edges)
+    assert(round.count() > 0)
+    val nodes = new AdaptiveSparkPlanHelper {}
+      .collect(round.queryExecution.executedPlan) { case p => p }
+    val plan = nodes.head.toString
+    assert(nodes.exists {
+      case s: ShuffleExchangeExec => s.outputPartitioning.isInstanceOf[HashPartitioning]
+      case _ => false
+    }, s"no hash exchange:\n$plan")
+    val modes = nodes.collect { case a: HashAggregateExec =>
+      a.aggregateExpressions.map(_.mode) }.flatten.toSet
+    assert(modes.contains(Partial) && modes.contains(Final),
+      s"per-node min is not a partial+final HashAggregate:\n$plan")
+    val names = nodes.map(_.nodeName)
+    assert(!names.exists(n => n.contains("CartesianProduct") ||
+      n.contains("BroadcastNestedLoopJoin")), s"plan:\n$plan")
+  }
+
   // driver-ADVICE r16 (low): forcing forceOptimizeSkewedJoin in the
   // certified pin disables AQE's cost-evaluator veto, so the pin no longer
   // shows the UNFORCED path adopting the split. This probe records (never

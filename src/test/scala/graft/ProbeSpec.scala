@@ -40,6 +40,25 @@ class ProbeSpec extends SparkSpec {
     assert(exec.contains("== q01_agg ==") && exec.contains("Scan parquet"), exec)
   }
 
+  test("q99's connected-components loop is probed through the registered " +
+      "query: round checkpoints in exec-plans, one line per job in jobs") {
+    val q = "q99_dedup_components"
+    assert(probe("exec-plans", q, "cc").contains("[exec-plans] wrote"))
+    val exec = Files.readString(plans.resolve(s"cc/$q.exec.txt"))
+    val checkpoints = exec.split("== action: ").toSeq.drop(1)
+      .filter(_.startsWith("localCheckpoint"))
+    // the initial edge set, then per star round a large-star and a
+    // small-star checkpoint, then the labels
+    assert(checkpoints.size >= 4, exec)
+    checkpoints.foreach { a =>
+      assert(!a.contains("CartesianProduct") &&
+        !a.contains("BroadcastNestedLoopJoin"), a)
+    }
+    val jobs = probe("jobs", q, "1")
+    assert("jobs=(\\d+)".r.findFirstMatchIn(jobs).exists(_.group(1).toInt > 1) &&
+      jobs.linesIterator.count(_.startsWith("[jobs]   job ")) > 1, jobs)
+  }
+
   test("an unknown mode or query is rejected") {
     intercept[RuntimeException](probe("bogus", "q01_agg"))
     intercept[IllegalArgumentException](probe("time", "no_such_query"))

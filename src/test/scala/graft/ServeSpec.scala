@@ -123,6 +123,40 @@ class ServeSpec extends SparkSpec {
     } finally pub.stopServing()
   }
 
+  test("a form body with a malformed escape answers 400 with the error " +
+      "envelope") {
+    val pub = new graft.serve.Published(spark)
+    pub.publish("top_nation") { (s, stored) =>
+      import s.implicits._
+      Seq((1, "KENYA"), (2, "PERU")).toDF("k", "n")
+        .limit(stored.long("limit", 2L).toInt)
+    }
+    val port = pub.serve(0)
+    try {
+      def post(body: String): (Int, String) = {
+        val conn = new java.net.URI(s"http://127.0.0.1:$port/query/top_nation")
+          .toURL.openConnection().asInstanceOf[java.net.HttpURLConnection]
+        conn.setRequestMethod("POST")
+        conn.setRequestProperty("Content-Type",
+          "application/x-www-form-urlencoded")
+        conn.setDoOutput(true)
+        val os = conn.getOutputStream
+        try os.write(body.getBytes("UTF-8")) finally os.close()
+        val code = conn.getResponseCode
+        val is = if (code >= 400) conn.getErrorStream else conn.getInputStream
+        (code, scala.io.Source.fromInputStream(is, "UTF-8").mkString)
+      }
+      for (body <- Seq("key=%zz", "limit=1%")) {
+        val (code, text) = post(body)
+        assert(code == 400 && text.startsWith("{\"error\":\"malformed"),
+          s"$body -> $code $text")
+      }
+      // the server keeps serving well-formed requests
+      val (ok, text) = post("limit=1")
+      assert(ok == 200 && text.contains("\"rowCount\":1"), text)
+    } finally pub.stopServing()
+  }
+
   test("workunits: record/exists/list filters/timestamps/files/messages") {
     val wu = new graft.serve.Workunits(spark)
     val dir = "/root/repo/target/graft_io/wu_spec"
