@@ -224,6 +224,9 @@ object TopLevelKey {
     * relation is the one `spark.read.schema(s).parquet(root)` builds, over a
     * file index that keeps only the parts whose key stats can match the
     * pushed filters; the filters themselves still run on every row read.
+    * The first TLK read on a session adds [[IndexLookup]] to its planner,
+    * which serves a read whose kept parts make one file split on the
+    * calling thread.
     */
   def read(spark: SparkSession, root: Path): Option[DataFrame] = try {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -247,10 +250,14 @@ object TopLevelKey {
         f <- schema.fields.find(_.name == tlk.key) if k.accepts(f.dataType)
       } yield (f.name, f.dataType, k)
       val index = PartIndex(root, tlk.parts.map(p => (byName(p.name), p.stats)), key)
+      IndexLookup.inject(spark)
       spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(),
         GraftBridge.asNullable(schema), None, new ParquetFileFormat, Map.empty)(spark))
     }
   } catch { case NonFatal(_) => None }
+
+  /** Whether `index` is the file index of a TLK read. */
+  private[sources] def isIndex(index: FileIndex): Boolean = index.isInstanceOf[PartIndex]
 
   /** The parts of one TLK'd dir. `listFiles` drops a part only when its
     * leading-key stats prove that no row can satisfy some pushed filter.

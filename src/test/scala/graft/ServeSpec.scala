@@ -157,6 +157,34 @@ class ServeSpec extends SparkSpec {
     } finally pub.stopServing()
   }
 
+  test("a GET whose query string holds a malformed escape gets the JDK " +
+      "server's own 400, and the next GET on a new connection answers 200") {
+    val pub = new graft.serve.Published(spark)
+    pub.publish("top_nation") { (s, stored) =>
+      import s.implicits._
+      Seq((1, "KENYA"), (2, "PERU")).toDF("k", "n")
+        .limit(stored.long("limit", 2L).toInt)
+    }
+    val port = pub.serve(0)
+    // the JDK's URI refuses to build `%zz` client-side: write the request
+    // line on a raw socket and read the whole reply
+    def raw(target: String): String = {
+      val socket = new java.net.Socket("127.0.0.1", port)
+      try {
+        socket.setSoTimeout(30000)
+        socket.getOutputStream.write((s"GET $target HTTP/1.1\r\nHost: 127.0.0.1\r\n" +
+          "Connection: close\r\n\r\n").getBytes("US-ASCII"))
+        new String(socket.getInputStream.readAllBytes(), "UTF-8")
+      } finally socket.close()
+    }
+    try {
+      val bad = raw("/query/top_nation?key=%zz")
+      assert(bad.startsWith("HTTP/1.1 400"), bad)
+      val good = raw("/query/top_nation?limit=1")
+      assert(good.startsWith("HTTP/1.1 200") && good.contains("\"rowCount\":1"), good)
+    } finally pub.stopServing()
+  }
+
   test("workunits: record/exists/list filters/timestamps/files/messages") {
     val wu = new graft.serve.Workunits(spark)
     val dir = "/root/repo/target/graft_io/wu_spec"

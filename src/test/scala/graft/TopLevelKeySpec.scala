@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 
 import graft.sources.{IndexedTable, Sources, TopLevelKey}
 import org.apache.hadoop.fs.Path
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -18,6 +19,7 @@ import org.apache.spark.sql.functions._
   */
 class TopLevelKeySpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
+  import TopLevelKeySpec._
 
   private def tmp(name: String): String = Files.createDirectories(
     Paths.get(s"target/graft_io/tlk/$name-${System.nanoTime()}")).resolve("idx").toString
@@ -71,23 +73,6 @@ class TopLevelKeySpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   private lazy val rows = spark.range(0, 400).withColumn("v", (col("id") % 7).cast("int"))
-
-  /** Leading keys of each prunable kind: the key column over `id`, and the
-    * key value of a given `id`.
-    */
-  private val keyed = Seq(
-    ("long", col("id") * 3, (i: Long) => lit(i * 3)),
-    ("int", (col("id") * 3).cast("int"), (i: Long) => lit((i * 3).toInt)),
-    ("string", format_string("k%05d", col("id")), (i: Long) => lit(f"k$i%05d")),
-    ("date", date_add(lit(java.sql.Date.valueOf("2020-01-01")), col("id").cast("int")),
-      (i: Long) => lit(java.sql.Date.valueOf(java.time.LocalDate.of(2020, 1, 1).plusDays(i)))))
-
-  /** Point, In, range and flipped-comparison predicates on `k` over ids 0–399. */
-  private def keyPreds(k: Column, at: Long => Column): Seq[Column] =
-    Seq(k === at(399), at(7) === k, k <=> at(250), k.isin(at(3), at(398)),
-      k.between(at(90), at(310)), k < at(50), at(50) >= k, k > at(380),
-      at(200) < k, k >= at(399), k <= at(0), (k === at(5)) || (k === at(395)),
-      (k > at(100)) && (k < at(120)), k.isin(at(390), lit(null)))
 
   test("long, int, string and date leading keys: point, In, range and " +
       "flipped comparisons scan only the parts that hold a match") {
@@ -197,16 +182,21 @@ class TopLevelKeySpec extends SparkSpec with AdaptiveSparkPlanHelper {
       }
   }
 
-  test("a point lookup on a 4-part index runs one job with one task") {
+  test("a point lookup on a 4-part index runs no job, no task and no Janino compile") {
     val idx = index(Tables.customer(spark, sf), "lookup", "c_custkey")
-    val firstKeys = parts(idx).map(p => 
+    val firstKeys = parts(idx).map(p =>
       spark.read.parquet(p).agg(min("c_custkey")).head.getAs[Number](0).longValue)
     assert(firstKeys.size == 4)
+    def lookup(key: Long) =
+      IndexedTable.keyedRead(spark, idx, col("c_custkey") === key).limit(100).collect()
+    assert(lookup(firstKeys.head + 1).length == 1)
     for (key <- firstKeys) {
-      val (rows, jobs, tasks) = jobsAndTasks(
-        IndexedTable.keyedRead(spark, idx, col("c_custkey") === key).limit(100).collect())
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val (rows, jobs, tasks) = jobsAndTasks(lookup(key))
       assert(rows.length == 1)
-      assert((jobs, tasks) == (1, 1), s"key $key: $jobs jobs, $tasks tasks")
+      assert((jobs, tasks) == (0, 0), s"key $key: $jobs jobs, $tasks tasks")
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
+        s"key $key compiled ${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles} classes")
     }
   }
 
@@ -331,4 +321,23 @@ class TopLevelKeySpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .select("o_orderkey", "o_orderstatus").orderBy("o_orderkey").collect().toSeq
     assert(got.nonEmpty && got == want)
   }
+}
+
+object TopLevelKeySpec {
+  /** Leading keys of each prunable kind: the key column over `id`, and the
+    * key value of a given `id`.
+    */
+  val keyed = Seq(
+    ("long", col("id") * 3, (i: Long) => lit(i * 3)),
+    ("int", (col("id") * 3).cast("int"), (i: Long) => lit((i * 3).toInt)),
+    ("string", format_string("k%05d", col("id")), (i: Long) => lit(f"k$i%05d")),
+    ("date", date_add(lit(java.sql.Date.valueOf("2020-01-01")), col("id").cast("int")),
+      (i: Long) => lit(java.sql.Date.valueOf(java.time.LocalDate.of(2020, 1, 1).plusDays(i)))))
+
+  /** Point, In, range and flipped-comparison predicates on `k` over ids 0–399. */
+  def keyPreds(k: Column, at: Long => Column): Seq[Column] =
+    Seq(k === at(399), at(7) === k, k <=> at(250), k.isin(at(3), at(398)),
+      k.between(at(90), at(310)), k < at(50), at(50) >= k, k > at(380),
+      at(200) < k, k >= at(399), k <= at(0), (k === at(5)) || (k === at(395)),
+      (k > at(100)) && (k < at(120)), k.isin(at(390), lit(null)))
 }
