@@ -112,11 +112,12 @@ final class Published(spark: SparkSession) {
     * server-side; the Spark analog caches the RENDERED response per
     * (name, params, format), and a cache hit skips the evaluation
     * entirely. A miss plans and runs the query: an uncached point lookup
-    * on a 4-part sf0.1 customer index took a median 29 ms of engine time
+    * on a 4-part sf0.1 customer index took a median 18 ms of engine time
     * on a 4-core host (planning included, read on the handler thread with
-    * no Spark job), where it took 62 ms as a one-task Spark job; an
-    * aggregate or a read of several splits runs Spark jobs. Bounded LRU +
-    * TTL; publish/unpublish invalidate the name's entries.
+    * no Spark job, no broadcast and a cached parsed TLK), where it took
+    * 34 ms when each read broadcast its Hadoop conf and 62 ms as a one-task
+    * Spark job; an aggregate or a read of several splits runs Spark jobs.
+    * Bounded LRU + TTL; publish/unpublish invalidate the name's entries.
     *
     * Production posture (all Roxie analogs, each ServeSpec-gated):
     *  - admission control ([[serveBounded]]): bounded workers + queue,

@@ -21,11 +21,11 @@ import org.apache.spark.sql.functions._
   * and leading-key null count, min and max, and the parts' stored layout, so
   * a keyed read lists the dir once, reads no footer and opens only the parts
   * whose key range can match — the reference's TLK probe. Within a part,
-  * row-group min/max stats skip the rest (data skipping). A read left with
-  * one file split runs on the calling thread ([[IndexLookup]]). Readers
-  * fall back to the plain parquet read, all parts, when the dir's files no
-  * longer match the TLK (an append, a rewrite, a partial build) or it is
-  * missing or unreadable.
+  * row-group min/max stats skip the rest (data skipping). A collected or
+  * taken read left with one file split runs on the calling thread
+  * ([[IndexLookup]]). Readers fall back to the plain parquet read, all
+  * parts, when the dir's files no longer match the TLK (an append, a
+  * rewrite, a partial build) or it is missing or unreadable.
   *
   * FETCH (TAKfetch :926) retrieves base-file records by file position; the
   * filepos surrogate here is an explicit `__filepos` column assigned at
@@ -115,10 +115,14 @@ object IndexedTable {
     * pushed to the scan — the TLK drops the parts whose key range cannot
     * match, and row-group stats skip non-matching groups within the rest,
     * like the reference's key-range extraction (`ecl/hql/hqlfilter.hpp:111`).
-    * When the parts left make one file split, the read plans as an
-    * [[IndexLookupExec]]: collected or taken, it is read on the calling
-    * thread with no Spark job, as Roxie answers a keyed lookup on its worker
-    * thread; inside a larger plan it runs as Spark's scan.
+    * The parsed TLK is cached by its file's length and modification time,
+    * so a repeated lookup on an unchanged index lists the dir and parses
+    * nothing, as Roxie keeps index nodes in its node cache. When the read is
+    * collected or taken and the parts left make one file split, it plans as
+    * an [[IndexLookupExec]] and is read on the calling thread with no Spark
+    * job and no broadcast, as Roxie answers a keyed lookup on its worker
+    * thread; inside a larger plan it is Spark's scan, in the same codegen
+    * stage as the operators above it.
     */
   def keyedRead(spark: SparkSession, path: String, pred: Column): DataFrame =
     Sources.parquet(spark, path).filter(pred)

@@ -6,7 +6,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER
 import org.apache.parquet.hadoop.metadata.{FileMetaData, ParquetMetadata}
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -219,23 +219,48 @@ object TopLevelKey {
     } else None
   } catch { case NonFatal(_) => None }
 
+  /** Parsed TLKs by qualified `_tlk` path, length and modification time, the
+    * most recently used [[Cached]] of them. A parsed TLK is a function of the
+    * file's bytes only; whether it still describes its dir is checked per
+    * read, so a stale entry can only send a read to the plain path.
+    */
+  private val Cached = 64
+  private val parsed = new java.util.LinkedHashMap[(String, Long, Long), Tlk](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[(String, Long, Long), Tlk]): Boolean =
+      size() > Cached
+  }
+
+  /** The parsed TLK of the dir `root`: one `getFileStatus`, which fails for a
+    * dir with no TLK, then the file is opened and parsed only when no TLK of
+    * that path, length and modification time is cached.
+    */
+  private def tlkOf(fs: FileSystem, root: Path): Option[Tlk] = {
+    val status = fs.getFileStatus(new Path(root, FileName))
+    val key = (status.getPath.toString, status.getLen, status.getModificationTime)
+    Option(parsed.synchronized(parsed.get(key))).orElse {
+      val in = fs.open(status.getPath)
+      val tlk = try parse(new String(in.readAllBytes(), UTF_8)) finally in.close()
+      tlk.foreach(t => parsed.synchronized(parsed.put(key, t)))
+      tlk
+    }
+  }
+
   /** The TLK read of the dir `root` (qualified), or None when `root` holds no
     * readable TLK or its data files are not exactly the TLK's parts. The
-    * relation is the one `spark.read.schema(s).parquet(root)` builds, over a
-    * file index that keeps only the parts whose key stats can match the
-    * pushed filters; the filters themselves still run on every row read.
-    * The first TLK read on a session adds [[IndexLookup]] to its planner,
-    * which serves a read whose kept parts make one file split on the
-    * calling thread.
+    * parsed TLK is cached across reads; the listing that checks the dir's
+    * files against it, and the schema conversion under the session's confs,
+    * run on every read. The relation is the one
+    * `spark.read.schema(s).parquet(root)` builds, over a file index that
+    * keeps only the parts whose key stats can match the pushed filters; the
+    * filters themselves still run on every row read. The first TLK read on
+    * a session adds [[IndexLookup]] to its planner, which serves a collected
+    * or taken read whose kept parts make one file split on the calling
+    * thread.
     */
   def read(spark: SparkSession, root: Path): Option[DataFrame] = try {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val text = {
-      val in = fs.open(new Path(root, FileName))
-      try new String(in.readAllBytes(), UTF_8) finally in.close()
-    }
     for {
-      tlk <- parse(text)
+      tlk <- tlkOf(fs, root)
       listed = fs.listStatus(root).toSeq
       if !listed.exists(f => f.isDirectory || isSummary(f.getPath.getName))
       data = listed.filterNot(f => hidden(f.getPath.getName))

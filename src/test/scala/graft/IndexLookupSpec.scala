@@ -9,17 +9,19 @@ import graft.sources.{IndexLookup, IndexLookupExec, IndexedTable, Sources}
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{classic, Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
-/** A keyed read whose TLK leaves at most one file split is planned as an
-  * [[IndexLookupExec]] and, as the root of an action, read on the calling
-  * thread: it must return exactly the rows, in the same order, that the
-  * same plan's Spark job returns, run no job, and still skip row groups.
-  * Every other read keeps Spark's own plan.
+/** A collected or taken keyed read whose TLK leaves at most one file split
+  * is planned as an [[IndexLookupExec]] and read on the calling thread: it
+  * must return exactly the rows, in the same order, that the same plan's
+  * Spark job returns, under every reader conf, run no job and no broadcast,
+  * and still skip row groups. Every other read, and an index read inside a
+  * larger plan, keeps Spark's own plan.
   */
 class IndexLookupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
@@ -44,7 +46,8 @@ class IndexLookupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     collect(df.queryExecution.executedPlan) { case e: IndexLookupExec => e }
 
   /** The first `n` rows of `df`'s plan read on the calling thread, and
-    * through the plan's Spark job, each as the bytes of its unsafe row.
+    * through the plan's Spark job, each as the bytes of its unsafe row. The
+    * job's tasks see the session's SQL confs, as an action's tasks do.
     */
   private def bothPaths(df: DataFrame, n: Int): (Seq[String], Seq[String]) = {
     val plan = df.queryExecution.executedPlan
@@ -52,25 +55,33 @@ class IndexLookupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     def render(rows: Seq[InternalRow]) =
       rows.map(r => HexFormat.of.formatHex(unsafe(r).getBytes))
     val local = if (n == Int.MaxValue) plan.executeCollect() else plan.executeTake(n)
-    val viaJob = plan.execute().map(_.copy()).collect().take(n)
+    val viaJob = SQLExecution.withSQLConfPropagated(spark.asInstanceOf[classic.SparkSession]) {
+      plan.execute().map(_.copy()).collect().take(n)
+    }
     (render(local.toSeq), render(viaJob.toSeq))
   }
 
+  /** `df` is a calling-thread read with no job, row-exact against the
+    * plan's job: all its rows, and the first two.
+    */
+  private def assertSame(df: DataFrame, what: String): Unit =
+    for (n <- Seq(Int.MaxValue, 2)) {
+      assert(df.queryExecution.executedPlan.isInstanceOf[IndexLookupExec],
+        s"$what:\n${df.queryExecution.executedPlan}")
+      val ((local, viaJob), jobs, _) = jobsAndTasks(bothPaths(df, n))
+      assert(local == viaJob, s"$what, first $n")
+      assert(jobs == 1, s"$what: $jobs jobs (the calling-thread read must add none)")
+    }
+
   /** On a one-part index every read of `pred` is a calling-thread read with
-    * no job, row-exact against the plan's job: the filtered rows, a
-    * projection of them, and the first two.
+    * no job, row-exact against the plan's job: the filtered rows and a
+    * projection of them.
     */
   private def assertSameRows(dir: String, pred: Column): Unit =
     for (df <- Seq(Sources.parquet(spark, dir).filter(pred),
         Sources.parquet(spark, dir).filter(pred).select(col("v"), col("k"),
-          concat_ws("/", col("k").cast("string"), col("v").cast("string")).as("kv")));
-        n <- Seq(Int.MaxValue, 2)) {
-      assert(df.queryExecution.executedPlan.isInstanceOf[IndexLookupExec],
-        s"$pred over $dir:\n${df.queryExecution.executedPlan}")
-      val ((local, viaJob), jobs, _) = jobsAndTasks(bothPaths(df, n))
-      assert(local == viaJob, s"$pred over $dir, first $n")
-      assert(jobs == 1, s"$pred over $dir: $jobs jobs (the calling-thread read must add none)")
-    }
+          concat_ws("/", col("k").cast("string"), col("v").cast("string")).as("kv"))))
+      assertSame(df, s"$pred over $dir")
 
   private lazy val rows = spark.range(0, 400).withColumn("v", (col("id") % 7).cast("int"))
 
@@ -110,6 +121,54 @@ class IndexLookupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       }
   }
 
+  private def withConfs[T](confs: Seq[(String, String)])(f: => T): T =
+    confs.foldRight(() => f) { case ((key, value), inner) => () => withConf(key, value)(inner()) }()
+
+  test("differential under the confs the reader set-up reads: filter pushdown off, " +
+      "record-level filter, case sensitivity, INT96 under a non-UTC zone, LEGACY-rebased " +
+      "dates and timestamps read LEGACY and CORRECTED; vectorized reader on and off") {
+    val base = spark.range(0, 400).select(col("id").as("k"), (col("id") % 7).cast("int").as("v"))
+    val k = col("k")
+    val keyPreds = Seq(k === 5L, k.between(10L, 20L), col("v") === 3, k > 395L, k.isNull)
+    val caseSensitive = "spark.sql.caseSensitive" -> "true"
+    val rebaseRead = "spark.sql.parquet.datetimeRebaseModeInRead"
+    val day0 = lit("1000-01-01").cast("date")
+    // name, write confs, input, key, predicates, read confs
+    val cases = Seq(
+      ("pushdown-off", Nil, base, "k", keyPreds,
+        Seq(Seq("spark.sql.parquet.filterPushdown" -> "false"))),
+      ("record-filter", Nil, base, "k", keyPreds,
+        Seq(Seq("spark.sql.parquet.recordLevelFilter.enabled" -> "true"))),
+      ("case-sensitive", Seq(caseSensitive),
+        base.select(k.as("Key"), (-k).as("key"), col("v")), "Key",
+        Seq(col("Key") === 7L, col("key") === -7L, col("Key") > 390L, col("key") < -390L),
+        Seq(Seq(caseSensitive))),
+      ("int96", Seq("spark.sql.parquet.outputTimestampType" -> "INT96",
+          "spark.sql.parquet.int96RebaseModeInWrite" -> "LEGACY"),
+        base.withColumn("ts96", timestamp_seconds(lit(-15000000000L) + k * 86399)), "k",
+        keyPreds :+ (col("ts96") < timestamp_seconds(lit(-14990000000L))),
+        Seq(Seq("spark.sql.session.timeZone" -> "America/Los_Angeles"))),
+      ("legacy-rebase", Seq("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
+          "spark.sql.parquet.datetimeRebaseModeInWrite" -> "LEGACY"),
+        base.withColumn("d", date_add(day0, (k * 37).cast("int")))
+          .withColumn("ts", timestamp_seconds(lit(-20000000000L) + k * 7919)), "k",
+        keyPreds ++ Seq(col("d") <= date_add(day0, 370),
+          col("ts") > timestamp_seconds(lit(-19999000000L))),
+        Seq(Seq(rebaseRead -> "LEGACY"), Seq(rebaseRead -> "CORRECTED"))))
+    for ((name, write, df, key, preds, reads) <- cases) {
+      val dir = withConfs(write)(index(df, name, 1, key))
+      for (read <- reads; vectorized <- Seq("true", "false"))
+        withConfs(read :+ ("spark.sql.parquet.enableVectorizedReader" -> vectorized)) {
+          for (pred <- preds) {
+            val q = Sources.parquet(spark, dir).filter(pred)
+            val what = s"$name under $read, vectorized $vectorized: $pred"
+            assertSame(q, what)
+            assertSame(q.select(q.columns.reverse.toSeq.map(col): _*), s"$what, projected")
+          }
+        }
+    }
+  }
+
   // the job and task counts below are those the same reads ran before
   // IndexLookup existed
   test("reads outside the one-split gate plan Spark's scan with no lookup, " +
@@ -134,10 +193,11 @@ class IndexLookupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     four.coalesce(1).write.parquet(plain)
     assertStandard("plain", Sources.parquet(spark, plain).filter(col("k") === 21), (1, 1))
 
-    // under an aggregate the lookup is planned, and runs as its child does
+    // under an aggregate the lookup is not planned: the scan fuses with the
+    // operators above it
     val agg = Sources.parquet(spark, dir).filter(col("k") === 21).groupBy("v").count()
     val (got, jobs, tasks) = jobsAndTasks(agg.collect())
-    assert(lookups(agg).size == 1, agg.queryExecution.executedPlan)
+    assert(lookups(agg).size == 0, agg.queryExecution.executedPlan)
     assert((jobs, tasks) == (2, 2), s"aggregate: $jobs jobs, $tasks tasks")
     assert(got.toSeq == Seq(Row(0, 1L)))
   }
@@ -204,18 +264,19 @@ class IndexLookupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
     val pool = Executors.newFixedThreadPool(16)
     try {
-      val (answers, jobs, tasks) = jobsAndTasks {
+      val ((answers, jobs, tasks), made) = broadcasts(jobsAndTasks {
         (0 until 16).map { t =>
           pool.submit(new Callable[Seq[(Long, (Int, String))]] {
             def call(): Seq[(Long, (Int, String))] =
               keys.filter(_ % 16 == t).map(k => k -> get(k))
           })
         }.flatMap(_.get())
-      }
+      })
       assert(answers.size == keys.size)
       for ((k, (code, body)) <- answers)
         assert(code == 200 && body == want(k), s"key $k: $code $body\nwant ${want(k)}")
       assert((jobs, tasks) == (0, 0), s"$jobs jobs, $tasks tasks")
+      assert(made == 0, s"$made broadcasts")
     } finally {
       pool.shutdown()
       pub.stopServing()

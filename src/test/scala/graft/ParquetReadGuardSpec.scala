@@ -29,10 +29,14 @@ class ParquetReadGuardSpec extends AnyFunSuite {
 }
 
 object ParquetReadGuardSpec {
-  /** One entry per match of `call` in a Scala file under src/main/scala. */
-  def sitesOf(call: scala.util.matching.Regex): Seq[String] =
+  /** Each Scala file under src/main/scala, with its text. */
+  lazy val sources: Seq[(String, String)] =
     Files.walk(Paths.get("src/main/scala")).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
-      .flatMap(f => call.findAllMatchIn(Files.readString(f)).map(_ => f.toString))
+      .map(f => (f.toString, Files.readString(f)))
       .toSeq
+
+  /** One entry per match of `call` in a Scala file under src/main/scala. */
+  def sitesOf(call: scala.util.matching.Regex): Seq[String] =
+    sources.flatMap { case (f, text) => call.findAllMatchIn(text).map(_ => f) }
 }

@@ -32,4 +32,18 @@ abstract class SparkSpec extends AnyFunSuite {
       (out, jobs.get, tasks.get)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  /** `f`'s result with the broadcasts created while it ran: broadcast ids
+    * are handed out in order, so it is the gap between the ids of a marker
+    * broadcast made before and one made after, less the second marker.
+    */
+  def broadcasts[T](f: => T): (T, Long) = {
+    def marker(): Long = {
+      val b = spark.sparkContext.broadcast(())
+      try b.id finally b.destroy()
+    }
+    val before = marker()
+    val out = f
+    (out, marker() - before - 1)
+  }
 }

@@ -2,11 +2,14 @@ package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{Callable, CountDownLatch, Executors}
+
+import scala.jdk.CollectionConverters._
 
 import graft.sources.{IndexedTable, Sources, TopLevelKey}
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
@@ -182,7 +185,8 @@ class TopLevelKeySpec extends SparkSpec with AdaptiveSparkPlanHelper {
       }
   }
 
-  test("a point lookup on a 4-part index runs no job, no task and no Janino compile") {
+  test("a point lookup on a 4-part index runs no job, no task, no broadcast and no " +
+      "Janino compile") {
     val idx = index(Tables.customer(spark, sf), "lookup", "c_custkey")
     val firstKeys = parts(idx).map(p =>
       spark.read.parquet(p).agg(min("c_custkey")).head.getAs[Number](0).longValue)
@@ -192,12 +196,67 @@ class TopLevelKeySpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(lookup(firstKeys.head + 1).length == 1)
     for (key <- firstKeys) {
       val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      val (rows, jobs, tasks) = jobsAndTasks(lookup(key))
+      val ((rows, jobs, tasks), made) = broadcasts(jobsAndTasks(lookup(key)))
       assert(rows.length == 1)
       assert((jobs, tasks) == (0, 0), s"key $key: $jobs jobs, $tasks tasks")
+      assert(made == 0, s"key $key: $made broadcasts")
       assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
         s"key $key compiled ${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles} classes")
     }
+  }
+
+  /** `f`'s result with the bytes this thread read through Hadoop file
+    * systems while it ran.
+    */
+  private def bytesRead[T](f: => T): (T, Long) = {
+    def total = FileSystem.getAllStatistics.asScala.map(_.getThreadStatistics.getBytesRead).sum
+    val before = total
+    val out = f
+    (out, total - before)
+  }
+
+  test("a second read of an unchanged index dir reads no byte of its _tlk") {
+    val dir = index(rows.select(col("id").as("k"), col("v")), "cached", "k")
+    val (_, cold) = bytesRead(Sources.parquet(spark, dir))
+    assert(cold > 0, "the first read of a dir must read its TLK")
+    val (_, warm) = bytesRead(Sources.parquet(spark, dir))
+    assert(warm == 0, s"the second read read $warm bytes")
+    assertScans(dir, col("k") === 5L, 1)
+  }
+
+  test("an index rebuilt in place is read through its new TLK, with the new " +
+      "generation's rows") {
+    val dir = tmp("rebuilt")
+    for (gen <- 0 to 2) {
+      IndexedTable.build(rows.select(col("id").as("k"), lit(gen).as("gen")), Seq("k"), dir,
+        numPartitions = 4)
+      assert(Sources.parquet(spark, dir).filter(col("k") === 5L).collect().toSeq ==
+        Seq(Row(5L, gen)), s"generation $gen")
+      assertScans(dir, col("k") === 5L, 1)
+    }
+  }
+
+  test("8 threads reading a cold index dir at once get equal answers, the plain read's") {
+    val dir = index(rows.select(col("id").as("k"), col("v")), "cold", "k")
+    val preds = Seq(col("k") === 250L, col("k").between(90L, 310L))
+    def answers(df: DataFrame): Seq[Seq[Row]] =
+      preds.map(p => df.filter(p).collect().toSeq.sortBy(_.getLong(0)))
+    val start = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(8)
+    try {
+      val reads = (0 until 8).map { _ =>
+        pool.submit(new Callable[Seq[Seq[Row]]] {
+          def call(): Seq[Seq[Row]] = {
+            start.await()
+            answers(Sources.parquet(spark, dir))
+          }
+        })
+      }
+      start.countDown()
+      val want = answers(spark.read.parquet(dir))
+      for (r <- reads) assert(r.get() == want)
+    } finally pool.shutdown()
+    assertScans(dir, col("k") === 250L, 1)
   }
 
   /** `df` written as parquet and read back: a plain parquet read. */
