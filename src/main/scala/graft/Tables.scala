@@ -47,8 +47,4 @@ object QueryDef {
   def apply(name: String, oracle: String)(
       fn: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, fn, Some(oracle))
-
-  /** Non-SQL-expressible op → driver records a weaker rows-only check. */
-  def noOracle(name: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, fn, None)
 }

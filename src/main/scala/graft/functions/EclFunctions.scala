@@ -16,9 +16,6 @@ object EclFunctions {
   /** ECL string equality ignores trailing spaces (`rtlCompareStrStr`). */
   def eclStrEq(a: Column, b: Column): Column = rtrim(a) === rtrim(b)
 
-  /** ECL comparison key: trailing-space-blind ordering. */
-  def eclStrCmpKey(c: Column): Column = rtrim(c)
-
   /** Cast to STRING[n]: truncate or right-pad with spaces to width n. */
   def toFixedString(c: Column, n: Int): Column = rpad(c, n, " ")
 

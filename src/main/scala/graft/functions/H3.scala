@@ -516,7 +516,6 @@ object H3 {
     udf((lat: Double, lng: Double, res: Int) => eclIndex(lat, lng, res))
   private lazy val validUdf = udf((c: Long) => isValid(c))
   private lazy val kRingSizeUdf = udf((c: Long, k: Int) => kRing(c, k).size)
-  private lazy val centerUdf = udf((c: Long) => cellToLatLng(c))
 
   def cellCol(lat: Column, lng: Column, res: Column): Column =
     cellUdf(lat, lng, res)
@@ -524,7 +523,6 @@ object H3 {
     eclUdf(lat, lng, res)
   def isValidCol(c: Column): Column = validUdf(c)
   def kRingSizeCol(c: Column, k: Column): Column = kRingSizeUdf(c, k)
-  def centerCol(c: Column): Column = centerUdf(c)
 
   /** resolution() as pure column bit math (codegen'd). */
   def resolutionCol(c: Column): Column =

@@ -144,10 +144,6 @@ final case class GraftFrame(df: DataFrame, groupKeys: Seq[String] = Nil,
     if (!grouped) copy(df = df.limit(n))
     else copy(df = Sorting.topnGrouped(df, n, keyCols, order), sortedBy = Nil)
 
-  /** Dataset-level IF (TAKif :914): branch chosen at plan time. */
-  def ifElse(cond: Boolean, other: => GraftFrame): GraftFrame =
-    if (cond) this else other
-
   /** APPLY (TAKapply :904): driver-side side effect per row. */
   def apply_(f: org.apache.spark.sql.Row => Unit): Unit =
     df.foreach(new org.apache.spark.api.java.function.ForeachFunction[

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Aggregation (SURVEY §2.5). The reference's aggregate contract
   * (`IHThorRowAggregator` `rtl/include/eclhelper.hpp:1549`:
@@ -19,15 +18,6 @@ import org.apache.spark.sql.types.DecimalType
   * uses BCD decimal, `rtl/eclrtl/rtlbcd.hpp`).
   */
 object Agg {
-
-  /** Exact, order-independent SUM of a double column via decimal. */
-  def sumExact(c: Column, as: String, scale: Int = 6): Column =
-    sum(c.cast(DecimalType(25, scale))).as(as)
-
-  /** Exact AVG of a double column: decimal sum / count, fixed result scale. */
-  def avgExact(c: Column, as: String, scale: Int = 6): Column =
-    (sum(c.cast(DecimalType(25, scale))) / count(c))
-      .cast(DecimalType(31, scale + 4)).as(as)
 
   /** TABLE(ds, {keys, aggs}, keys) — hash group-by (TAKhashaggregate :897). */
   def table(df: DataFrame, keys: Seq[Column], aggs: Seq[Column]): DataFrame =

@@ -19,49 +19,22 @@ object Distribute {
   def byHash(df: DataFrame, keys: Seq[Column], n: Option[Int] = None): DataFrame =
     n.map(df.repartition(_, keys: _*)).getOrElse(df.repartition(keys: _*))
 
-  /** DISTRIBUTE(ds, skew) — skew-bounded random redistribution. */
-  def roundRobin(df: DataFrame, n: Int): DataFrame = df.repartition(n)
-
-  /** DISTRIBUTE(ds, index) / keyed distribute (TAKkeyeddistribute :940):
-    * range partition by the key's value distribution (Spark samples the
-    * data, the reference uses the index's split points — same effect).
-    */
-  def byRange(df: DataFrame, keys: Seq[Column]): DataFrame =
-    df.repartitionByRange(keys: _*)
-
-  /** DISTRIBUTE(ds, HASH(k), MERGE(sortKeys)) (TAKhashdistributemerge :1032):
-    * repartition preserving per-partition sort order.
-    */
-  def byHashMerge(df: DataFrame, keys: Seq[Column],
-      sortKeys: Seq[Column]): DataFrame =
-    df.repartition(keys: _*).sortWithinPartitions(sortKeys: _*)
-
   /** NWAYDISTRIBUTE (TAKnwaydistribute :1086, helper `include(row,
     * targetNode)` :1974): predicate-routed distribution — each row goes to
-    * the partition(s) named by `targetExpr` (0-based). Needs an exact
-    * partitioner (hash repartition would scramble the mapping), so this is
-    * one of the few RDD drops. With `replicateAll` (SDFisall :1969) every
-    * row goes to ALL partitions.
+    * the partition named by `targetExpr` (0-based, taken `pmod
+    * numPartitions`). A hash repartition would scramble the mapping, so the
+    * target is passed through as the partition id (`repartitionById`: a
+    * planned shuffle exchange that AQE never coalesces). A null target
+    * lands in partition 0. With `replicateAll` (SDFisall :1969) every row
+    * goes to ALL partitions.
     */
   def nwayRouted(df: DataFrame, targetExpr: Column, numPartitions: Int,
-      replicateAll: Boolean = false): DataFrame = {
-    val spark = df.sparkSession
-    val schema = df.schema
-    val withTarget =
-      if (replicateAll)
-        df.withColumn("__t", explode(sequence(lit(0), lit(numPartitions - 1))))
-      else
-        df.withColumn("__t", pmod(targetExpr.cast("int"), lit(numPartitions)))
-    val nParts = numPartitions
-    val routed = withTarget.rdd
-      .map(r => (r.getInt(r.fieldIndex("__t")), r))
-      .partitionBy(new org.apache.spark.Partitioner {
-        def numPartitions: Int = nParts
-        def getPartition(key: Any): Int = key.asInstanceOf[Int]
-      })
-      .map(_._2)
-    spark.createDataFrame(routed, withTarget.schema).drop("__t")
-  }
+      replicateAll: Boolean = false): DataFrame =
+    df.withColumn("__t",
+        if (replicateAll) explode(sequence(lit(0), lit(numPartitions - 1)))
+        else targetExpr.cast("int"))
+      .repartitionById(numPartitions, col("__t"))
+      .drop("__t")
 
   /** Salt a skewed key: append a random-ish but DETERMINISTIC salt derived
     * from other columns, spreading hot keys over `buckets` partitions.

@@ -98,19 +98,16 @@ object Joins {
     * `spark.graft.bloom.minBigBytes` (default 256 MB — roughly where one
     * fact shuffle outweighs a dimension-slice scan; at 100 TB any fact
     * scan clears it, at sf0.1/sf1 the gate stays closed and plans are
-    * byte-identical to the ungated form). Sizing comes from
-    * `spark.graft.bloom.expectedItems` (default 4 M, Spark's own
-    * maxExpectedNumItems default) at ~1% fpp (10 bits/item ≈ 5 MB);
-    * creation sides beyond it degrade the fpp gracefully, never the
-    * results.
+    * byte-identical to the ungated form). The filter is sized for 4 M
+    * items (Spark's own maxExpectedNumItems default) at ~1% fpp
+    * (10 bits/item ≈ 5 MB); creation sides beyond it degrade the fpp
+    * gracefully, never the results.
     */
   def bloomSemiPrefilter(big: DataFrame, bigKey: Column,
       small: DataFrame, smallKey: Column): DataFrame = {
-    val spark = big.sparkSession
-    def confL(k: String, dflt: Long): Long =
-      spark.conf.getOption(k).map(_.toLong).getOrElse(dflt)
-    val minBigBytes = confL("spark.graft.bloom.minBigBytes", 256L << 20)
-    val items = confL("spark.graft.bloom.expectedItems", 4L << 20)
+    val minBigBytes = big.sparkSession.conf.getOption("spark.graft.bloom.minBigBytes")
+      .map(_.toLong).getOrElse(256L << 20)
+    val items = 4L << 20
     val bigBytes = big.queryExecution.optimizedPlan.stats.sizeInBytes
     if (bigBytes < minBigBytes) return big
     import org.apache.spark.sql.GraftBridge

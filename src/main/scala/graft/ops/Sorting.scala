@@ -28,10 +28,6 @@ object Sorting {
     */
   def sort(df: DataFrame, keys: Seq[Column]): DataFrame = df.orderBy(keys: _*)
 
-  /** SORT(..., LOCAL): per-partition sort, no redistribution. */
-  def sortLocal(df: DataFrame, keys: Seq[Column]): DataFrame =
-    df.sortWithinPartitions(keys: _*)
-
   /** TOPN(ds, n, keys) — global top-n. TakeOrderedAndProject: no shuffle. */
   def topn(df: DataFrame, n: Int, keys: Seq[Column]): DataFrame =
     df.orderBy(keys: _*).limit(n)

@@ -210,9 +210,9 @@ object IndexLookupExec {
   private final class LocalConf(conf: Configuration)
       extends Broadcast[SerializableConfiguration](-1L) {
     private val held = new SerializableConfiguration(conf)
-    protected def getValue(): SerializableConfiguration = held
-    protected def doUnpersist(blocking: Boolean): Unit = ()
-    protected def doDestroy(blocking: Boolean): Unit = ()
+    override protected def getValue(): SerializableConfiguration = held
+    override protected def doUnpersist(blocking: Boolean): Unit = ()
+    override protected def doDestroy(blocking: Boolean): Unit = ()
   }
 
   /** `p`'s one file scan and the function that computes `p`'s rows from

@@ -9,9 +9,10 @@ import org.apache.spark.sql.types.StructType
   * its real-time story is triggered batch (CRON/WHEN/NOTIFY,
   * `ecl/schedulectrl/`) plus a Kafka plugin pulling bounded batches with
   * explicit offsets (`plugins/kafka/kafka.ecllib:97,199`). Structured
-  * Streaming is a strict superset: micro-batch triggers ≈ CRON workflow,
-  * the Kafka source manages offsets in the checkpoint, and we add
-  * watermarked tumbling/sliding/session windows (beyond-reference).
+  * Streaming covers the triggered batch (micro-batch triggers ≈ CRON
+  * workflow), and we add watermarked tumbling/sliding/session windows
+  * (beyond-reference). The Kafka plugin is not ported: no Kafka connector
+  * is on the classpath, so `format("kafka")` cannot load.
   *
   * The same transformations run in batch mode — StreamingSpec asserts
   * stream-vs-batch result equality on the events table.
@@ -64,18 +65,6 @@ object Streams {
       fileSource(spark, stagedDir, schema,
         maxFilesPerTrigger = maxFilesPerTrigger))
   }
-
-  /** Kafka source with managed offsets (the `KafkaConsumer.GetMessages` +
-    * `SetMessageOffsets` capability, kafka.ecllib:97,199 — offsets live in
-    * the checkpoint instead of ECL code).
-    */
-  def kafkaSource(spark: SparkSession, servers: String, topic: String,
-      startingOffsets: String = "earliest"): DataFrame =
-    spark.readStream.format("kafka")
-      .option("kafka.bootstrap.servers", servers)
-      .option("subscribe", topic)
-      .option("startingOffsets", startingOffsets)
-      .load()
 
   /** Watermarked tumbling-window aggregate — works on both stream and
     * batch DataFrames (the batch path is the oracle).

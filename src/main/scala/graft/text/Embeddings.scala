@@ -21,11 +21,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Embeddings {
 
-  /** Explode vectors to (idCol, pos, v): the join-friendly layout. */
-  private def explodeVec(df: DataFrame, id: Column, vec: Column,
-      idName: String): DataFrame =
-    df.select(id.as(idName), posexplode(vec).as(Seq("pos", "v")))
-
   /** Exact-decimal sum over an array of doubles — the codegen'd scalar
     * analog of groupBy+sum(decimal): same addends, same exact result, no
     * explode/shuffle.
@@ -296,15 +291,6 @@ object Embeddings {
       exact: Boolean = false): DataFrame =
     rpLshBucket(df, id, vec, planesFor(df.count(), targetBucketSize), dim,
       exact)
-
-  /** [[rpLshBucketTables]] with corpus-adaptive plane count (see
-    * [[rpLshBucketAuto]]).
-    */
-  def rpLshBucketTablesAuto(df: DataFrame, id: Column, vec: Column,
-      numTables: Int, dim: Int = 64,
-      targetBucketSize: Long = 64L, exact: Boolean = false): DataFrame =
-    rpLshBucketTables(df, id, vec, planesFor(df.count(), targetBucketSize),
-      numTables, dim, exact)
 
   /** Embedding-cosine near-duplicate DEDUP: keep one representative per
     * near-dup relation — a vector is removed iff some candidate neighbor

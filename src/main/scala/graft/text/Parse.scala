@@ -442,10 +442,6 @@ object Parse {
       out.result()
     }
 
-    /** Back-compat boolean form (`all = true` ≡ [[MatchAll]]). */
-    def scan(text: String, all: Boolean): Vector[String] =
-      scan(text, if (all) MatchAll else MatchMax)
-
     /** Reconstruct ONE derivation of `p` over [pos, target): the spans of
       * every GRef fired along it, deterministically biased to the first
       * alternative and the longest prefix split (the MAX discipline).

@@ -36,10 +36,6 @@ object TextOps {
   def tokenCount(text: Column): Column =
     size(regexp_extract_all(text, lit("[A-Za-z]+|[0-9]+|\\S"), lit(0)))
 
-  /** (id, pos, word) — one row per token, position 0-based. */
-  def wordsWithPos(df: DataFrame, id: Column, text: Column): DataFrame =
-    df.select(id.as("doc_id"), posexplode(words(text)).as(Seq("pos", "word")))
-
   /** DISTINCT word k-shingles per document. Built with array `transform`
     * over the token array — pure whole-stage codegen, NO window and no
     * shuffle until the final distinct (a windowed lead() formulation costs

@@ -46,16 +46,6 @@ object Workflow {
       t => throw t): Unit =
     actions.foreach { a => try a() catch { case t: Throwable => onFailure(t) } }
 
-  /** WHEN(ds, action): run a side-effect when the dataset is first
-    * evaluated (TAKwhen_dataset :1027). The DF is cached so the trigger
-    * fires once.
-    */
-  def when_(df: DataFrame, action: DataFrame => Unit): DataFrame = {
-    val cached = df.cache()
-    action(cached)
-    cached
-  }
-
   /** A localCheckpoint'd frame plus a handle that ACTUALLY releases its
     * blocks. `Dataset.unpersist()` is a no-op here: checkpoint blocks are
     * RDD-level persistence on the internal RDD, not a CacheManager entry,

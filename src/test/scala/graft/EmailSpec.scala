@@ -80,6 +80,25 @@ class EmailSpec extends AnyFunSuite {
       "\r\n--BNDRY--\r\n")
   }
 
+  test("sendEmailAttachData: base64 attachment part through the transport") {
+    var sent = Seq.empty[(String, Int)]
+    val ok = Email.sendEmailAttachData(cfg, "a@x.com", "blob", "see attached",
+      Array[Byte](0, 1, 2, -1), "application/octet-stream", "b.bin",
+      boundary = Some("BNDRY"), transport = (_, _, cmds) => sent = cmds)
+    assert(ok)
+    assert(sent.map(_._1).contains("RCPT TO:<a@x.com>\r\n"))
+    // bytes 00 01 02 FF encode to base64 "AAEC/w=="
+    val data = sent.map(_._1).find(_.contains("Subject: blob")).get
+    assert(data.contains(
+      "\r\n--BNDRY\r\n" +
+      "Content-Type: application/octet-stream\r\n" +
+      "Content-Disposition: attachment; filename=\"b.bin\"\r\n" +
+      "Content-Transfer-Encoding: base64\r\n" +
+      "\r\n" +
+      "AAEC/w==" +
+      "\r\n--BNDRY--\r\n"))
+  }
+
   test("SMTP dialogue over a real loopback socket: envelope, stuffing, acks") {
     // a minimal SMTP listener: acks the dialogue, captures what it saw
     val server = new java.net.ServerSocket(0, 1,

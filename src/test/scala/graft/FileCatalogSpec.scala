@@ -47,6 +47,11 @@ class FileCatalogSpec extends SparkSpec {
     // deleting a logical file also drops its superfile memberships
     cat.delete("s2")
     assert(cat.superFileContents("all").isEmpty)
+    // DeleteSuperFile (File.ecl, deleteSub defaults to false): the
+    // superfile goes, its former subfiles stay
+    cat.addSuperFile("all", "s1")
+    cat.deleteSuperFile("all")
+    assert(!cat.superFileExists("all") && cat.exists("s1"))
   }
 
   test("registerAll: ONE commit, all-or-nothing — an illegal name anywhere " +

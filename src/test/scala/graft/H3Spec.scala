@@ -182,6 +182,10 @@ class H3Spec extends AnyFunSuite {
       assert(H3.numCells(r + 1) == 7L * H3.numCells(r))
     }
     assert(H3.hexAreaM2(3) == H3.hexAreaKm2(3) * 1e6)
+    // degsToRads/radsToDegs: 180° is π radians
+    assert(math.abs(H3.degsToRads(180.0) - math.Pi) < 1e-12)
+    assert(math.abs(H3.degsToRads(-90.0) + math.Pi / 2) < 1e-12)
+    assert(math.abs(H3.radsToDegs(math.Pi / 4) - 45.0) < 1e-12)
   }
 
   test("polyfill: center-containment fill of a convex polygon") {

@@ -107,10 +107,10 @@ class ModelSpec extends SparkSpec {
       "a" -> GOr(GSeq(GLit("x"), GRef("b")), GLit("x")),
       "b" -> GSeq(GLit("y"), GRef("a"))), "a")
     assert(mutual.scan("xyxyx") == Vector("xyxyx"))
-    // ambiguity surfaced with all = true
+    // ambiguity surfaced with MatchAll
     val amb = Grammar(Map(
       "t" -> GOr(GTok("[ab]"), GTok("[ab]{2}"))), "t")
-    assert(amb.scan("ab", all = true) == Vector("a", "ab"))
+    assert(amb.scan("ab", MatchAll) == Vector("a", "ab"))
     // bounded repetition through alternative-length tokens
     val rep = Grammar(Map(
       "r" -> GRep(GOr(GLit("aa"), GLit("a")), 3, 3)), "r")

@@ -42,6 +42,10 @@ class OpenSslSpec extends SparkSpec {
       col("t"), "aes-256-cbc", "right", "0011223344556677"),
       "aes-256-cbc", "wrong", "0011223344556677")).as[Option[String]].head()
     assert(bad.isEmpty)
+    // IVSize (OpenSSL.ecl:91): the AES block for CBC, a 12-byte GCM nonce
+    assert(OpenSsl.ivSize("aes-256-cbc") == 16)
+    assert(OpenSsl.ivSize("AES-128-GCM") == 12)
+    assertThrows[IllegalArgumentException](OpenSsl.ivSize("des-ede3"))
   }
 
   test("digestHex: SHA-3 UDF fallback matches the NIST vector; names map") {

@@ -286,6 +286,12 @@ class OpsSpec extends SparkSpec {
     // replicate-all: every partition holds every row (SDFisall)
     val repl = Distribute.nwayRouted(df, col("target"), 3, replicateAll = true)
     assert(repl.count() == 120)
+    // a null target lands in partition 0; a negative one is taken pmod n
+    val edge = Seq[(Int, Option[Int])]((40, None), (41, Some(-1)))
+      .toDF("v", "target")
+    assert(Distribute.nwayRouted(edge, col("target"), 4)
+      .select(col("v"), spark_partition_id()).as[(Int, Int)].collect().toSet
+      == Set((40, 0), (41, 3)))
   }
 
   test("distribute co-locates keys (LOCAL ops see whole key groups)") {

@@ -29,12 +29,15 @@ class ParquetReadGuardSpec extends AnyFunSuite {
 }
 
 object ParquetReadGuardSpec {
-  /** Each Scala file under src/main/scala, with its text. */
-  lazy val sources: Seq[(String, String)] =
-    Files.walk(Paths.get("src/main/scala")).iterator().asScala
+  /** Each Scala file under `root`, with its text. */
+  def scalaFiles(root: String): Seq[(String, String)] =
+    Files.walk(Paths.get(root)).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .map(f => (f.toString, Files.readString(f)))
       .toSeq
+
+  /** Each Scala file under src/main/scala, with its text. */
+  lazy val sources: Seq[(String, String)] = scalaFiles("src/main/scala")
 
   /** One entry per match of `call` in a Scala file under src/main/scala. */
   def sitesOf(call: scala.util.matching.Regex): Seq[String] =

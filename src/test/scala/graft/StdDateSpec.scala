@@ -32,6 +32,10 @@ class StdDateSpec extends SparkSpec {
     assert(int(secondT(lit(123456))) == 56)
     assert(int(dateFromParts(lit(1999), lit(2), lit(1))) == 19990201)
     assert(int(timeFromParts(lit(12), lit(34), lit(56))) == 123456)
+    // CreateDate/CreateTime pack like DateFromParts/TimeFromParts
+    // (Date.ecl:128,140)
+    assert(int(createDate(lit(2024), lit(2), lit(29))) == 20240229)
+    assert(int(createTime(lit(23), lit(59), lit(59))) == 235959)
   }
 
   test("leap years: Gregorian and Julian rules") {
@@ -146,6 +150,10 @@ class StdDateSpec extends SparkSpec {
     assert(int(secondsToTimeT(lit(917872496L))) == 123456)
     assert(int(secondsToDateT(lit(-153705600L))) == 19650217)
     assert(int(secondsToDateT(lit(0L))) == 19700101)
+    // CreateDateFromSeconds/CreateTimeFromSeconds: the UTC parts; one
+    // second before the epoch is 1969-12-31 23:59:59
+    assert(int(createDateFromSeconds(lit(-1L))) == 19691231)
+    assert(int(createTimeFromSeconds(lit(-1L))) == 235959)
     assert(long(timestampToSeconds(lit(917872496123456L))) == 917872496L)
   }
 
@@ -205,6 +213,11 @@ class StdDateSpec extends SparkSpec {
     assert(int(matchDateString(lit("nonsense"), fmts)) == 0)
     assert(str(convertDateFormatMultiple(lit("1 december 2011"), fmts,
       "%Y%m%d")) == "20111201")
+    // ConvertFormatMultiple (Date.ecl:929): first format that parses, ''
+    // when none does
+    assert(str(convertFormatMultiple(lit("01/12/2011"), fmts, "%d %b %Y"))
+      == "01 Dec 2011")
+    assert(str(convertFormatMultiple(lit("nonsense"), fmts)) == "")
     assert(str(convertTimeFormat(lit("12:34:56"), "%H:%M:%S", "%H%M%S"))
       == "123456")
     assert(int(fromStringToTime(lit("12:34:56"), "%H:%M:%S")) == 123456)
@@ -259,6 +272,16 @@ class StdDateSpec extends SparkSpec {
     assert(findTZData(spark, "IST").count() == 3)
     assert(findTZData(spark, "IST", "EUROPE").count() == 1)
     assert(tzDataForLocation(spark, "ISRAEL").count() == 2)
+    // UniqueTZAbbreviations/UniqueTZLocations (Date.ecl:1852,1864): one row
+    // per distinct abbreviation / location of the 47-entry zone table; IST
+    // and CST each name three zones
+    val abbrevs = uniqueTZAbbreviations(spark).as[String].collect().toSeq
+    assert(abbrevs.size == 40 && abbrevs.distinct.size == 40)
+    assert(Seq("IST", "CST", "UTC").forall(abbrevs.contains))
+    assert(uniqueTZLocations(spark).as[String].collect().toSet ==
+      Set("AFRICA", "ANTARCTICA", "ASIA", "ATLANTIC", "AUSTRALIA",
+        "CARIBBEAN", "CENTRAL AMERICA", "EUROPE", "ISRAEL", "NORTH AMERICA",
+        "PACIFIC", "SOUTH AMERICA", "WORLDWIDE"))
   }
 
   test("IsValidDate/IsValidTime: leap rules, month lengths, field ranges") {
@@ -321,6 +344,9 @@ class StdDateSpec extends SparkSpec {
       createDateTimeFromSeconds(lit(917872496L)))) == 917872496L)
     assert(int(timeFromTimeRec(createTimeRec(lit(12), lit(34), lit(56))))
       == 123456)
+    // DateFromDateTimeRec/TimeFromDateTimeRec (Date.ecl:596-606)
+    assert(int(dateFromDateTimeRec(dt)) == 19990201)
+    assert(int(timeFromDateTimeRec(dt)) == 123456)
     // 1 Jan 1AD = day 1 (Date.ecl:247)
     assert(int(fromGregorianYMD(lit(1), lit(1), lit(1))) == 1)
     val ymd = toGregorianYMD(lit(730180)) // round-trip via a known date

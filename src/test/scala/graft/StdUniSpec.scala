@@ -155,6 +155,11 @@ class StdUniSpec extends SparkSpec {
     assert(str(StdUni.toUpperCase(lit("straße"))) == "STRASSE")
     assert(str(StdUni.cleanSpaces(lit(" ü   v "))) == "ü v")
     assert(int(StdUni.find(lit("αβγαβγ"), "βγ", 2)) == 5)
+    // Contains (Str.ecl:87): every pattern char, each repeat needing its own
+    assert(bool(StdUni.uniContains(lit("αβγ"), "γα", ignoreCase = false)))
+    assert(!bool(StdUni.uniContains(lit("αβγ"), "αα", ignoreCase = false)))
+    assert(bool(StdUni.uniContains(lit("ÄBÄ"), "ää", ignoreCase = true)))
+    assert(!bool(StdUni.uniContains(lit("ÄB"), "ä", ignoreCase = false)))
     assert(str(StdUni.version()).startsWith("ICU4J "))
   }
 }

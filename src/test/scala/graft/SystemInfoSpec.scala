@@ -41,6 +41,10 @@ class SystemInfoSpec extends SparkSpec {
     assert(SystemInfo.Log.getTraceSpanHeader() ==
       s"00-${SystemInfo.Log.getTraceID()}-${SystemInfo.Log.getSpanID()}-01")
     assert(SystemInfo.Log.getElapsedMs() >= 0)
+    // global/local ids are this job's trace and span; nothing called it
+    assert(SystemInfo.Log.getGlobalId() == SystemInfo.Log.getTraceID())
+    assert(SystemInfo.Log.getLocalId() == SystemInfo.Log.getSpanID())
+    assert(SystemInfo.Log.getCallerId() == "")
     assert(SystemInfo.Log.generateGloballyUniqueId() !=
       SystemInfo.Log.generateGloballyUniqueId())
     // addWorkunitInformation writes into the run registry's messages
