@@ -124,9 +124,7 @@ object Bench {
     val err = runs.flatMap(_._2).headOption
     val times = runs.map(_._1).sorted
     val tMin = times.head
-    val tMed = if (times.size % 2 == 1) times(times.size / 2)
-      else (times(times.size / 2 - 1) + times(times.size / 2)) / 2.0
-    (name, tMin, tMed, err)
+    (name, tMin, median(times), err)
   }
 
   /** The full machine-read JSON line (complete per-query map). Since ~r06
@@ -142,13 +140,8 @@ object Bench {
     * locales would emit invalid JSON ("q01":1,234). "queries" stays the
     * headline estimator (per-query MIN over the repetitions) for
     * cross-round comparability; medians ride alongside.
-    */
-  private[graft] def renderLine(
-      results: Seq[(String, Double, Double, Option[String])],
-      repeat: Int, sfDir: String): String =
-    renderLine(results, repeat, sfDir, Nil)
-
-  /** `calib`: (phase → basket times) from start/middle/end of the sweep.
+    *
+    * `calib`: (phase → basket times) from start/middle/end of the sweep.
     * `calib_total` is the MEDIAN of the phase sums (one storm-hit phase
     * doesn't poison the estimator), and `value_norm = value/calib_total`
     * is the cross-round comparable headline — raw totals are only
@@ -157,13 +150,11 @@ object Bench {
   private[graft] def renderLine(
       results: Seq[(String, Double, Double, Option[String])],
       repeat: Int, sfDir: String,
-      calib: Seq[(String, Seq[(String, Double)])]): String = {
-    def d3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val qs = results.map { case (k, v, _, _) => s""""$k":${d3(v)}""" }
-      .mkString("{", ",", "}")
-    val qMed = results.map { case (k, _, m, _) => s""""$k":${d3(m)}""" }
-      .mkString("{", ",", "}")
+      calib: Seq[(String, Seq[(String, Double)])] = Nil): String = {
+    def times(ts: Seq[(String, Double)]): String =
+      ts.map { case (k, v) => s""""$k":${d3(v)}""" }.mkString("{", ",", "}")
+    val qs = times(results.map(r => (r._1, r._2)))
+    val qMed = times(results.map(r => (r._1, r._3)))
     def jstr(s: String): String =
       "\"" + s.flatMap {
         case '"' => "\\\""; case '\\' => "\\\\"
@@ -171,25 +162,10 @@ object Bench {
       } + "\""
     val errs = results.collect { case (k, _, _, Some(e)) =>
       s""""$k":${jstr(e)}""" }.mkString("{", ",", "}")
-    val errCount = results.count(_._4.isDefined)
-    // errored queries never contribute to a headline total: a crash that
-    // returns quickly must not read as a speedup in cross-round ratios
-    val (contrast, main) =
-      results.filter(_._4.isEmpty).partition(r => Contrast(r._1))
-    val total = main.map(_._2).sum
-    val cTotal = contrast.map(_._2).sum
-    val medTotal = main.map(_._3).sum
-    val calibJson = calib.map { case (phase, times) =>
-      s""""$phase":${times.map { case (k, v) => s""""$k":${d3(v)}""" }
-        .mkString("{", ",", "}")}"""
-    }.mkString("{", ",", "}")
-    val phaseSums = calib.map(_._2.map(_._2).sum).sorted
-    val calibTotal =
-      if (phaseSums.isEmpty) 0.0
-      else if (phaseSums.size % 2 == 1) phaseSums(phaseSums.size / 2)
-      else (phaseSums(phaseSums.size / 2 - 1) + phaseSums(phaseSums.size / 2)) / 2.0
-    val norm = if (calibTotal > 0) total / calibTotal else 0.0
-    s"""{"metric":"total","value":${d3(total)},"unit":"sec","median_total":${d3(medTotal)},"repeat":$repeat,"contrast_total":${d3(cTotal)},"calib":$calibJson,"calib_total":${d3(calibTotal)},"value_norm":${d3(norm)},"calib_version":"$CalibVersion","error_count":$errCount,"errors":$errs,"queries":$qs,"queries_median":$qMed,"sf":"$sfDir"}"""
+    val calibJson = calib.map { case (phase, ts) => s""""$phase":${times(ts)}""" }
+      .mkString("{", ",", "}")
+    val h = headline(results, calib)
+    s"""{"metric":"total","value":${d3(h.total)},"unit":"sec","median_total":${d3(h.medTotal)},"repeat":$repeat,"contrast_total":${d3(h.contrastTotal)},"calib":$calibJson,"calib_total":${d3(h.calibTotal)},"value_norm":${d3(h.norm)},"calib_version":"$CalibVersion","error_count":${h.errCount},"errors":$errs,"queries":$qs,"queries_median":$qMed,"sf":"$sfDir"}"""
   }
 
   /** Compact summary line (< 1.5 KB — r19 verdict "Next round" #1): the
@@ -206,21 +182,34 @@ object Bench {
       results: Seq[(String, Double, Double, Option[String])],
       repeat: Int, sfDir: String, cpus: String,
       calib: Seq[(String, Seq[(String, Double)])]): String = {
-    def d3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val errCount = results.count(_._4.isDefined)
+    val h = headline(results, calib)
+    s"""{"metric":"total","value":${d3(h.total)},"unit":"sec","median_total":${d3(h.medTotal)},"repeat":$repeat,"n_queries":${results.size},"contrast_total":${d3(h.contrastTotal)},"calib_total":${d3(h.calibTotal)},"value_norm":${d3(h.norm)},"calib_version":"$CalibVersion","error_count":${h.errCount},"cpus":"$cpus","sf":"$sfDir","per_query_in":"BENCH_LAST.json"}"""
+  }
+
+  private def d3(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  private def median(sorted: Seq[Double]): Double =
+    if (sorted.size % 2 == 1) sorted(sorted.size / 2)
+    else (sorted(sorted.size / 2 - 1) + sorted(sorted.size / 2)) / 2.0
+
+  /** The headline both lines print. Errored queries never contribute to a
+    * total: a crash that returns quickly must not read as a speedup in
+    * cross-round ratios.
+    */
+  private final case class Headline(total: Double, medTotal: Double,
+      contrastTotal: Double, calibTotal: Double, errCount: Int) {
+    def norm: Double = if (calibTotal > 0) total / calibTotal else 0.0
+  }
+
+  private def headline(results: Seq[(String, Double, Double, Option[String])],
+      calib: Seq[(String, Seq[(String, Double)])]): Headline = {
     val (contrast, main) =
       results.filter(_._4.isEmpty).partition(r => Contrast(r._1))
-    val total = main.map(_._2).sum
-    val cTotal = contrast.map(_._2).sum
-    val medTotal = main.map(_._3).sum
     val phaseSums = calib.map(_._2.map(_._2).sum).sorted
-    val calibTotal =
-      if (phaseSums.isEmpty) 0.0
-      else if (phaseSums.size % 2 == 1) phaseSums(phaseSums.size / 2)
-      else (phaseSums(phaseSums.size / 2 - 1) + phaseSums(phaseSums.size / 2)) / 2.0
-    val norm = if (calibTotal > 0) total / calibTotal else 0.0
-    s"""{"metric":"total","value":${d3(total)},"unit":"sec","median_total":${d3(medTotal)},"repeat":$repeat,"n_queries":${results.size},"contrast_total":${d3(cTotal)},"calib_total":${d3(calibTotal)},"value_norm":${d3(norm)},"calib_version":"$CalibVersion","error_count":$errCount,"cpus":"$cpus","sf":"$sfDir","per_query_in":"BENCH_LAST.json"}"""
+    Headline(main.map(_._2).sum, main.map(_._3).sum, contrast.map(_._2).sum,
+      if (phaseSums.isEmpty) 0.0 else median(phaseSums),
+      results.count(_._4.isDefined))
   }
 
   private def warmup(spark: SparkSession, sfDir: String): Unit = {

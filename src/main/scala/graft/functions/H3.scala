@@ -531,16 +531,4 @@ object H3 {
   /** baseCell()/face as pure column bit math. */
   def baseCellCol(c: Column): Column =
     shiftright(c, 50).bitwiseAND(flit(0x3FL)).cast("int")
-
-  /** parent() as pure column bit math (no UDF): clear the res nibble, set
-    * the target res, and force digits beyond `res` back to 7.
-    */
-  def parentCol(c: Column, res: Int): Column = {
-    require(res >= 0 && res <= MaxRes)
-    val marks = (res + 1 to MaxRes)
-      .foldLeft(0L)((acc, k) => acc | (7L << (45 - 3 * k)))
-    c.bitwiseAND(bitwise_not(flit(0xFL << 56)))
-      .bitwiseOR(flit(res.toLong << 56))
-      .bitwiseOR(flit(marks))
-  }
 }

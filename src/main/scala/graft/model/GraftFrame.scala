@@ -2,6 +2,7 @@ package graft.model
 
 import graft.ops.{DedupRollup, Positions, Sorting}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.InterpretedOrdering
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -45,15 +46,18 @@ final case class GraftFrame(df: DataFrame, groupKeys: Seq[String] = Nil,
     * Throws IllegalStateException naming the first violating partition.
     */
   def checkSorted(keys: String*): GraftFrame = {
-    val ord = GraftFrame.rowOrdering
-    // non-empty partitions in order: (index, first, last, internally sorted)
-    val bounds = Positions.partitionSummaries(df.select(keys.map(col): _*).rdd) { it =>
-      it.nextOption().map { first =>
+    val keyed = df.select(keys.map(col): _*)
+    val ord = InterpretedOrdering.forSchema(keyed.schema.map(_.dataType))
+    // non-empty partitions in order: (index, first, last, internally
+    // sorted); kept rows are copies, as the scan may reuse its row object
+    val bounds = Positions.partitionSummaries(keyed.queryExecution.toRdd) { it =>
+      it.nextOption().map { r =>
+        val first = r.copy()
         var prev = first; var ok = true
         while (it.hasNext && ok) {
           val cur = it.next()
           if (ord.compare(prev, cur) > 0) ok = false
-          prev = cur
+          prev = cur.copy()
         }
         (first, prev, ok)
       }
@@ -150,50 +154,3 @@ final case class GraftFrame(df: DataFrame, groupKeys: Seq[String] = Nil,
       org.apache.spark.sql.Row] { def call(r: org.apache.spark.sql.Row): Unit = f(r) })
 }
 
-object GraftFrame {
-  /** Field-by-field ascending-nulls-first comparison for [[checkSorted]]'s
-    * boundary scan. Covers the scalar types the sort keys can carry.
-    */
-  private[model] val rowOrdering: Ordering[org.apache.spark.sql.Row] =
-    new Ordering[org.apache.spark.sql.Row] {
-      private def isIntegral(n: Number): Boolean = n match {
-        case _: java.lang.Byte | _: java.lang.Short | _: java.lang.Integer |
-             _: java.lang.Long => true
-        case _ => false
-      }
-      private def cmp(a: Any, b: Any): Int = (a, b) match {
-        case (null, null) => 0
-        case (null, _) => -1
-        case (_, null) => 1
-        // Spark sorts strings by UTF-8 binary (UTF8String.compareTo);
-        // Java String.compareTo is UTF-16 code-unit order, which disagrees
-        // when [U+E000,U+FFFF] chars mix with supplementary-plane chars —
-        // compare the UTF-8 bytes unsigned to match the engine exactly.
-        case (x: String, y: String) =>
-          java.util.Arrays.compareUnsigned(
-            x.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-            y.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        // integral widths compare exactly through long — doubleValue would
-        // round longs above 2^53
-        case (x: Number, y: Number) if isIntegral(x) && isIntegral(y) =>
-          java.lang.Long.compare(x.longValue(), y.longValue())
-        case (x: java.lang.Comparable[_], y) if x.getClass == y.getClass =>
-          x.asInstanceOf[java.lang.Comparable[Any]].compareTo(y)
-        case (x: Number, y: Number) =>
-          java.lang.Double.compare(x.doubleValue(), y.doubleValue())
-        case (x, y) =>
-          throw new IllegalArgumentException(
-            s"unorderable sort key types ${x.getClass}/${y.getClass}")
-      }
-      def compare(l: org.apache.spark.sql.Row,
-          r: org.apache.spark.sql.Row): Int = {
-        var i = 0
-        while (i < l.length) {
-          val c = cmp(l.get(i), r.get(i))
-          if (c != 0) return c
-          i += 1
-        }
-        0
-      }
-    }
-}

@@ -1,8 +1,11 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Row, Encoders}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.JoinedRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField}
 
 /** DEDUP / ROLLUP / ITERATE / PROCESS — the reference's ordered-stateful
   * scan family (SURVEY §2.7; helpers `rtl/include/eclhelper.hpp:1535` DEDUP,
@@ -30,20 +33,15 @@ object DedupRollup {
   def dedupAdjacent(df: DataFrame, keys: Seq[Column],
       order: Seq[Column]): DataFrame = {
     val (proj, keyCols) = Positions.withKeyCols(df, keys, "__dk")
-    val keyIdx = keyCols.map(proj.schema.fieldIndex)
+    val ord = Positions.keyOrdering(proj.schema, keyCols)
     // keys appended to the sort: rows tied under `order` settle in the same
     // key-adjacency in BOTH scan passes (see Positions.scanSorted contract)
-    Positions.scanSorted(proj, order ++ keyCols.map(col), proj.schema)(
-      Positions.keyRunSummary(keyIdx))(
-      _.scanLeft((Option.empty[Seq[Any]], 0L))(Positions.advanceKeyRun)) {
-      case ((prevKeys, _), rows) =>
-        var prev = prevKeys
-        rows.filter { r =>
-          val k = Positions.keyOf(r, keyIdx)
-          val keep = !prev.contains(k)
-          prev = Some(k)
-          keep
-        }
+    Positions.scanSorted(proj, order ++ keyCols.map(col), Nil)(
+      Positions.keyRunSummary(ord))(
+      _.scanLeft((Option.empty[InternalRow], 0L))(Positions.advanceKeyRun(ord))) {
+      case ((prevKey, _), rows) =>
+        val tracker = new Positions.RunTracker(ord, prevKey.orNull)
+        rows.filter(tracker.starts)
     }.drop(keyCols: _*)
   }
 
@@ -79,21 +77,17 @@ object DedupRollup {
   def runIds(df: DataFrame, keys: Seq[Column], order: Seq[Column],
       runCol: String): DataFrame = {
     val (proj, keyCols) = Positions.withKeyCols(df, keys, "__rk")
-    val keyIdx = keyCols.map(proj.schema.fieldIndex)
-    val outSchema = org.apache.spark.sql.types.StructType(
-      proj.schema.fields :+ org.apache.spark.sql.types.StructField(
-        runCol, org.apache.spark.sql.types.LongType, nullable = false))
-    Positions.scanSorted(proj, order ++ keyCols.map(col), outSchema)(
-      Positions.keyRunSummary(keyIdx))(
-      _.scanLeft((Option.empty[Seq[Any]], 0L))(Positions.advanceKeyRun)) {
-      case ((prevKeys, runsBefore), rows) =>
-        var prev = prevKeys
+    val ord = Positions.keyOrdering(proj.schema, keyCols)
+    Positions.scanSorted(proj, order ++ keyCols.map(col),
+      Seq(StructField(runCol, LongType, nullable = false)))(
+      Positions.keyRunSummary(ord))(
+      _.scanLeft((Option.empty[InternalRow], 0L))(Positions.advanceKeyRun(ord))) {
+      case ((prevKey, runsBefore), rows) =>
+        val tracker = new Positions.RunTracker(ord, prevKey.orNull)
         var run = runsBefore
         rows.map { r =>
-          val k = Positions.keyOf(r, keyIdx)
-          if (!prev.contains(k)) run += 1
-          prev = Some(k)
-          Row.fromSeq(r.toSeq :+ run)
+          if (tracker.starts(r)) run += 1
+          new JoinedRow(r, InternalRow(run))
         }
     }.drop(keyCols: _*)
   }
@@ -135,7 +129,7 @@ object DedupRollup {
       var prevKey: Seq[Any] = null
       var prev: Option[Row] = None
       rows.map { r =>
-        val k = Positions.keyOf(r, keyIdx)
+        val k = keyOf(r, keyIdx)
         if (k != prevKey) { prev = None; prevKey = k }
         val out = fold(prev, r)
         prev = Some(out)
@@ -143,6 +137,32 @@ object DedupRollup {
       }
     }(rowEnc)
   }
+
+  /** Normalize a key value so that Scala equality on key Seqs groups rows
+    * exactly as `groupBy` does (null-safe, Spark's NormalizeFloatingNumbers)
+    * — [[iterateGroups]]' fold API hands out external Rows, so its group
+    * boundaries compare external values:
+    *  - `Row.get` returns `Array[Byte]` for BinaryType, whose `equals` is
+    *    reference identity; an immutable ArraySeq compares the bytes.
+    *  - -0.0 becomes 0.0 (Double and Float), so both signs are one key.
+    *  - Every NaN becomes one sentinel. Scala's `==` on boxed floating
+    *    values is IEEE (NaN != NaN), which would make each NaN row a run of
+    *    its own; the sort already places all NaNs together.
+    *  - null stays null, one key of its own (`null == null`).
+    * Floating values nested in structs or arrays are not normalized.
+    */
+  private def normKey(v: Any): Any = v match {
+    case b: Array[Byte] => scala.collection.immutable.ArraySeq.unsafeWrapArray(b)
+    case d: Double => if (d.isNaN) NaNKey else if (d == 0.0d) 0.0d else d
+    case f: Float => if (f.isNaN) NaNKey else if (f == 0.0f) 0.0f else f
+    case other => other
+  }
+
+  private case object NaNKey
+
+  /** Read the key tuple of one row (normalized for value equality). */
+  private def keyOf(r: Row, keyIdx: Seq[Int]): Seq[Any] =
+    keyIdx.map(i => normKey(r.get(i)))
 
   /** Running aggregate over order within groups — the codegen-friendly
     * ITERATE lowering for associative state.

@@ -1,7 +1,11 @@
 package graft.ops
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference,
+  InterpretedOrdering, JoinedRow, SortOrder}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import scala.reflect.ClassTag
@@ -35,6 +39,25 @@ import scala.reflect.ClassTag
   * Every other per-partition summary pass in the engine (the SORTED assert
   * in `GraftFrame.checkSorted`, TeraSort's validation) calls
   * [[partitionSummaries]] too.
+  *
+  * Row model: both passes read Spark's own rows (`queryExecution.toRdd`,
+  * `InternalRow`s) and pass 2's rows become a DataFrame again through
+  * `GraftBridge.internalFrame` — no external `Row` and no encoder on
+  * either side. Pass 2 only appends columns (`new JoinedRow(r,
+  * InternalRow(x))`); dropping or replacing a column is a `drop` or
+  * `withColumn` on the result.
+  *
+  * Copy rule: the sort's iterator may hand back the same row object on
+  * every `next()`, so a row kept past `next()` (a boundary key, the
+  * previous row's key) is `copy()`'d — [[RunTracker]] does it for the
+  * key-run scans.
+  *
+  * Key equality: two rows have equal keys when [[keyOrdering]], Spark's
+  * `InterpretedOrdering` over the key columns, compares them 0, on the
+  * executors and in the driver's fold alike. Those are `groupBy`'s
+  * groups: -0.0 is 0.0, all NaNs are one key, null is one key, binary
+  * compares by bytes and structs field by field. Never `==` on rows:
+  * `UnsafeRow` equality is byte equality, under which -0.0 ≠ 0.0.
   */
 object Positions {
 
@@ -45,15 +68,19 @@ object Positions {
     * per partition, returned in partition order (`collect` concatenates
     * task results by partition index).
     */
-  private[graft] def partitionSummaries[S: ClassTag](rdd: RDD[Row])(
-      summarize: Iterator[Row] => S): IndexedSeq[S] =
+  private[graft] def partitionSummaries[R, S: ClassTag](rdd: RDD[R])(
+      summarize: Iterator[R] => S): IndexedSeq[S] =
     rdd.mapPartitions(it => Iterator.single(summarize(it))).collect()
       .toIndexedSeq
 
   /** Generic two-pass ordered scan: `summarize` each sorted partition,
     * `plan` the state every partition starts from out of all summaries
     * (callers folding left pass `_.scanLeft(init)(advance)`), then `emit`
-    * each partition's rows with its state.
+    * each partition's rows with its state. The result's columns are df's,
+    * then `appended`; `emit` returns each input row it keeps, joined with
+    * the values of `appended` (`new JoinedRow(r, InternalRow(...))`).
+    * Both `summarize` and `emit` see rows that the next `next()` may
+    * overwrite: copy what must outlive it (see the object's copy rule).
     *
     * Determinism contract: both passes share one RDD lineage (one shuffle
     * write, deterministic range bounds), but shuffle-read block order can
@@ -65,17 +92,17 @@ object Positions {
     * exactly this reason.
     */
   def scanSorted[S: ClassTag, T](df: DataFrame, order: Seq[Column],
-      outSchema: StructType)(
-      summarize: Iterator[Row] => S)(
+      appended: Seq[StructField])(
+      summarize: Iterator[InternalRow] => S)(
       plan: IndexedSeq[S] => IndexedSeq[T])(
-      emit: (T, Iterator[Row]) => Iterator[Row]): DataFrame = {
+      emit: (T, Iterator[InternalRow]) => Iterator[InternalRow]): DataFrame = {
     val spark = df.sparkSession
-    val rdd = sortedByRange(df, order).rdd
+    val rdd = sortedByRange(df, order).queryExecution.toRdd
     // element i = the state partition i starts from
     val bc = spark.sparkContext.broadcast(
       plan(partitionSummaries(rdd)(summarize)))
     val out = rdd.mapPartitionsWithIndex((i, it) => emit(bc.value(i), it))
-    spark.createDataFrame(out, outSchema)
+    GraftBridge.internalFrame(spark, out, StructType(df.schema ++ appended))
   }
 
   /** df sorted by `order` with a 1-based global position column appended —
@@ -83,15 +110,12 @@ object Positions {
     * become cumulative offsets; position = offset + local index.
     */
   def withGlobalPosition(df: DataFrame, order: Seq[Column],
-      posCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField(posCol, LongType, nullable = false))
-    scanSorted(df, order, outSchema)(
+      posCol: String): DataFrame =
+    scanSorted(df, order, Seq(StructField(posCol, LongType, nullable = false)))(
       countRows)(_.scanLeft(0L)(_ + _)) { (offset, rows) =>
       var i = offset
-      rows.map { r => i += 1; Row.fromSeq(r.toSeq :+ i) }
+      rows.map { r => i += 1; new JoinedRow(r, InternalRow(i)) }
     }
-  }
 
   /** QUANTILE as one [[scanSorted]] call: pass 1 counts each partition,
     * the `plan` step turns the counts into offsets, the total and each
@@ -108,12 +132,9 @@ object Positions {
     */
   private[ops] def quantileRows(df: DataFrame, n: Int, order: Seq[Column],
       quantileCol: String): DataFrame = {
-    val dropIdx: Int =
-      df.schema.fields.indexWhere(_.name == quantileCol) // -1 if absent
-    val outSchema = StructType(
-      df.schema.fields.filterNot(_.name == quantileCol) :+
-        StructField(quantileCol, IntegerType, nullable = false))
-    scanSorted(df, order, outSchema)(countRows) { counts =>
+    val tmpQ = "__graft_q"
+    scanSorted(df, order, Seq(StructField(tmpQ, IntegerType, nullable = false)))(
+      countRows) { counts =>
       val offsets = counts.scanLeft(0L)(_ + _)
       val total = offsets.last
       // boundary positions, ascending; (q·total + n − 1) div n is exact
@@ -135,17 +156,15 @@ object Positions {
         it.takeWhile(_ => j < qps.length).flatMap { r =>
           p += 1
           if (qps(j)._1 == p) {
-            val s = r.toSeq
-            val base = if (dropIdx >= 0) s.patch(dropIdx, Nil, 1) else s
-            val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
+            val rows = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
             while (j < qps.length && qps(j)._1 == p) {
-              rows += Row.fromSeq(base :+ qps(j)._2); j += 1
+              rows += new JoinedRow(r, InternalRow(qps(j)._2)); j += 1
             }
             rows
           } else Nil
         }
       }
-    }
+    }.drop(quantileCol).withColumnRenamed(tmpQ, quantileCol)
   }
 
   /** Grouped QUANTILE as a fused ordered scan: no per-group stats
@@ -153,18 +172,17 @@ object Positions {
     * join is a second input-sized exchange). Groups are CONTIGUOUS under
     * the (groupKeys ++ order) range sort, so per-row group stats need only
     * (a) each partition's local run lengths and (b) how its first/last runs
-    * continue into neighboring partitions. Pass 1 ([[partitionSummaries]])
-    * collects an O(1)-per-partition summary (count, first/last key,
-    * first/last run length); the driver stitches boundary runs into
-    * carry-in/tail-carry row counts; pass 2 zips the sorted partition with
-    * itself — one keys-only iterator records the local run lengths (8
-    * bytes per local group, the only per-task state), the other emits
-    * boundary rows.
+    * continue into neighboring partitions. Pass 1 ([[partitionSummaries]]
+    * of [[keyRunSummary]]) collects an O(1)-per-partition summary; the
+    * driver stitches boundary runs into carry-in/tail-carry row counts;
+    * pass 2 zips the sorted partition with itself — one keys-only iterator
+    * records the local run lengths (8 bytes per local group, the only
+    * per-task state), the other emits boundary rows.
     *
     * Pass 2 is this keys-then-rows `zipPartitions`, not [[scanSorted]]'s
     * single iterator: a row's quantiles need its run's full length before
     * the run's first row is emitted, and buffering a run instead would
-    * hold up to one partition of external Rows in the task.
+    * hold up to one partition of rows in the task.
     *
     * Output contract: per group of c rows the row
     * at rank ceil(q·c/n) for q = 1..n−1 (one output row PER index when
@@ -174,80 +192,44 @@ object Positions {
     * order) may settle differently between the passes — pass 1 and the
     * keys-only iterator read nothing beyond the keys, so summaries and run
     * lengths are unaffected (the same contract every key-scan here has).
-    * Groups are those of `groupBy`: keys compare through `normKey`, so
-    * -0.0 and 0.0 are one group, all NaNs one group, null one group.
+    * Groups are those of `groupBy` (see the object's key equality).
     */
   private[ops] def quantileRowsGrouped(df: DataFrame, n: Int,
       groupKeys: Seq[Column], order: Seq[Column], first: Boolean,
       last: Boolean, quantileCol: String): DataFrame = {
     val spark = df.sparkSession
     val (proj, keyNames) = withKeyCols(df, groupKeys, "__qk")
-    val keyIdx: Seq[Int] = keyNames.map(proj.schema.fieldIndex)
-    val rdd = sortedByRange(proj,
-      keyNames.map(org.apache.spark.sql.functions.col) ++ order).rdd
-    // pass 1: O(1)-per-partition boundary summary
-    val sums = partitionSummaries(rdd) { it =>
-      var c = 0L
-      var fk: Seq[Any] = null; var fr = 0L
-      var lk: Seq[Any] = null; var lr = 0L
-      while (it.hasNext) {
-        val r = it.next(); val k = keyOf(r, keyIdx); c += 1
-        if (fk == null) { fk = k; lk = k }
-        if (k != lk) { lk = k; lr = 0L }
-        if (lk == fk) fr += 1 // sorted ⇒ fk can only be the leading run
-        lr += 1
+    val ord = keyOrdering(proj.schema, keyNames)
+    val rdd = sortedByRange(proj, keyNames.map(col) ++ order)
+      .queryExecution.toRdd
+    val sums = partitionSummaries(rdd)(keyRunSummary(ord))
+    // driver stitch, once per scan direction: carried(i) = rows of the run
+    // partition i enters first that lie in partitions scanned before it.
+    // A one-run partition passes its run on; empty ones are transparent.
+    def carried(scan: Seq[Int], enters: KeyRun => Option[InternalRow],
+        leaves: KeyRun => (Option[InternalRow], Long)): Array[Long] = {
+      val out = new Array[Long](sums.length)
+      var run = (Option.empty[InternalRow], 0L) // (key, rows so far)
+      for (i <- scan; s = sums(i) if s.rows > 0L) {
+        val continues = sameKey(ord)(run._1, enters(s))
+        if (continues) out(i) = run._2
+        run = if (continues && s.runs == 1L) (run._1, run._2 + s.rows)
+          else leaves(s)
       }
-      (c, fk, fr, lk, lr)
+      out
     }
-    // driver stitch: carryIn(i) = rows of partition i's FIRST group lying
-    // in earlier partitions; tailCarry(i) = rows of its LAST group lying in
-    // later partitions. Sorted order ⇒ firstKey == lastKey iff the whole
-    // partition is one run; empty partitions are transparent.
-    val offsets = sums.map(_._1).scanLeft(0L)(_ + _)
-    val carryIn = new Array[Long](sums.length)
-    val tailCarry = new Array[Long](sums.length)
-    var runKey: Seq[Any] = null; var runLen = 0L
-    for (i <- sums.indices) {
-      val (c, fk, _, lk, lr) = sums(i)
-      if (c > 0L) {
-        carryIn(i) = if (runKey != null && fk == runKey) runLen else 0L
-        if (fk == lk) {
-          if (runKey != null && fk == runKey) runLen += c
-          else { runKey = lk; runLen = c }
-        } else { runKey = lk; runLen = lr }
-      }
-    }
-    runKey = null; runLen = 0L
-    for (i <- sums.indices.reverse) {
-      val (c, fk, fr, lk, _) = sums(i)
-      if (c > 0L) {
-        tailCarry(i) = if (runKey != null && lk == runKey) runLen else 0L
-        if (fk == lk) {
-          if (runKey != null && lk == runKey) runLen += c
-          else { runKey = fk; runLen = c }
-        } else { runKey = fk; runLen = fr }
-      }
-    }
-    // output: proj minus the key temp columns, quantileCol replaced in
-    // place when the caller already has one, appended otherwise
-    val dropIdx: Set[Int] = keyIdx.toSet
-    val kept = proj.schema.fields.zipWithIndex
-      .filterNot { case (_, i) => dropIdx(i) }
-    val qField = StructField(quantileCol, IntegerType, nullable = false)
-    val existingQ = kept.indexWhere(_._1.name == quantileCol)
-    val outSchema = StructType(
-      if (existingQ >= 0) kept.map(_._1).updated(existingQ, qField)
-      else kept.map(_._1) :+ qField)
-    val keptIdx = kept.map(_._2)
+    val carryIn = carried(sums.indices, _.first, s => (s.last, s.lastLen))
+    val tailCarry =
+      carried(sums.indices.reverse, _.last, s => (s.first, s.firstLen))
+    val tmpQ = "__graft_q"
     val nL = n.toLong
     val bc = spark.sparkContext.broadcast((carryIn, tailCarry))
     val out = rdd.zipPartitions(rdd) { (keysIt, rowsIt) =>
       // iterator A (keys only): local run lengths, in run order
       val runs = scala.collection.mutable.ArrayBuffer.empty[Long]
-      var lk: Seq[Any] = null
+      val tracker = new RunTracker(ord, null)
       while (keysIt.hasNext) {
-        val k = keyOf(keysIt.next(), keyIdx)
-        if (lk == null || k != lk) { runs += 0L; lk = k }
+        if (tracker.starts(keysIt.next())) runs += 0L
         runs(runs.length - 1) += 1L
       }
       if (runs.isEmpty) Iterator.empty
@@ -272,11 +254,8 @@ object Positions {
             (if (last && rank == c) 1 else 0)
           if (nOut == 0) Nil
           else {
-            val s = r.toSeq
-            val base = keptIdx.map(s)
-            def mk(q: Int): Row = Row.fromSeq(
-              if (existingQ >= 0) base.updated(existingQ, q) else base :+ q)
-            val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
+            def mk(q: Int): InternalRow = new JoinedRow(r, InternalRow(q))
+            val rows = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
             if (first && rank == 1L) rows += mk(0)
             var q = qlo
             while (q <= qhi) { rows += mk(q.toInt); q += 1L }
@@ -286,7 +265,10 @@ object Positions {
         }
       }
     }
-    spark.createDataFrame(out, outSchema)
+    // quantileCol replaces the caller's column in place, or is appended
+    GraftBridge.internalFrame(spark, out,
+      proj.schema.add(StructField(tmpQ, IntegerType, nullable = false)))
+      .drop(keyNames: _*).withColumn(quantileCol, col(tmpQ)).drop(tmpQ)
   }
 
   /** Scale-safe global running sum (ungrouped ITERATE/PROCESS with an
@@ -295,10 +277,12 @@ object Positions {
     * dataset to ONE partition. Pass 1 sums each sorted partition; the
     * fold turns those into per-partition starting offsets; pass 2 emits
     * the prefix sums. Accumulates exactly: integrals in Long, decimals in
-    * BigDecimal (result widened +10 precision digits like Spark's SUM),
-    * everything else in Double. Nulls count as zero. `order` must be a
-    * total order (append a tiebreak column if needed) — ties may settle
-    * differently between the two passes otherwise.
+    * Spark's Decimal (result widened +10 precision digits like Spark's
+    * SUM; a prefix sum that does not fit fails with
+    * NUMERIC_VALUE_OUT_OF_RANGE rather than turning null), everything
+    * else in Double. Nulls count as zero. `order` must be a total order
+    * (append a tiebreak column if needed) — ties may settle differently
+    * between the two passes otherwise.
     */
   def runningSumSorted(df: DataFrame, value: Column, order: Seq[Column],
       as: String): DataFrame = {
@@ -314,96 +298,110 @@ object Positions {
     val tmp = "__graft_rs_v"
     val wv = df.withColumn(tmp, value.cast(castTo))
     val vi = wv.schema.fieldIndex(tmp)
-    val outSchema = StructType(df.schema.fields :+
-      StructField(as, outDt, nullable = false))
     val zero: Any = outDt match {
-      case _: DecimalType => java.math.BigDecimal.ZERO
+      case _: DecimalType => Decimal(0)
       case LongType       => 0L
       case _              => 0.0
     }
     def plus(a: Any, b: Any): Any = (a, b) match {
-      case (x: Long, y: Long)     => x + y
-      case (x: Double, y: Double) => x + y
-      case (x: java.math.BigDecimal, y: java.math.BigDecimal) => x.add(y)
+      case (x: Long, y: Long)       => x + y
+      case (x: Double, y: Double)   => x + y
+      case (x: Decimal, y: Decimal) => x + y
     }
-    def valueOf(r: Row): Any =
-      if (r.isNullAt(vi)) zero
-      else r.get(vi) match {
-        case d: BigDecimal => d.bigDecimal
-        case x             => x
-      }
-    scanSorted[Any, Any](wv, order, outSchema)(
+    def valueOf(r: InternalRow): Any =
+      if (r.isNullAt(vi)) zero else r.get(vi, castTo)
+    def result(acc: Any): Any = (acc, outDt) match {
+      case (d: Decimal, t: DecimalType) =>
+        val out = d.clone()
+        if (!out.changePrecision(t.precision, t.scale))
+          throw new ArithmeticException(
+            s"NUMERIC_VALUE_OUT_OF_RANGE: running sum $d does not fit $t")
+        out
+      case _ => acc
+    }
+    scanSorted[Any, Any](wv, order,
+      Seq(StructField(as, outDt, nullable = false)))(
       it => it.foldLeft(zero)((acc, r) => plus(acc, valueOf(r))))(
       _.scanLeft(zero)(plus)) { (offset, rows) =>
       var acc = offset
-      rows.map { r => acc = plus(acc, valueOf(r)); Row.fromSeq(r.toSeq.init :+ acc) }
-    }
+      rows.map { r =>
+        acc = plus(acc, valueOf(r)); new JoinedRow(r, InternalRow(result(acc)))
+      }
+    }.drop(tmp)
   }
 
   /** Pass-1 summary of the positional scans: the partition's row count. */
-  private def countRows(it: Iterator[Row]): Long = {
+  private def countRows(it: Iterator[InternalRow]): Long = {
     var n = 0L; while (it.hasNext) { it.next(); n += 1 }; n
   }
 
-  /** Normalize a key value so that Scala equality on key Seqs groups rows
-    * exactly as `groupBy` does (null-safe, Spark's NormalizeFloatingNumbers):
-    *  - `Row.get` returns `Array[Byte]` for BinaryType, whose `equals` is
-    *    reference identity; an immutable ArraySeq compares the bytes.
-    *  - -0.0 becomes 0.0 (Double and Float), so both signs are one key.
-    *  - Every NaN becomes one sentinel. Scala's `==` on boxed floating
-    *    values is IEEE (NaN != NaN), which would make each NaN row a run of
-    *    its own; the range sort already places all NaNs together.
-    *  - null stays null, one key of its own (`null == null`).
-    * Floating values nested in structs or arrays are not normalized.
+  /** Key equality of the ordered scans: Spark's own ordering over the
+    * `keys` columns of `schema` (see the object's key equality).
+    * Interpreted, not generated: a scan compiles no ordering class.
     */
-  private[ops] def normKey(v: Any): Any = v match {
-    case b: Array[Byte] => scala.collection.immutable.ArraySeq.unsafeWrapArray(b)
-    case d: Double => if (d.isNaN) NaNKey else if (d == 0.0d) 0.0d else d
-    case f: Float => if (f.isNaN) NaNKey else if (f == 0.0f) 0.0f else f
-    case other => other
+  private[ops] def keyOrdering(schema: StructType,
+      keys: Seq[String]): InterpretedOrdering =
+    new InterpretedOrdering(keys.map { k =>
+      val i = schema.fieldIndex(k)
+      SortOrder(BoundReference(i, schema(i).dataType, nullable = true),
+        Ascending)
+    })
+
+  private def sameKey(ord: InterpretedOrdering)(a: Option[InternalRow],
+      b: Option[InternalRow]): Boolean =
+    a.zip(b).exists { case (x, y) => ord.compare(x, y) == 0 }
+
+  /** The key run of a sorted scan: `starts(r)` is true when `r`'s key
+    * differs from the last run's (or no run came before), and then keeps
+    * a copy of `r` as `last` — the scan may reuse the row object.
+    */
+  private[ops] final class RunTracker(ord: InterpretedOrdering,
+      var last: InternalRow) {
+    def starts(r: InternalRow): Boolean = {
+      val s = last == null || ord.compare(last, r) != 0
+      if (s) last = r.copy()
+      s
+    }
   }
 
-  private case object NaNKey
+  /** Per-partition boundary summary for key-adjacency scans: row count,
+    * first and last key (a row of that key) with their runs' lengths in
+    * the partition, and the number of runs.
+    */
+  private[ops] final case class KeyRun(rows: Long,
+      first: Option[InternalRow], firstLen: Long,
+      last: Option[InternalRow], lastLen: Long, runs: Long)
 
-  /** Read the key tuple of one row (normalized for value equality). */
-  private[ops] def keyOf(r: Row, keyIdx: Seq[Int]): Seq[Any] =
-    keyIdx.map(i => normKey(r.get(i)))
-
-  /** Per-partition boundary summary for key-adjacency scans. */
-  private[ops] final case class KeyRun(
-      first: Option[Seq[Any]], last: Option[Seq[Any]], runs: Long)
-
-  private[ops] def keyRunSummary(keyIdx: Seq[Int])(
-      it: Iterator[Row]): KeyRun = {
-    var first: Seq[Any] = null
-    var last: Seq[Any] = null
-    var runs = 0L
+  private[ops] def keyRunSummary(ord: InterpretedOrdering)(
+      it: Iterator[InternalRow]): KeyRun = {
+    val tracker = new RunTracker(ord, null)
+    var rows = 0L; var runs = 0L
+    var first: InternalRow = null; var firstLen = 0L; var lastLen = 0L
     while (it.hasNext) {
-      // evaluate the row ONCE, then index it (a keyIdx.map(r.get) over a
-      // shared it.next() prefix would consume one row per key column)
-      val r = it.next()
-      val k = keyOf(r, keyIdx)
-      if (first == null) first = k
-      if (last == null || k != last) runs += 1
-      last = k
+      rows += 1
+      if (tracker.starts(it.next())) {
+        runs += 1; lastLen = 0L
+        if (first == null) first = tracker.last
+      }
+      if (tracker.last eq first) firstLen += 1 // still the leading run
+      lastLen += 1
     }
-    KeyRun(Option(first), Option(last), runs)
+    KeyRun(rows, Option(first), firstLen, Option(tracker.last), lastLen, runs)
   }
 
   /** State carried into a partition by the key-adjacency fold: the last key
     * of the preceding non-empty partition and the number of runs before it.
     */
-  private[ops] def advanceKeyRun(state: (Option[Seq[Any]], Long),
-      s: KeyRun): (Option[Seq[Any]], Long) =
-    s.first match {
-      case None => state
-      case Some(f) =>
-        val continues = state._1.contains(f)
-        (s.last, state._2 + s.runs - (if (continues) 1 else 0))
+  private[ops] def advanceKeyRun(ord: InterpretedOrdering)(
+      state: (Option[InternalRow], Long), s: KeyRun): (Option[InternalRow], Long) =
+    if (s.rows == 0L) state
+    else {
+      val continues = sameKey(ord)(state._1, s.first)
+      (s.last, state._2 + s.runs - (if (continues) 1 else 0))
     }
 
-  /** Materialize key expressions as temp columns so pass-2 row lambdas can
-    * read them by index; returns (projected df, temp names).
+  /** Materialize key expressions as temp columns so [[keyOrdering]] can
+    * bind them by ordinal; returns (projected df, temp names).
     */
   private[ops] def withKeyCols(df: DataFrame, keys: Seq[Column],
       prefix: String): (DataFrame, Seq[String]) = {

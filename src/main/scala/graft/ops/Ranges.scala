@@ -1,6 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.JoinedRow
 import org.apache.spark.sql.functions._
 
 /** Range (interval) joins: point-in-interval and interval-overlap — the
@@ -163,10 +165,9 @@ object Ranges {
     val points =
       pts(aq, col(aEnd), 0, col(aStart), 3, withKeys = true)
         .unionAll(pts(bq, col(bEnd), 1, col(bStart), 2, withKeys = false))
-    val outSchema = StructType(keyFields.toArray :+
-      StructField(delta, LongType, nullable = false))
     val swept = Positions.scanSorted[(Long, Long), (Long, Long)](
-      points, Seq(col(t), col(typ)), outSchema)(
+      points, Seq(col(t), col(typ)),
+      Seq(StructField(delta, LongType, nullable = false)))(
       { it =>
         var s = 0L; var e = 0L
         while (it.hasNext) it.next().getInt(1) match {
@@ -179,8 +180,8 @@ object Ranges {
         r.getInt(1) match {
           case 1 => e += 1; None
           case 2 => s += 1; None
-          case 0 => Some(org.apache.spark.sql.Row.fromSeq(r.toSeq.drop(2) :+ s))
-          case _ => Some(org.apache.spark.sql.Row.fromSeq(r.toSeq.drop(2) :+ -e))
+          case 0 => Some(new JoinedRow(r, InternalRow(s)))
+          case _ => Some(new JoinedRow(r, InternalRow(-e)))
         }
       }
     }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.ByteArray
 
 /** Terasort analog — the reference's signature benchmark
   * (`testing/benchmarks/ecl/terasort.ecl:20-34`: global UNSTABLE SORT of
@@ -55,17 +56,6 @@ object TeraSort {
       first: Array[Byte], last: Array[Byte], rows: Long,
       checksum: java.math.BigDecimal)
 
-  private def unsignedCompare(a: Array[Byte], b: Array[Byte]): Int = {
-    var i = 0
-    val len = math.min(a.length, b.length)
-    while (i < len) {
-      val c = (a(i) & 0xff) - (b(i) & 0xff)
-      if (c != 0) return c
-      i += 1
-    }
-    a.length - b.length
-  }
-
   /** Unsigned big-endian value of the FULL 10-byte key — the unit of the
     * permutation checksum (all bytes count: an 8-byte prefix would be
     * blind to corruption confined to the key tail). JVM-side twin of
@@ -90,16 +80,16 @@ object TeraSort {
     * `key`): O(#partitions) rows to the driver, never the data.
     */
   private def summarize(sorted: DataFrame, key: String): Seq[PartSummary] =
-    Positions.partitionSummaries(sorted.select(col(key)).rdd) { it =>
+    Positions.partitionSummaries(sorted.select(col(key)).queryExecution.toRdd) { it =>
       var ok = true
       var first: Array[Byte] = null
       var last: Array[Byte] = null
       var rows = 0L
       var sum = java.math.BigDecimal.ZERO
       it.foreach { r =>
-        val k = r.getAs[Array[Byte]](0)
+        val k = r.getBinary(0) // a fresh array: UnsafeRow copies it out
         if (first == null) first = k
-        if (last != null && unsignedCompare(last, k) > 0) ok = false
+        if (last != null && ByteArray.compareBinary(last, k) > 0) ok = false
         last = k
         rows += 1
         sum = sum.add(keyValue(k))
@@ -113,8 +103,8 @@ object TeraSort {
     * pins the two paths equal on the n=1000 golden value).
     */
   def checksum(df: DataFrame, key: Column): java.math.BigDecimal =
-    Positions.partitionSummaries(df.select(key).rdd)(_.foldLeft(
-      java.math.BigDecimal.ZERO)((sum, r) => sum.add(keyValue(r.getAs[Array[Byte]](0)))))
+    Positions.partitionSummaries(df.select(key).queryExecution.toRdd)(_.foldLeft(
+      java.math.BigDecimal.ZERO)((sum, r) => sum.add(keyValue(r.getBinary(0)))))
       .foldLeft(java.math.BigDecimal.ZERO)(_.add(_))
 
   /** Full validation certificate over a sorted frame: every partition
@@ -125,7 +115,7 @@ object TeraSort {
     val parts = summarize(sorted, key).filter(_.rows > 0)
     val within = parts.forall(_.okWithin)
     val across = parts.sliding(2).forall {
-      case Seq(a, b) => unsignedCompare(a.last, b.first) <= 0
+      case Seq(a, b) => ByteArray.compareBinary(a.last, b.first) <= 0
       case _ => true
     }
     (within && across, parts.map(_.rows).sum,

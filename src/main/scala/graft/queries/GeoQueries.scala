@@ -32,7 +32,7 @@ object GeoQueries {
     }
   }
 
-  /** Dynamic-resolution parent: same bit math as [[H3.parentCol]] but with
+  /** Dynamic-resolution parent: same bit math as [[H3.parent]] but with
     * the target res as a column (res nibble swap + 7-marker OR) — pure
     * codegen, no UDF, the path a 100-TB re-rollup takes.
     */

@@ -122,7 +122,7 @@ final case class IndexLookupExec(child: SparkPlan) extends UnaryExecNode {
   override def outputPartitioning: Partitioning = child.outputPartitioning
   override def outputOrdering: Seq[SortOrder] = child.outputOrdering
 
-  protected def doExecute(): RDD[InternalRow] = child.execute()
+  override protected def doExecute(): RDD[InternalRow] = child.execute()
 
   override def executeCollect(): Array[InternalRow] =
     serve(Int.MaxValue).getOrElse(super.executeCollect())

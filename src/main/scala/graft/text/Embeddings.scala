@@ -73,11 +73,6 @@ object Embeddings {
       org.apache.spark.sql.GraftBridge.expression(vec),
       org.apache.spark.sql.GraftBridge.expression(mat)))
 
-  /** L2 norm per vector ([[norm]]; decimal-accumulated when `exact`). */
-  def norms(df: DataFrame, id: Column, vec: Column,
-      exact: Boolean = true): DataFrame =
-    df.select(id.as("vec_id"), norm(vec, exact).as("norm"))
-
   /** Dot product of two vector columns: one per-row fold over the zipped
     * per-position products (all in whole-stage codegen). Double fold by
     * default; decimal-exact under `exact` (see [[arraySum]]).
@@ -133,24 +128,12 @@ object Embeddings {
   }
 
   /** Exact cosine top-k over PRE-SELECTED candidate pairs (the refine step
-    * after LSH bucketing): each input row carries both vectors; dot and
-    * norms use the same decimal accumulation as [[cosineTopK]]. Output:
-    * (q_id, c_id, rank).
-    */
-  def cosinePairsTopK(pairs: DataFrame, qid: Column, cid: Column,
-      qvec: Column, cvec: Column, k: Int,
-      exact: Boolean = false): DataFrame =
-    // norms fold per pair here — fine when pairs/vector is small; when the
-    // pair frame joins vectors in anyway, precompute norms per SIDE and
-    // use the normed variant below (once per vector beats once per pair —
-    // at ~30 candidates/vector the norm folds are 2/3 of all arithmetic)
-    cosinePairsTopKNormed(pairs, qid, cid, qvec, cvec,
-      norm(qvec, exact), norm(cvec, exact), k, exact)
-
-  /** [[cosinePairsTopK]] with CALLER-SUPPLIED norm columns — the shape to
-    * use when norms were computed once per vector before the pair join
-    * (dot and the divide are the only per-pair arithmetic left). Same
-    * decimal-exact scores, same output.
+    * after LSH bucketing), with CALLER-SUPPLIED norm columns: norms are
+    * computed once per vector before the pair join (once per vector beats
+    * once per pair — at ~30 candidates/vector the norm folds are 2/3 of
+    * all arithmetic), so dot and the divide are the only per-pair
+    * arithmetic left. Dot uses the same decimal accumulation as
+    * [[cosineTopK]] under `exact`. Output: (q_id, c_id, rank).
     */
   def cosinePairsTopKNormed(pairs: DataFrame, qid: Column, cid: Column,
       qvec: Column, cvec: Column, qnorm: Column, cnorm: Column,

@@ -255,9 +255,6 @@ object TextOps {
       .agg(collect_list(col("shingle")).as("sset")))
   }
 
-  /** Portable 16-bit word hash: first 4 hex chars of md5. */
-  def hash16(c: Column): Column = conv(substring(md5(c), 1, 4), 16, 10).cast("long")
-
   /** First `hexDigits` md5 hex digits as a long — up to 15 digits (60 bits)
     * so the value stays positive in a signed 64-bit long on both engines.
     */
@@ -305,8 +302,8 @@ object TextOps {
   }
 
   /** SimHash (16-bit, frequency-weighted): bit j of the fingerprint is 1
-    * iff sum over word occurrences of ±1 (per bit j of hash16(word)) is
-    * positive. One groupBy(doc) of 16 conditional sums — single shuffle.
+    * iff sum over word occurrences of ±1 (per bit j of the word's first 4
+    * md5 hex digits) is positive. One groupBy(doc) of 16 conditional sums — single shuffle.
     */
   def simhash16(df: DataFrame, id: Column, text: Column): DataFrame =
     simhashWide(df, id, text, 16)

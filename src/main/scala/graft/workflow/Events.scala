@@ -51,8 +51,8 @@ object Events {
 
     /** NOTIFY(EVENT(name, text)): append to the log and dispatch to every
       * matching subscription. Jobs run on the notifying thread, after the
-      * lock is released — a failing job surfaces to the notifier
-      * (SUCCESS/FAILURE handlers wrap jobs via [[Workflow.sequential]]).
+      * lock is released — a failing job surfaces to the notifier, where
+      * a SUCCESS/FAILURE handler is the caller's try/catch.
       */
     def notify(name: String, text: String = ""): Unit = {
       val toRun = lock.synchronized {
@@ -117,8 +117,9 @@ object Events {
       * the SAME event queue as NOTIFY; `job : WHEN(CRON('…'))`): a daemon
       * timer notifying `name` every `intervalMs` until the returned handle
       * closes. A throwing WHEN job must not kill the schedule — the tick
-      * loop survives and the failure surfaces via SUCCESS/FAILURE wrapping
-      * (Workflow.sequential), as in the reference.
+      * loop survives and the failure surfaces to the job's own
+      * SUCCESS/FAILURE handling (a try/catch in the job), as in the
+      * reference.
       */
     def cron(name: String, intervalMs: Long): AutoCloseable = {
       @volatile var live = true

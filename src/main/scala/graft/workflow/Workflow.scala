@@ -38,14 +38,6 @@ object Workflow {
       params.get(name).map(_.toLong).getOrElse(default)
   }
 
-  /** SEQUENTIAL(actions) / SUCCESS/FAILURE handlers (WFType*
-    * workunit.hpp:578-580): driver-side orchestration with per-item
-    * error handling.
-    */
-  def sequential(actions: Seq[() => Unit], onFailure: Throwable => Unit =
-      t => throw t): Unit =
-    actions.foreach { a => try a() catch { case t: Throwable => onFailure(t) } }
-
   /** A localCheckpoint'd frame plus a handle that ACTUALLY releases its
     * blocks. `Dataset.unpersist()` is a no-op here: checkpoint blocks are
     * RDD-level persistence on the internal RDD, not a CacheManager entry,
@@ -94,27 +86,8 @@ object Workflow {
     * concern).
     */
   def loopN(df: DataFrame, n: Int, checkpointEvery: Int = 4)(
-      body: (DataFrame, Int) => DataFrame): DataFrame = {
-    var cur = df
-    // superseded checkpoints must be RELEASED: eager localCheckpoint
-    // truncates the new frame's lineage at its own blocks, so once the
-    // next checkpoint is materialized nothing can reference the previous
-    // one — leaving it cached pins O(iterations) full copies of the data
-    // and thrashed the block store at the sf10 rehearsal (q190 class).
-    // Release goes through the checkpointed RDD handle (Checkpointed),
-    // not Dataset.unpersist, which cannot see checkpoint blocks.
-    var prev: Option[Checkpointed] = None
-    for (i <- 1 to n) {
-      cur = body(cur, i)
-      if (i % checkpointEvery == 0) {
-        val ck = checkpointEager(cur)
-        cur = ck.df
-        prev.foreach(_.release())
-        prev = Some(ck)
-      }
-    }
-    cur
-  }
+      body: (DataFrame, Int) => DataFrame): DataFrame =
+    loopWhile(df, math.max(n, 0), checkpointEvery)(_ => true)(body)
 
   /** LOOP(ds, loopcondition, body) (TAKlooprow/dataset condition forms,
     * eclhelper.hpp:989 loopAgain): iterate while the driver-evaluated
@@ -128,7 +101,14 @@ object Workflow {
       body: (DataFrame, Int) => DataFrame): DataFrame = {
     require(maxIter >= 0, "maxIter must be >= 0")
     var cur = df
-    var prev: Option[Checkpointed] = None // see loopN: release superseded blocks
+    // superseded checkpoints must be RELEASED: eager localCheckpoint
+    // truncates the new frame's lineage at its own blocks, so once the
+    // next checkpoint is materialized nothing can reference the previous
+    // one — leaving it cached pins O(iterations) full copies of the data
+    // and thrashed the block store at the sf10 rehearsal (q190 class).
+    // Release goes through the checkpointed RDD handle (Checkpointed),
+    // not Dataset.unpersist, which cannot see checkpoint blocks.
+    var prev: Option[Checkpointed] = None
     var i = 1
     while (i <= maxIter && continueWhile(cur)) {
       cur = body(cur, i)

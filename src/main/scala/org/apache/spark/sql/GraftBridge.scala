@@ -23,6 +23,14 @@ object GraftBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A DataFrame over Spark's own rows (`internalCreateDataFrame` is
+    * private[sql]): no encoder runs, so `rdd`'s rows must match `schema`.
+    */
+  def internalFrame(spark: SparkSession,
+      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
+
   /** The schema a file-source read declares for a given one
     * (`StructType.asNullable` is private[spark]).
     */

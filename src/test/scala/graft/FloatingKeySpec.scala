@@ -1,6 +1,7 @@
 package graft
 
-import graft.ops.{DedupRollup, Sorting}
+import graft.model.GraftFrame
+import graft.ops.{DedupRollup, Sorting, TeraSort}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -91,5 +92,16 @@ class FloatingKeySpec extends SparkSpec {
       assert(got == expected)
       assert(expected.map(_._1) == Seq(1L, 2L, 4L, 6L, 400L))
     })
+  }
+
+  test("checkSorted accepts what Spark's sort ties: ±0.0 and NaNs in one " +
+      "partition") {
+    GraftFrame(Seq(0.0, -0.0, 0.0, Double.NaN, otherNaN).toDF("k")
+      .coalesce(1)).checkSorted("k")
+  }
+
+  test("checkSorted accepts Spark's order of binary keys") {
+    GraftFrame(TeraSort.generate(spark, 500, 3).orderBy("key"))
+      .checkSorted("key")
   }
 }

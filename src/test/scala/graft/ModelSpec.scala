@@ -61,6 +61,19 @@ class ModelSpec extends SparkSpec {
       == Seq("0.1", "0.3", "0.6"))
   }
 
+  test("GraftFrame: a decimal running sum past its widened precision fails, " +
+      "never reads null") {
+    val big = Seq("9" * 38, "9" * 38).toDF("s")
+      .select(col("s").cast("decimal(38,0)").as("d")).repartition(2)
+    val e = intercept[Exception] {
+      GraftFrame(big).runningSum(col("d"), Seq(col("d")), "rs").df.collect()
+    }
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(c => String.valueOf(c.getMessage)).toSeq
+    assert(causes.exists(_.contains("NUMERIC_VALUE_OUT_OF_RANGE")),
+      causes.mkString("\n"))
+  }
+
   test("GraftFrame: regroup requires matching keys and unions groups") {
     val a = GraftFrame(Seq((1, 1)).toDF("g", "v")).group("g")
     val b = GraftFrame(Seq((1, 2)).toDF("g", "v")).group("g")

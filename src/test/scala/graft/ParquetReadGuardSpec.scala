@@ -36,6 +36,11 @@ object ParquetReadGuardSpec {
       .map(f => (f.toString, Files.readString(f)))
       .toSeq
 
+  /** `text` without its `/* */` comments and whole-line `//` comments. */
+  def withoutComments(text: String): String =
+    raw"(?s)/\*.*?\*/".r.replaceAllIn(text, "").linesIterator
+      .filterNot(_.trim.startsWith("//")).mkString("\n")
+
   /** Each Scala file under src/main/scala, with its text. */
   lazy val sources: Seq[(String, String)] = scalaFiles("src/main/scala")
 

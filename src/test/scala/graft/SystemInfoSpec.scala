@@ -14,6 +14,7 @@ class SystemInfoSpec extends SparkSpec {
     assert(SystemInfo.Job.nodes(spark) > 0)
     assert(SystemInfo.Job.wuid(spark).nonEmpty)
     assert(SystemInfo.Job.target(spark).startsWith("local"))
+    assert(SystemInfo.Job.daliServer(spark) == spark.sparkContext.master)
     assert(SystemInfo.Job.platform(spark).startsWith("spark "))
     assert(SystemInfo.Job.os().nonEmpty)
     assert(SystemInfo.Job.logString("hello") == 5)
