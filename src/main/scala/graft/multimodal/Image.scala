@@ -125,11 +125,11 @@ object Image {
     out.toByteArray
   }
 
-  /** Decode a PNG. None for anything that is not a supported PNG —
-    * corrupt bytes are data, not task failures.
+  /** Decode a PNG. None for null or anything that is not a supported
+    * PNG — corrupt bytes are data, not task failures.
     */
   def decodePng(bytes: Array[Byte]): Option[Raster] = {
-    if (bytes.length < Signature.length + 12 ||
+    if (bytes == null || bytes.length < Signature.length + 12 ||
         !bytes.startsWith(Signature)) return None
     try {
       var pos = Signature.length

@@ -21,16 +21,27 @@ import org.apache.spark.sql.types._
   *    parse genuine YUV4MPEG2 streams through the [[Video]] codec
   *    (FRAME-marker framing, 4:2:0/4:4:4/mono planes).
   * COMPRESSED av codecs (H.264, MP3, …) remain environment-limited; the
-  * byte-frame stubs below ([[decodeBlobStub]] / [[sampleFrames]]) keep that
-  * pluggable contract testable — swap their bodies for a javacv/ffmpeg call
-  * in production, the Spark-side plumbing (binary schema, partition
-  * batching, output shape) is identical.
+  * byte-level [[decodeBlobStub]] keeps that pluggable contract testable —
+  * swap its body for a javacv/ffmpeg call in production, the Spark-side
+  * plumbing (binary schema, partition batching, output shape) is identical.
+  *
+  * Every function is one [[perRow]] pass; a null or undecodable blob is
+  * data, never a task failure.
   */
 object Multimodal {
 
-  /** Decode one image blob to its raster, or None if undecodable. */
-  private def readImage(bytes: Array[Byte]): Option[Image.Raster] =
-    Image.decodePng(bytes)
+  /** The one partition pass: `f` reads `inCols` at positions 0, 1, … (only
+    * they and the id are deserialized) and returns output rows of `out`,
+    * each emitted with the id prepended under the schema `idCol +: out`.
+    * Row order within a partition is kept.
+    */
+  private def perRow(df: DataFrame, idCol: String, inCols: Seq[String],
+      out: StructField*)(f: Row => IterableOnce[Row]): DataFrame = {
+    val id = inCols.length
+    df.select((inCols :+ idCol).map(col): _*).mapPartitions(_.flatMap { r =>
+      f(r).iterator.map(t => Row.fromSeq(r.get(id) +: t.toSeq))
+    })(Encoders.row(StructType(df.schema(idCol) +: out)))
+  }
 
   /** Image metadata schema produced by [[decodeImage]]. */
   val ImageMetaSchema: StructType = StructType(Seq(
@@ -47,46 +58,33 @@ object Multimodal {
     * Undecodable blobs yield (-1, -1, -1, -1) rather than failing the
     * task (corrupt images are data, not bugs, at 100 TB).
     */
-  def decodeImage(df: DataFrame, idCol: String, binCol: String): DataFrame = {
-    val outSchema = StructType(df.schema(idCol) +: ImageMetaSchema.fields)
-    val idIdx = df.schema.fieldIndex(idCol)
-    val binIdx = df.schema.fieldIndex(binCol)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        readImage(r.getAs[Array[Byte]](binIdx)) match {
-          case Some(img) =>
-            var sum = 0L
-            var y = 0
-            while (y < img.height) {
-              var x = 0
-              while (x < img.width) { sum += img.luma(x, y); x += 1 }
-              y += 1
-            }
-            Row(r.get(idIdx), img.width, img.height, img.bands, sum)
-          case None => Row(r.get(idIdx), -1, -1, -1, -1L)
-        }
-      }
-    }(Encoders.row(outSchema))
-  }
+  def decodeImage(df: DataFrame, idCol: String, binCol: String): DataFrame =
+    perRow(df, idCol, Seq(binCol), ImageMetaSchema.fields.toSeq: _*) { r =>
+      Some(Image.decodePng(r.getAs[Array[Byte]](0)) match {
+        case Some(img) =>
+          var sum = 0L
+          var y = 0
+          while (y < img.height) {
+            var x = 0
+            while (x < img.width) { sum += img.luma(x, y); x += 1 }
+            y += 1
+          }
+          Row(img.width, img.height, img.bands, sum)
+        case None => Row(-1, -1, -1, -1L)
+      })
+    }
 
   /** REAL pixel extraction: one row per pixel (id, x, y, v) with v the
     * integer luma — the gateable primitive behind resize/feature checks.
     */
-  def imagePixels(df: DataFrame, idCol: String, binCol: String): DataFrame = {
-    val outSchema = StructType(Seq(df.schema(idCol),
-      StructField("x", IntegerType), StructField("y", IntegerType),
-      StructField("v", IntegerType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val binIdx = df.schema.fieldIndex(binCol)
-    df.mapPartitions { rows =>
-      rows.flatMap { r =>
-        readImage(r.getAs[Array[Byte]](binIdx)).toSeq.flatMap { img =>
-          for (y <- 0 until img.height; x <- 0 until img.width)
-            yield Row(r.get(idIdx), x, y, img.luma(x, y))
-        }
+  def imagePixels(df: DataFrame, idCol: String, binCol: String): DataFrame =
+    perRow(df, idCol, Seq(binCol), StructField("x", IntegerType),
+        StructField("y", IntegerType), StructField("v", IntegerType)) { r =>
+      Image.decodePng(r.getAs[Array[Byte]](0)).toSeq.flatMap { img =>
+        for (y <- 0 until img.height; x <- 0 until img.width)
+          yield Row(x, y, img.luma(x, y))
       }
-    }(Encoders.row(outSchema))
-  }
+    }
 
   /** REAL resize: nearest-neighbor resample to (targetW, targetH) and
     * re-encode as (lossless) PNG. Nearest-neighbor — source pixel
@@ -98,35 +96,28 @@ object Multimodal {
   def resizeImage(df: DataFrame, idCol: String, binCol: String,
       targetW: Int, targetH: Int): DataFrame = {
     require(targetW >= 1 && targetH >= 1, "target dims must be >= 1")
-    val outSchema = StructType(Seq(df.schema(idCol),
-      StructField("resized", BinaryType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val binIdx = df.schema.fieldIndex(binCol)
-    df.mapPartitions { rows =>
-      rows.flatMap { r =>
-        readImage(r.getAs[Array[Byte]](binIdx)).map { img =>
-          val nb = img.bands
-          val out = new Array[Byte](targetW * targetH * nb)
-          var y = 0
-          while (y < targetH) {
-            val sy = y * img.height / targetH
-            var x = 0
-            while (x < targetW) {
-              val sx = x * img.width / targetW
-              var b = 0
-              while (b < nb) {
-                out((y * targetW + x) * nb + b) = img.sample(sx, sy, b).toByte
-                b += 1
-              }
-              x += 1
+    perRow(df, idCol, Seq(binCol), StructField("resized", BinaryType)) { r =>
+      Image.decodePng(r.getAs[Array[Byte]](0)).map { img =>
+        val nb = img.bands
+        val out = new Array[Byte](targetW * targetH * nb)
+        var y = 0
+        while (y < targetH) {
+          val sy = y * img.height / targetH
+          var x = 0
+          while (x < targetW) {
+            val sx = x * img.width / targetW
+            var b = 0
+            while (b < nb) {
+              out((y * targetW + x) * nb + b) = img.sample(sx, sy, b).toByte
+              b += 1
             }
-            y += 1
+            x += 1
           }
-          Row(r.get(idIdx),
-            Image.encodePng(Image.Raster(targetW, targetH, nb, out)))
+          y += 1
         }
+        Row(Image.encodePng(Image.Raster(targetW, targetH, nb, out)))
       }
-    }(Encoders.row(outSchema))
+    }
   }
 
   /** REAL feature extraction: `bins`-bin luma histogram per image — a
@@ -137,27 +128,22 @@ object Multimodal {
   def imageHistogram(df: DataFrame, idCol: String, binCol: String,
       bins: Int = 16): DataFrame = {
     require(bins >= 1 && 256 % bins == 0, "bins must divide 256")
-    val outSchema = StructType(Seq(df.schema(idCol),
-      StructField("features", ArrayType(FloatType))))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val binIdx = df.schema.fieldIndex(binCol)
     val width = 256 / bins
-    df.mapPartitions { rows =>
-      rows.flatMap { r =>
-        readImage(r.getAs[Array[Byte]](binIdx)).map { img =>
-          val hist = new Array[Float](bins)
-          var y = 0
-          while (y < img.height) {
-            var x = 0
-            while (x < img.width) {
-              hist(img.luma(x, y) / width) += 1f; x += 1
-            }
-            y += 1
+    perRow(df, idCol, Seq(binCol),
+        StructField("features", ArrayType(FloatType))) { r =>
+      Image.decodePng(r.getAs[Array[Byte]](0)).map { img =>
+        val hist = new Array[Float](bins)
+        var y = 0
+        while (y < img.height) {
+          var x = 0
+          while (x < img.width) {
+            hist(img.luma(x, y) / width) += 1f; x += 1
           }
-          Row(r.get(idIdx), hist.toSeq)
+          y += 1
         }
+        Row(hist.toSeq)
       }
-    }(Encoders.row(outSchema))
+    }
   }
 
   /** Deterministic grayscale PNG: pixel (x,y) = (31x + 17y + seed) mod 256.
@@ -175,18 +161,11 @@ object Multimodal {
 
   /** Column form of [[grayPng]] (batched partition pass, not a row UDF). */
   def synthGrayPng(df: DataFrame, idCol: String, widthCol: String,
-      heightCol: String, seedCol: String): DataFrame = {
-    val outSchema = StructType(Seq(df.schema(idCol),
-      StructField("img", BinaryType)))
-    val Seq(idIdx, wIdx, hIdx, sIdx) =
-      Seq(idCol, widthCol, heightCol, seedCol).map(df.schema.fieldIndex)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        Row(r.get(idIdx), grayPng(r.getInt(wIdx), r.getInt(hIdx),
-          r.getLong(sIdx)))
-      }
-    }(Encoders.row(outSchema))
-  }
+      heightCol: String, seedCol: String): DataFrame =
+    perRow(df, idCol, Seq(widthCol, heightCol, seedCol),
+        StructField("img", BinaryType)) { r =>
+      Some(Row(grayPng(r.getInt(0), r.getInt(1), r.getLong(2))))
+    }
 
   // ---- REAL audio (WAV/PCM via [[Audio]]) ----------------------------------
 
@@ -206,18 +185,11 @@ object Multimodal {
 
   /** Column form of [[synthWav]] (batched partition pass). */
   def synthWavCol(df: DataFrame, idCol: String, nCol: String,
-      rateCol: String, seedCol: String): DataFrame = {
-    val outSchema = StructType(Seq(df.schema(idCol),
-      StructField("wav", BinaryType)))
-    val Seq(idIdx, nIdx, rIdx, sIdx) =
-      Seq(idCol, nCol, rateCol, seedCol).map(df.schema.fieldIndex)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        Row(r.get(idIdx),
-          synthWav(r.getInt(nIdx), r.getInt(rIdx), r.getLong(sIdx)))
-      }
-    }(Encoders.row(outSchema))
-  }
+      rateCol: String, seedCol: String): DataFrame =
+    perRow(df, idCol, Seq(nCol, rateCol, seedCol),
+        StructField("wav", BinaryType)) { r =>
+      Some(Row(synthWav(r.getInt(0), r.getInt(1), r.getLong(2))))
+    }
 
   /** Audio feature schema produced by [[decodeAudio]]. */
   val AudioMetaSchema: StructType = StructType(Seq(
@@ -233,41 +205,28 @@ object Multimodal {
     * WAV codec — one batched partition pass; undecodable blobs yield a
     * (-1, …) row rather than failing the task.
     */
-  def decodeAudio(df: DataFrame, idCol: String, binCol: String): DataFrame = {
-    val outSchema = StructType(df.schema(idCol) +: AudioMetaSchema.fields)
-    val idIdx = df.schema.fieldIndex(idCol)
-    val binIdx = df.schema.fieldIndex(binCol)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        Audio.decodeWav(r.getAs[Array[Byte]](binIdx)) match {
-          case Some(clip) =>
-            val f = Audio.features(clip)
-            Row(r.get(idIdx), f.nFrames, f.sampleRate, f.channels, f.sum,
-              f.sqSum, f.peak, f.zeroCrossings)
-          case None => Row(r.get(idIdx), -1L, -1, -1, -1L, -1L, -1, -1L)
-        }
-      }
-    }(Encoders.row(outSchema))
-  }
+  def decodeAudio(df: DataFrame, idCol: String, binCol: String): DataFrame =
+    perRow(df, idCol, Seq(binCol), AudioMetaSchema.fields.toSeq: _*) { r =>
+      Some(Audio.decodeWav(r.getAs[Array[Byte]](0)) match {
+        case Some(clip) =>
+          val f = Audio.features(clip)
+          Row(f.nFrames, f.sampleRate, f.channels, f.sum, f.sqSum, f.peak,
+            f.zeroCrossings)
+        case None => Row(-1L, -1, -1, -1L, -1L, -1, -1L)
+      })
+    }
 
   /** REAL audio resample: decimate every `factor`-th frame and re-encode as
     * WAV (blob→blob, the [[resizeImage]] contract for audio).
     */
   def resampleAudio(df: DataFrame, idCol: String, binCol: String,
-      factor: Int): DataFrame = {
-    val outSchema = StructType(Seq(df.schema(idCol),
-      StructField("resampled", BinaryType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val binIdx = df.schema.fieldIndex(binCol)
-    df.mapPartitions { rows =>
-      rows.flatMap { r =>
-        Audio.decodeWav(r.getAs[Array[Byte]](binIdx)).map { clip =>
-          val d = Audio.decimate(clip, factor)
-          Row(r.get(idIdx), Audio.encodeWav(d.sampleRate, d.channels, d.samples))
-        }
+      factor: Int): DataFrame =
+    perRow(df, idCol, Seq(binCol), StructField("resampled", BinaryType)) { r =>
+      Audio.decodeWav(r.getAs[Array[Byte]](0)).map { clip =>
+        val d = Audio.decimate(clip, factor)
+        Row(Audio.encodeWav(d.sampleRate, d.channels, d.samples))
       }
-    }(Encoders.row(outSchema))
-  }
+    }
 
   // ---- REAL video (Y4M via [[Video]]) --------------------------------------
 
@@ -294,18 +253,11 @@ object Multimodal {
 
   /** Column form of [[synthY4m]] (batched partition pass). */
   def synthY4mCol(df: DataFrame, idCol: String, wCol: String, hCol: String,
-      framesCol: String, seedCol: String): DataFrame = {
-    val outSchema = StructType(Seq(df.schema(idCol),
-      StructField("y4m", BinaryType)))
-    val Seq(idIdx, wIdx, hIdx, fIdx, sIdx) =
-      Seq(idCol, wCol, hCol, framesCol, seedCol).map(df.schema.fieldIndex)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        Row(r.get(idIdx), synthY4m(r.getInt(wIdx), r.getInt(hIdx),
-          r.getInt(fIdx), r.getLong(sIdx)))
-      }
-    }(Encoders.row(outSchema))
-  }
+      framesCol: String, seedCol: String): DataFrame =
+    perRow(df, idCol, Seq(wCol, hCol, framesCol, seedCol),
+        StructField("y4m", BinaryType)) { r =>
+      Some(Row(synthY4m(r.getInt(0), r.getInt(1), r.getInt(2), r.getLong(3))))
+    }
 
   /** Video metadata schema produced by [[decodeVideo]]. */
   val VideoMetaSchema: StructType = StructType(Seq(
@@ -318,44 +270,30 @@ object Multimodal {
   /** REAL video decode: container metadata per blob via the [[Video]] Y4M
     * codec; undecodable blobs yield (-1, …), never task failures.
     */
-  def decodeVideo(df: DataFrame, idCol: String, binCol: String): DataFrame = {
-    val outSchema = StructType(df.schema(idCol) +: VideoMetaSchema.fields)
-    val idIdx = df.schema.fieldIndex(idCol)
-    val binIdx = df.schema.fieldIndex(binCol)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        Video.decodeY4m(r.getAs[Array[Byte]](binIdx)) match {
-          case Some(s) =>
-            Row(r.get(idIdx), s.width, s.height, s.frames.length, s.fpsNum,
-              s.fpsDen)
-          case None => Row(r.get(idIdx), -1, -1, -1, -1, -1)
-        }
-      }
-    }(Encoders.row(outSchema))
-  }
+  def decodeVideo(df: DataFrame, idCol: String, binCol: String): DataFrame =
+    perRow(df, idCol, Seq(binCol), VideoMetaSchema.fields.toSeq: _*) { r =>
+      Some(Video.decodeY4m(r.getAs[Array[Byte]](0)) match {
+        case Some(s) =>
+          Row(s.width, s.height, s.frames.length, s.fpsNum, s.fpsDen)
+        case None => Row(-1, -1, -1, -1, -1)
+      })
+    }
 
   /** REAL frame sampling + per-frame statistics: every `everyNth` frame
     * exploded to (id, frame_idx, y_sum) — the exact-integer per-frame
-    * summary the oracle recomputes from the synthesis law. Replaces the
-    * byte-chunk [[sampleFrames]] stub for Y4M blobs.
+    * summary the oracle recomputes from the synthesis law.
     */
   def videoFrameLuma(df: DataFrame, idCol: String, binCol: String,
       everyNth: Int = 1): DataFrame = {
     require(everyNth >= 1, "everyNth must be >= 1")
-    val outSchema = StructType(Seq(df.schema(idCol),
-      StructField("frame_idx", IntegerType),
-      StructField("y_sum", LongType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val binIdx = df.schema.fieldIndex(binCol)
-    df.mapPartitions { rows =>
-      rows.flatMap { r =>
-        Video.decodeY4m(r.getAs[Array[Byte]](binIdx)).toSeq.flatMap { s =>
-          Video.frameLumaSums(s).collect {
-            case (i, sum) if i % everyNth == 0 => Row(r.get(idIdx), i, sum)
-          }
+    perRow(df, idCol, Seq(binCol), StructField("frame_idx", IntegerType),
+        StructField("y_sum", LongType)) { r =>
+      Video.decodeY4m(r.getAs[Array[Byte]](0)).toSeq.flatMap { s =>
+        Video.frameLumaSums(s).collect {
+          case (i, sum) if i % everyNth == 0 => Row(i, sum)
         }
       }
-    }(Encoders.row(outSchema))
+    }
   }
 
   /** REAL scene-cut detection per blob: (id, cut_frame) rows where the mean
@@ -364,123 +302,35 @@ object Multimodal {
     * shuffle at all.
     */
   def videoSceneCuts(df: DataFrame, idCol: String, binCol: String,
-      threshold: Int): DataFrame = {
-    val outSchema = StructType(Seq(df.schema(idCol),
-      StructField("cut_frame", IntegerType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val binIdx = df.schema.fieldIndex(binCol)
-    df.mapPartitions { rows =>
-      rows.flatMap { r =>
-        Video.decodeY4m(r.getAs[Array[Byte]](binIdx)).toSeq.flatMap { s =>
-          Video.sceneCuts(s, threshold).map(f => Row(r.get(idIdx), f))
-        }
-      }
-    }(Encoders.row(outSchema))
-  }
+      threshold: Int): DataFrame =
+    perRow(df, idCol, Seq(binCol), StructField("cut_frame", IntegerType)) { r =>
+      Video.decodeY4m(r.getAs[Array[Byte]](0)).toSeq
+        .flatMap(s => Video.sceneCuts(s, threshold).map(Row(_)))
+    }
 
-  /** Metadata produced per blob by the (stubbed) audio/video decoder. */
+  /** Metadata produced per blob by [[decodeBlobStub]]. */
   val MetaSchema: StructType = StructType(Seq(
     StructField("byte_len", LongType),
     StructField("first_byte", IntegerType),
     StructField("last_byte", IntegerType),
     StructField("n_frames", LongType)))
 
-  /** STUB decode for AUDIO/VIDEO blobs (the one genuinely env-limited
-    * modality — no ffmpeg/javacv in this container): the metadata is a
-    * deterministic function of the raw bytes so tests and oracles verify
-    * the plumbing end-to-end. "Frames" are 256-byte chunks (the video
-    * frame-sampling analog). Images do NOT go through here — use the real
-    * [[decodeImage]].
+  /** STUB decode for compressed AUDIO/VIDEO blobs (the one genuinely
+    * env-limited modality — no ffmpeg/javacv in this container): the
+    * metadata is a deterministic function of the raw bytes so tests and
+    * oracles verify the plumbing end-to-end. "Frames" are 256-byte chunks
+    * (the video frame-sampling analog). `df`'s first column is the id, its
+    * second the blob; a null blob gives null metadata, as SQL's
+    * `octet_length(NULL)` does.
     */
-  def decodeBytes(bytes: Array[Byte]): (Long, Int, Int, Long) = {
-    val len = bytes.length.toLong
-    val first = if (bytes.nonEmpty) bytes(0) & 0xff else -1
-    val last = if (bytes.nonEmpty) bytes(bytes.length - 1) & 0xff else -1
-    val frames = (len + 255) / 256
-    (len, first, last, frames)
-  }
-
-  /** Decode a binary column to a metadata struct via one batched partition
-    * pass (audio/video stub path). `idCol` must be first in `df`; the
-    * binary column second.
-    */
-  def decodeBlobStub(df: DataFrame): DataFrame = {
-    val outSchema = StructType(df.schema.fields.take(1) ++ MetaSchema.fields)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val (len, first, last, frames) = decodeBytes(r.getAs[Array[Byte]](1))
-        Row(r.get(0), len, first, last, frames)
-      }
-    }(Encoders.row(outSchema))
-  }
-
-  /** STUB resample for audio/video blobs (images use the real
-    * [[resizeImage]]): deterministic byte decimation to `targetLen` (every
-    * ceil(len/target)-th byte) so the blob→blob plumbing — binary in,
-    * smaller binary out, length contract — is real and testable.
-    */
-  def resizeStub(df: DataFrame, idCol: String, binCol: String,
-      targetLen: Int): DataFrame = {
-    require(targetLen >= 1, "targetLen must be >= 1")
-    val outSchema = StructType(Seq(df.schema(idCol),
-      StructField("resized", BinaryType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val binIdx = df.schema.fieldIndex(binCol)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](binIdx)
-        val step = math.max(1, math.ceil(bytes.length.toDouble / targetLen).toInt)
-        val out = bytes.indices.collect {
-          case i if i % step == 0 => bytes(i)
-        }.take(targetLen).toArray
-        Row(r.get(idIdx), out)
-      }
-    }(Encoders.row(outSchema))
-  }
-
-  /** STUB feature extraction for audio/video blobs (images use the real
-    * [[imageHistogram]]): the 16-bin high-nibble byte histogram — a
-    * deterministic `Array[Float]` whose shape (fixed-dim dense vector per
-    * blob) is exactly what the ANN machinery ([[graft.text.Embeddings]])
-    * consumes; only the extractor body changes in production.
-    */
-  def featureExtractStub(df: DataFrame, idCol: String, binCol: String)
-      : DataFrame = {
-    val outSchema = StructType(Seq(df.schema(idCol),
-      StructField("features", ArrayType(FloatType))))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val binIdx = df.schema.fieldIndex(binCol)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](binIdx)
-        val hist = new Array[Float](16)
-        bytes.foreach(b => hist((b & 0xff) >> 4) += 1f)
-        Row(r.get(idIdx), hist.toSeq)
-      }
-    }(Encoders.row(outSchema))
-  }
-
-  /** Frame sampling for "video" blobs: every nth 256-byte frame, exploded
-    * to one row per sampled frame with its frame index.
-    */
-  def sampleFrames(df: DataFrame, idCol: String, binCol: String,
-      everyNth: Int): DataFrame = {
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
-      StructField("frame_idx", LongType),
-      StructField("frame", BinaryType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val binIdx = df.schema.fieldIndex(binCol)
-    df.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val bytes = r.getAs[Array[Byte]](binIdx)
-        val nFrames = (bytes.length + 255) / 256
-        (0L until nFrames).filter(_ % everyNth == 0).map { i =>
-          val from = (i * 256).toInt
-          val until = math.min(from + 256, bytes.length)
-          Row(r.get(idIdx), i, java.util.Arrays.copyOfRange(bytes, from, until))
-        }
-      }
-    }(Encoders.row(outSchema))
-  }
+  def decodeBlobStub(df: DataFrame): DataFrame =
+    perRow(df, df.columns(0), Seq(df.columns(1)),
+        MetaSchema.fields.toSeq: _*) { r =>
+      val bytes = r.getAs[Array[Byte]](0)
+      Some(if (bytes == null) Row(null, null, null, null) else Row(
+        bytes.length.toLong,
+        if (bytes.nonEmpty) bytes(0) & 0xff else -1,
+        if (bytes.nonEmpty) bytes(bytes.length - 1) & 0xff else -1,
+        (bytes.length + 255L) / 256))
+    }
 }

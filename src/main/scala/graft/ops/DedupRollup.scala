@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.JoinedRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** DEDUP / ROLLUP / ITERATE / PROCESS — the reference's ordered-stateful
   * scan family (SURVEY §2.7; helpers `rtl/include/eclhelper.hpp:1535` DEDUP,
@@ -105,64 +105,27 @@ object DedupRollup {
       .drop("__run")
 
   /** ITERATE(ds, t(LEFT, RIGHT)) per group: out(n) = t(out(n-1), in(n)).
-    * General (non-associative) form: sorted fold inside `flatMapGroups` —
-    * parallel across groups, sequential within (exactly the reference's
-    * execution shape). `fold` receives the previous OUTPUT row (None for the
-    * first) and the current input row and returns the output row.
+    * General (non-associative) form: sorted fold inside Spark's
+    * `flatMapSortedGroups` — one shuffle on the group keys, a sort by keys
+    * then `order`, and group boundaries from Spark's own grouping (±0.0
+    * and every NaN one key, null one key, as `groupBy`). Parallel across
+    * groups, sequential within (exactly the reference's execution shape).
+    * `fold` receives the previous OUTPUT row (None for the first) and the
+    * current input row and returns the output row.
     *
     * For folds expressible as window aggregates (running sum/max/min/count)
     * prefer [[runningAgg]] — it stays in whole-stage codegen.
     */
   def iterateGroups(df: DataFrame, groupKeys: Seq[String], order: Seq[Column],
-      outSchema: org.apache.spark.sql.types.StructType)(
-      fold: (Option[Row], Row) => Row): DataFrame = {
-    val schema = df.schema
-    val keyIdx = groupKeys.map(schema.fieldIndex)
-    // Secondary sort: one shuffle co-locates each group, then a partition-
-    // local sort makes groups contiguous AND ordered. A groupByKey here
-    // would re-shuffle and destroy the order — mapPartitions with group-
-    // boundary detection is the order-preserving (and cheaper) lowering.
-    val sorted = df.repartition(groupKeys.map(col): _*)
-      .sortWithinPartitions((groupKeys.map(col) ++ order): _*)
-    implicit val rowEnc = Encoders.row(outSchema)
-    sorted.mapPartitions { rows =>
-      var prevKey: Seq[Any] = null
-      var prev: Option[Row] = None
-      rows.map { r =>
-        val k = keyOf(r, keyIdx)
-        if (k != prevKey) { prev = None; prevKey = k }
-        val out = fold(prev, r)
-        prev = Some(out)
-        out
-      }
-    }(rowEnc)
+      outSchema: StructType)(fold: (Option[Row], Row) => Row): DataFrame = {
+    val keySchema = StructType(groupKeys.map(df.schema(_)))
+    df.groupBy(groupKeys.map(col): _*)
+      .as[Row, Row](Encoders.row(keySchema), Encoders.row(df.schema))
+      .flatMapSortedGroups(order: _*) { (_, rows) =>
+        var prev: Option[Row] = None
+        rows.map { r => val out = fold(prev, r); prev = Some(out); out }
+      }(Encoders.row(outSchema))
   }
-
-  /** Normalize a key value so that Scala equality on key Seqs groups rows
-    * exactly as `groupBy` does (null-safe, Spark's NormalizeFloatingNumbers)
-    * — [[iterateGroups]]' fold API hands out external Rows, so its group
-    * boundaries compare external values:
-    *  - `Row.get` returns `Array[Byte]` for BinaryType, whose `equals` is
-    *    reference identity; an immutable ArraySeq compares the bytes.
-    *  - -0.0 becomes 0.0 (Double and Float), so both signs are one key.
-    *  - Every NaN becomes one sentinel. Scala's `==` on boxed floating
-    *    values is IEEE (NaN != NaN), which would make each NaN row a run of
-    *    its own; the sort already places all NaNs together.
-    *  - null stays null, one key of its own (`null == null`).
-    * Floating values nested in structs or arrays are not normalized.
-    */
-  private def normKey(v: Any): Any = v match {
-    case b: Array[Byte] => scala.collection.immutable.ArraySeq.unsafeWrapArray(b)
-    case d: Double => if (d.isNaN) NaNKey else if (d == 0.0d) 0.0d else d
-    case f: Float => if (f.isNaN) NaNKey else if (f == 0.0f) 0.0f else f
-    case other => other
-  }
-
-  private case object NaNKey
-
-  /** Read the key tuple of one row (normalized for value equality). */
-  private def keyOf(r: Row, keyIdx: Seq[Int]): Seq[Any] =
-    keyIdx.map(i => normKey(r.get(i)))
 
   /** Running aggregate over order within groups — the codegen-friendly
     * ITERATE lowering for associative state.

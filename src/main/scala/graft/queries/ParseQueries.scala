@@ -95,21 +95,11 @@ object ParseQueries {
         .select(col("o_orderkey"),
           concat(lit("v="), url_encode(col("o_orderpriority"))).as("payload"))
         .coalesce(1)
-      // The in-flight window is the declared SOAPCALL PARALLEL knob,
-      // surfaced as session conf `spark.graft.soapcall.parallelism`
-      // (r19 verdict #7 — the 8→16 change was tuned against THIS loopback
-      // endpoint and must not read as a universal constant). Default 16:
-      // the window only needs to cover the endpoint's latency×throughput
-      // product — 2000 round trips at 8-in-flight measured ~2.2 s warm
-      // here, 16 halves the depth/latency product. Against a production
-      // service the right value is (target RPS × per-call latency) per
-      // partition, bounded by the service's admission limit — typically
-      // 8-32; raising it past the endpoint's concurrency only queues
-      // calls server-side. Per-row call semantics are unchanged by the
-      // knob (bounded async pool + retry either way).
-      val par = s.conf.getOption("spark.graft.soapcall.parallelism")
-        .map(_.toInt).getOrElse(16)
-      Soapcall.callPerRow(in, Soapcall.Config(url, parallelism = par),
+      // PARALLEL 16: the in-flight window only needs to cover the
+      // endpoint's latency×throughput product; 2000 round trips to this
+      // loopback endpoint at 8 in flight took ~2.2 s warm, and 16 halves
+      // that depth/latency product.
+      Soapcall.callPerRow(in, Soapcall.Config(url, parallelism = 16),
         "payload", "raw")(Soapcall.httpTransport())
         .select(col("o_orderkey"),
           get_json_object(col("raw"), "$.echoResponse.Results.rows[0].r")

@@ -695,19 +695,9 @@ final class Published(spark: SparkSession) {
 private[graft] final class PriorityGate(permits: Int) {
   private var free = permits
   private var highWaiting = 0
-  def acquire(high: Boolean): Unit = synchronized {
-    if (high) {
-      highWaiting += 1
-      try { while (free == 0) wait() } finally highWaiting -= 1
-      free -= 1
-    } else {
-      while (free == 0 || highWaiting > 0) wait()
-      free -= 1
-    }
-  }
 
-  /** Deadline-bounded acquire (r15 advice): an admitted request must
-    * never park a handler thread indefinitely — under sustained
+  /** Deadline-bounded acquire, the gate's only one: an admitted request
+    * must never park a handler thread indefinitely — under sustained
     * high-priority load the low lane would otherwise accumulate up to
     * workers+lowQueue parked threads forever (the same unbounded-park
     * hazard the bounded collapsed-join closed). Returns false on expiry;

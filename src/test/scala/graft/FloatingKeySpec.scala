@@ -2,15 +2,17 @@ package graft
 
 import graft.model.GraftFrame
 import graft.ops.{DedupRollup, Sorting, TeraSort}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{DataType, DoubleType, FloatType,
+  IntegerType, StructField, StructType}
 
-/** The key-run scans (grouped QUANTILE, adjacent DEDUP, ROLLUP) must group
-  * floating keys exactly as `groupBy`/`row_number` do: -0.0 and 0.0 are one
-  * key, every NaN is one key, null is one key — including when a group's
-  * run crosses several range partitions.
+/** The key-run scans (grouped QUANTILE, adjacent DEDUP, ROLLUP) and the
+  * per-group ITERATE fold must group floating keys exactly as
+  * `groupBy`/`row_number` do: -0.0 and 0.0 are one key, every NaN is one
+  * key, null is one key — including when a group's run crosses several
+  * range partitions.
   */
 class FloatingKeySpec extends SparkSpec {
   import spark.implicits._
@@ -91,6 +93,20 @@ class FloatingKeySpec extends SparkSpec {
         Seq(col("g"), col("x")), aggs))
       assert(got == expected)
       assert(expected.map(_._1) == Seq(1L, 2L, 4L, 6L, 400L))
+    })
+
+    test(s"ITERATE per group == row_number over partitionBy ($t keys)") (uncoalesced {
+      val df = keyed(t)
+      val expected = df.withColumn("rn", row_number().over(byG.orderBy("x")))
+        .select("x", "rn").as[(Int, Int)].collect().sorted.toSeq
+      val outSchema = StructType(Seq(
+        StructField("x", IntegerType), StructField("rn", IntegerType)))
+      val got = DedupRollup.iterateGroups(df, Seq("g"), Seq(col("x")),
+          outSchema) { (prev, r) =>
+        Row(r.getInt(1), prev.fold(1)(_.getInt(1) + 1))
+      }.as[(Int, Int)].collect().sorted.toSeq
+      assert(got == expected)
+      assert(got.count(_._2 == 1) == 5) // ±0.0, NaN, null, 1.5, -2.0
     })
   }
 

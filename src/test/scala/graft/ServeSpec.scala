@@ -872,19 +872,19 @@ class ServeSpec extends SparkSpec {
   test("PriorityGate: a freed worker goes to the waiting high lane; low " +
       "acquires only while no high waits (deterministic preemption)") {
     val g = new graft.serve.PriorityGate(1)
-    g.acquire(high = false) // occupy the only permit
+    assert(g.tryAcquire(high = false, 60000)) // occupy the only permit
     val highGot = new java.util.concurrent.atomic.AtomicBoolean(false)
     val lowGot = new java.util.concurrent.atomic.AtomicBoolean(false)
     def parked(t: Thread): Boolean =
       t.getState == Thread.State.WAITING ||
         t.getState == Thread.State.TIMED_WAITING
     val th = new Thread {
-      override def run(): Unit = { g.acquire(high = true); highGot.set(true) }
+      override def run(): Unit = highGot.set(g.tryAcquire(high = true, 60000))
     }
     th.start()
     while (!parked(th)) Thread.sleep(1)
     val tl = new Thread {
-      override def run(): Unit = { g.acquire(high = false); lowGot.set(true) }
+      override def run(): Unit = lowGot.set(g.tryAcquire(high = false, 60000))
     }
     tl.start()
     while (!parked(tl)) Thread.sleep(1)

@@ -9,6 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `Positions.scanSorted` instead. Those passes read and emit Spark's own
   * `InternalRow`s (`queryExecution.toRdd`, `GraftBridge.internalFrame`);
   * a `.rdd` or `createDataFrame` brings back the external-Row round trip.
+  * `graft.multimodal.Multimodal` likewise runs every function through one
+  * partition pass, `perRow`.
   */
 class TwoPassScanGuardSpec extends AnyFunSuite {
   test("mapPartitionsWithIndex and zipPartitions appear in src/main/scala " +
@@ -36,5 +38,17 @@ class TwoPassScanGuardSpec extends AnyFunSuite {
         raw"\b(createDataFrame|Row\.fromSeq)\b".r.findAllIn(text).toSeq
     }.flatten
     assert(external.isEmpty, s"external Rows in Positions: $external")
+  }
+
+  test("Multimodal runs one partition pass: one mapPartitions and one " +
+      "Encoders.row") {
+    import ParquetReadGuardSpec.{sources, withoutComments}
+    val code = sources.collect { case (f, text)
+      if f.endsWith("/graft/multimodal/Multimodal.scala") => withoutComments(text) }
+    assert(code.size == 1)
+    for (call <- Seq(raw"\bmapPartitions\b", raw"\bEncoders\.row\b")) {
+      val n = call.r.findAllIn(code.head).size
+      assert(n == 1, s"$call appears $n times in Multimodal.scala")
+    }
   }
 }

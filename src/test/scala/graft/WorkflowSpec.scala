@@ -240,38 +240,41 @@ class WorkflowSpec extends SparkSpec {
     assert(waiter.result.map(_.text).contains("later_batch"))
   }
 
-  test("multimodal resize + feature-extract stubs: shape contracts hold") {
-    import graft.multimodal.Multimodal
-    val blobs = Seq(
-      (1L, Array.tabulate(1000)(_.toByte)),
-      (2L, Array[Byte](0x0f, 0x1f, 0x2f)),
-      (3L, Array.empty[Byte])).toDF("id", "blob")
-    // resize: length capped at target, content decimated deterministically
-    val resized = Multimodal.resizeStub(blobs, "id", "blob", 100)
-      .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).toMap
-    assert(resized(1L).length == 100)
-    assert(resized(1L)(0) == 0 && resized(1L)(1) == 10) // every 10th byte
-    assert(resized(2L).toSeq == Seq(0x0f, 0x1f, 0x2f)) // under target: all
-    assert(resized(3L).isEmpty)
-    // features: fixed 16-dim vector; counts sum to blob length
-    val feats = Multimodal.featureExtractStub(blobs, "id", "blob")
-      .collect().map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
-    assert(feats.values.forall(_.size == 16))
-    assert(feats(1L).sum == 1000f && feats(3L).sum == 0f)
-    assert(feats(2L)(0) == 1f && feats(2L)(1) == 1f && feats(2L)(2) == 1f)
-  }
-
-  test("multimodal decode stub + frame sampling preserve plumbing shape") {
+  test("multimodal decode stub preserves plumbing shape") {
     val blobs = Seq((1L, "x" * 600), (2L, "ab")).toDF("doc_id", "text")
       .select(col("doc_id"), encode(col("text"), "UTF-8").as("blob"))
     val meta = Multimodal.decodeBlobStub(blobs)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(4))).toMap
     assert(meta(1L) == (600L, 3L)) // 600 bytes → 3 frames of 256
     assert(meta(2L) == (2L, 1L))
-    val frames = Multimodal.sampleFrames(blobs, "doc_id", "blob", 2)
-      .filter(col("doc_id") === 1).select(col("frame_idx"))
-      .as[Long].collect().toSet
-    assert(frames == Set(0L, 2L)) // every 2nd of frames 0,1,2
+  }
+
+  test("a null blob is data in every multimodal decoder, not a task failure") {
+    import org.apache.spark.sql.types._
+    val nul = spark.createDataFrame(java.util.Arrays.asList(
+      org.apache.spark.sql.Row(1L, null)), StructType(Seq(
+      StructField("id", LongType), StructField("blob", BinaryType))))
+    def only(df: org.apache.spark.sql.DataFrame): Seq[Any] = {
+      val rows = df.collect()
+      assert(rows.length == 1)
+      rows.head.toSeq
+    }
+    assert(only(Multimodal.decodeImage(nul, "id", "blob")) ==
+      Seq(1L, -1, -1, -1, -1L))
+    assert(only(Multimodal.decodeAudio(nul, "id", "blob")) ==
+      Seq(1L, -1L, -1, -1, -1L, -1L, -1, -1L))
+    assert(only(Multimodal.decodeVideo(nul, "id", "blob")) ==
+      Seq(1L, -1, -1, -1, -1, -1))
+    // SQL's octet_length/ascii of NULL, as q122c's oracle computes
+    assert(only(Multimodal.decodeBlobStub(nul)) == Seq(1L, null, null, null, null))
+    val noRows = Seq(
+      Multimodal.imagePixels(nul, "id", "blob"),
+      Multimodal.resizeImage(nul, "id", "blob", 2, 2),
+      Multimodal.imageHistogram(nul, "id", "blob"),
+      Multimodal.resampleAudio(nul, "id", "blob", 2),
+      Multimodal.videoFrameLuma(nul, "id", "blob"),
+      Multimodal.videoSceneCuts(nul, "id", "blob", 8))
+    assert(noRows.map(_.count()) == Seq.fill(6)(0L))
   }
 
   test("real image decode: spec-compliant PNG codec end-to-end") {
